@@ -22,6 +22,13 @@ def nproc() -> int:
         return os.cpu_count() or 1
 
 
+def steal_s() -> float:
+    """CPU seconds the hypervisor has withheld from this machine's
+    CPUs since boot (the steal column of /proc/stat)."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+
+
 def mem_total_bytes() -> int:
     with open("/proc/meminfo") as f:
         for line in f:

@@ -89,29 +89,38 @@ def run(workload: str, seed: int, seconds: float, trace: bool, root: str,
         jvm_sys = spark.sparkContext._jvm.System
         jdk = f"{jvm_sys.getProperty('java.vm.name')} {jvm_sys.getProperty('java.version')}"
         tracer = tr.Tracer(spark, workload, enabled=trace)
-        cache_log, passes = [], {"cold": [], "warm": []}
+        cache_log, passes = [], {"cold": [], "settle": [], "warm": []}
         path = wl.fresh_path()
+
+        def one_pass(kind: str) -> None:
+            with tracer.span(f"{workload}.{kind}"):
+                t = time.perf_counter()
+                wl.run_pass(spark, tracer, path, kind)
+                passes[kind].append(time.perf_counter() - t)
+            cache_log.append(
+                {"pass": kind, "persisted_rdds": tr.persisted_rdds(spark),
+                 "storage_mem_bytes": tr.storage_mem_bytes(spark)}
+            )
+            tracer.pass_no += 1
+            # collect the last pass's garbage now, not inside the next pass
+            spark.sparkContext._jvm.System.gc()
+            gc.collect()
+
         with host.RssSampler() as rss:
-            t_loop = time.perf_counter()
-            # one cold pass, then warm passes for `seconds` (at least one)
-            t_warm = None
-            while t_warm is None or time.perf_counter() - t_warm < seconds:
-                kind = "warm" if passes["cold"] else "cold"
-                with tracer.span(f"{workload}.{kind}"):
-                    t = time.perf_counter()
-                    wl.run_pass(spark, tracer, path, kind)
-                    passes[kind].append(time.perf_counter() - t)
-                cache_log.append(
-                    {"pass": kind, "persisted_rdds": tr.persisted_rdds(spark),
-                     "storage_mem_bytes": tr.storage_mem_bytes(spark)}
-                )
-                tracer.pass_no += 1
-                # collect the last pass's garbage now, not inside the next pass
-                spark.sparkContext._jvm.System.gc()
-                gc.collect()
-                if t_warm is None:
-                    t_warm = time.perf_counter()
+            t_loop, steal0 = time.perf_counter(), host.steal_s()
+            # one cold pass, then passes over the same path for `seconds`
+            # (at least one warm pass): the workload's settling passes
+            # first, kept out of warm_s, then warm passes
+            one_pass("cold")
+            t_warm = time.perf_counter()
+            for _ in range(wl.settle_passes):
+                one_pass("settle")
+            while not passes["warm"] or time.perf_counter() - t_warm < seconds:
+                one_pass("warm")
             loop_s = time.perf_counter() - t_loop
+            # share of the machine's CPU time the host took away during
+            # the loop: the timings above include it
+            loop_steal = (host.steal_s() - steal0) / (loop_s * os.cpu_count())
         trace_overhead = tracer.overhead_s / loop_s
 
         layer: dict[str, float] = {}
@@ -165,6 +174,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, root: str,
         "rows_per_pass": wl.rows,
         "timeline_s": {"setup": sum(setup_reps), "loop": loop_s,
                        "probes": probes_s, "check": check_s},
+        "loop_steal_share": loop_steal,
         "cache_log": cache_log,
         "checks": wl.check_log,
         "calls_s": wl.call_times(),

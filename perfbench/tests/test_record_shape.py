@@ -57,4 +57,4 @@ def test_record_has_every_end_to_end_metric_and_the_host(runs):
         assert set(rec["end_to_end"]) == names, w
         assert all(v > 0 for v in rec["end_to_end"].values()), w
         assert {"nproc", "mem_total_mb", "pyspark", "jdk", "duckdb"} <= set(rec["host"]), w
-        assert len(rec["cache_log"]) == len(rec["passes"]["cold"]) + len(rec["passes"]["warm"]), w
+        assert len(rec["cache_log"]) == sum(map(len, rec["passes"].values())), w

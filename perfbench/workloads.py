@@ -75,22 +75,62 @@ def _duckdb_with_views(path: str, tables) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _mismatches(con, got: str, want: str) -> int:
-    """Rows of ``got`` and ``want`` (relation names in ``con``) that the
-    other lacks, as a multiset, over ``want``'s columns. Floats compare
-    by value, so only bit-identical results agree."""
-    cols = ", ".join(f'"{r[0]}"' for r in con.execute(f"DESCRIBE {want}").fetchall())
-    n = 0
-    for a, b in ((got, want), (want, got)):
-        n += con.execute(
-            f"SELECT count(*) FROM (SELECT {cols} FROM {a} EXCEPT ALL SELECT {cols} FROM {b})"
-        ).fetchone()[0]
-    return int(n)
+# How far a float may sit from the oracle's, as a share of max(1, |value|).
+# The program documents a floor of cross-engine float parity: the
+# double → decimal cast of each summand is not engine-identical, which
+# leaves about 1e-17 relative noise on the exact windowed sums behind
+# the autocorrelation features (operators/features.py,
+# _window_stat_cols) and on the decimal centroid means behind
+# similarity_pq_adc's adc_dist (operators/pq.py). Cancellation can widen
+# that to a float32 ulp of the exported feature, or to ~1e-11 of a
+# distance. Measured on 20 seeds each: 1 ulp at |v| ~ 0.1 and 4e-14 at
+# |v| ~ 4e-7 (features), 4.3e-12 (adc_dist). Anything wider, and any
+# difference in a non-float column or in the row count, is a failure.
+FLOAT_TOL = {"FLOAT": 2.0**-23, "DOUBLE": 1e-10}
+
+
+def _compare(con, got: str, want: str) -> dict:
+    """``got`` against ``want`` (relation names in ``con``) as multisets
+    of rows over ``want``'s columns. Rows that are not bit-identical are
+    paired in the order of their columns, non-float columns first; a
+    pair still agrees when its non-float columns are equal and each
+    float is within ``FLOAT_TOL`` of the other. Returns the rows that
+    are not bit-identical (``inexact``), those that do not agree
+    (``failed``) and the widest float difference in units of its
+    tolerance (``worst``)."""
+    desc = con.execute(f"DESCRIBE {want}").fetchall()
+    types = [r[1] for r in desc]
+    cols = ", ".join(f'"{r[0]}"' for r in desc)
+    order = ", ".join(
+        f'"{r[0]}"' for r in sorted(desc, key=lambda r: r[1] in FLOAT_TOL)
+    )
+    only = [
+        con.execute(
+            f"SELECT * FROM (SELECT {cols} FROM {a} EXCEPT ALL "
+            f"SELECT {cols} FROM {b}) ORDER BY {order}"
+        ).fetchall()
+        for a, b in ((got, want), (want, got))
+    ]
+    failed, worst = abs(len(only[0]) - len(only[1])), 0.0
+    for g, w in zip(*only):
+        ok = True
+        for t, a, b in zip(types, g, w):
+            if a == b or (a != a and b != b):  # NaN pairs agree
+                continue
+            if t in FLOAT_TOL and a is not None and b is not None:
+                d = abs(a - b) / max(1.0, abs(a), abs(b)) / FLOAT_TOL[t]
+                worst = max(worst, d)
+                ok = ok and d <= 1.0
+            else:
+                ok = False
+        failed += not ok
+    return {"inexact": len(only[1]), "failed": failed, "worst": worst}
 
 
 class Workload:
     name = ""
     phases: tuple[str, ...] = ()
+    settle_passes = 0  # warm passes after the cold one that warm_s leaves out
 
     TINY_SIZES: dict = {}  # for the record-shape test
 
@@ -144,38 +184,31 @@ class Workload:
     def stage_groups(self, phase: str) -> list[str]:
         return [f"{self.name}:{phase}"]
 
-    def count(self, ok: bool, n: int = 1) -> None:
-        self.attempted += n
+    def count(self, ok: bool) -> None:
+        self.attempted += 1
         if not ok:
-            self.failed += n
+            self.failed += 1
 
-    def check_queries(self, spark, path, tables, queries, calls) -> None:
-        """Each query's output on ``path`` against its registered DuckDB
-        oracle, built on another thread while Spark writes the outputs;
-        a mismatch or an empty oracle fails all ``calls[q]`` timed calls
-        of that query."""
-        from concurrent.futures import ThreadPoolExecutor
+    def check_queries(self, inputs, tables, outputs) -> None:
+        """Each ``(query, parquet dir)`` of ``outputs`` against the
+        query's registered DuckDB oracle over ``inputs``; a mismatch or
+        an empty oracle fails that call."""
+        from strategy_analyzer_exporter_spark.registry import ORACLES
 
-        from strategy_analyzer_exporter_spark.registry import ORACLES, QUERIES
-
+        queries = sorted({q for q, _ in outputs})
         oracle_db = os.path.join(self.work, f"oracle_{queries[0]}.duckdb")
-        with ThreadPoolExecutor(1) as pool:
-            built = pool.submit(_materialize, oracle_db, path, tables,
-                                {q: ORACLES[q] for q in queries})
-            for q in queries:
-                QUERIES[q](spark, path).write.parquet(os.path.join(self.work, "check", q))
-            built.result()
+        _materialize(oracle_db, inputs, tables, {q: ORACLES[q] for q in queries})
         con = duckdb.connect()
         con.execute(f"ATTACH {_lit(oracle_db)} AS o (READ_ONLY)")
-        for q in queries:
+        for q, out in outputs:
             con.execute(
                 "CREATE OR REPLACE VIEW got AS SELECT * FROM read_parquet("
-                f"{_lit(os.path.join(self.work, 'check', q, '*.parquet'))})"
+                f"{_lit(os.path.join(out, '*.parquet'))})"
             )
             n = con.execute(f"SELECT count(*) FROM o.{q}").fetchone()[0]
-            bad = _mismatches(con, "got", f"o.{q}")
-            self.check_log.append({"query": q, "want": n, "mismatched": bad})
-            self.count(n > 0 and bad == 0, calls[q])
+            c = _compare(con, "got", f"o.{q}")
+            self.check_log.append({"query": q, "output": out, "want": n, **c})
+            self.count(n > 0 and c["failed"] == 0)
         con.close()
 
 
@@ -196,6 +229,10 @@ class ExportBatch(Workload):
 
     name = "export_batch"
     phases = ("bars", "ema", "features", "write", "drain")
+    # the JIT is still compiling what the cold pass ran first: the next
+    # pass read 15-90% above the ones after it (llm_corpus shows no such
+    # step, its warm passes are memo hits on small jobs)
+    settle_passes = 1
     days, per_day = 20, 10_000
     files_per_trigger = 8
     TINY_SIZES = {"days": 3, "per_day": 3_000, "files_per_trigger": 2}
@@ -248,9 +285,10 @@ class ExportBatch(Workload):
         return {k: [e[k] for e in self.exports] for k in ("write_s", "ingest_s")}
 
     def check(self, spark):
-        """Every exported table must be bit-equal to the
+        """Every exported table must equal the
         ``features_sql(FeatureConfig())`` oracle over the same events
-        (the pass read a copy of these files)."""
+        (the pass read a copy of these files), floats within
+        ``FLOAT_TOL``."""
         from strategy_analyzer_exporter_spark.operators.features import (
             FeatureConfig,
             features_sql,
@@ -265,11 +303,10 @@ class ExportBatch(Workload):
         n_want = con.execute(f"SELECT count(*) FROM {want}").fetchone()[0]
         for e in self.exports:
             con.execute(f"ATTACH {_lit(e['db'])} AS got (READ_ONLY)")
-            bad = _mismatches(con, f"got.{EXPORT_TABLE}", want)
+            c = _compare(con, f"got.{EXPORT_TABLE}", want)
             con.execute("DETACH got")
-            self.check_log.append({"table": e["db"], "rows": e["rows"], "want": n_want,
-                                   "mismatched": bad})
-            self.count(bad == 0 and n_want > 0 and e["rows"] == n_want)
+            self.check_log.append({"table": e["db"], "rows": e["rows"], "want": n_want, **c})
+            self.count(c["failed"] == 0 and n_want > 0 and e["rows"] == n_want)
         con.close()
 
     def probes(self, spark, tracer):
@@ -404,11 +441,10 @@ class ExportBatch(Workload):
         con.execute(f"ATTACH {_lit(db)} AS got (READ_ONLY)")
         con.execute(f"ATTACH {_lit(self.exports[-1]['db'])} AS want (READ_ONLY)")
         n = con.execute(f"SELECT count(*) FROM got.{EXPORT_TABLE}").fetchone()[0]
-        bad = _mismatches(con, f"got.{EXPORT_TABLE}", f"want.{EXPORT_TABLE}")
+        c = _compare(con, f"got.{EXPORT_TABLE}", f"want.{EXPORT_TABLE}")
         con.close()
-        self.check_log.append({"table": db, "rows": n, "want": self.exports[-1]["rows"],
-                               "mismatched": bad})
-        self.count(bad == 0 and n > 0)
+        self.check_log.append({"table": db, "rows": n, "want": self.exports[-1]["rows"], **c})
+        self.count(c["failed"] == 0 and n > 0)
         self.layer.update(
             {
                 "streaming.batches": len(progress),
@@ -441,8 +477,8 @@ class ExportBatch(Workload):
 
 
 class LlmCorpus(Workload):
-    """The six LLM-data queries into noop over a seeded corpus with
-    planted near-duplicates."""
+    """The six LLM-data queries over a seeded corpus with planted
+    near-duplicates."""
 
     name = "llm_corpus"
     phases = LLM_QUERIES + RELATIONAL_QUERIES
@@ -453,48 +489,58 @@ class LlmCorpus(Workload):
     def __init__(self, work, seed, tiny=False):
         super().__init__(work, seed, tiny)
         self.times: dict[tuple[str, str], list[float]] = {}
-        self.last_path = ""
+        self.outputs: list[tuple[str, str]] = []  # (query, parquet dir) per timed call
 
     def make_inputs(self, out):
         n = gen.write_corpus(out, self.seed, self.docs, self.vectors)
         return n["documents"] + n["embeddings"]
 
-    def _run_queries(self, spark, tracer, path, queries, kind, staged=("cold",)):
-        """Each query into noop; calls of a ``staged`` kind run under the
-        query's own job group, whose stage metrics are reported."""
+    def _run_queries(self, spark, tracer, path, queries, kind, out=None, staged=("cold",)):
+        """Each query on ``path``, its result written as parquet under
+        ``out`` for the check or, without ``out``, into noop. Calls of a
+        ``staged`` kind run under the query's own job group, whose stage
+        metrics are reported. Returns the ``(query, parquet dir)`` pairs
+        written."""
         from strategy_analyzer_exporter_spark.registry import QUERIES
 
+        written = []
         for q in queries:
             with tracer.span(q, phase=q if kind in staged else f"{q}:{kind}"):
                 t0 = time.perf_counter()
-                _noop(QUERIES[q](spark, path))
+                df = QUERIES[q](spark, path)
+                if out is None:
+                    _noop(df)
+                else:
+                    df.write.parquet(os.path.join(out, q))
+                    written.append((q, os.path.join(out, q)))
                 self.times.setdefault((q, kind), []).append(time.perf_counter() - t0)
+        return written
 
     def run_pass(self, spark, tracer, path, kind):
-        self._run_queries(spark, tracer, path, LLM_QUERIES, kind)
-        self.last_path = path
+        # every timed call keeps its (small) result, so the check compares
+        # what the timed calls returned rather than a re-run
+        out = os.path.join(os.path.dirname(path), f"out_{len(self.outputs)}")
+        self.outputs += self._run_queries(spark, tracer, path, LLM_QUERIES, kind, out)
 
     def call_times(self):
         return {f"{q}.{k}": v for (q, k), v in self.times.items()}
 
     def check(self, spark):
-        """The queries on the last path, its summaries built, against
-        their oracles."""
-        calls = {q: len(self.times[(q, "cold")]) + len(self.times[(q, "warm")])
-                 for q in LLM_QUERIES}
-        self.check_queries(spark, self.last_path, ("documents", "embeddings"),
-                           LLM_QUERIES, calls)
+        """Every timed call's result against its oracle over the
+        inputs the passes copied."""
+        self.check_queries(self.inputs, ("documents", "embeddings"), self.outputs)
 
     def probes(self, spark, tracer):
         """The relational queries over a seeded TPC-H-like star schema:
-        a first call each, a measured call each, then their oracles."""
+        a first call each into noop, then a measured call each, whose
+        results are checked against their oracles."""
         path = os.path.join(self.work, "star")
         gen.write_star(path, self.seed, self.star_sf)
         self._run_queries(spark, tracer, path, RELATIONAL_QUERIES, "first")
-        self._run_queries(spark, tracer, path, RELATIONAL_QUERIES, "measured",
-                          staged=("measured",))
-        self.check_queries(spark, path, STAR_TABLES, RELATIONAL_QUERIES,
-                           {q: 1 for q in RELATIONAL_QUERIES})
+        written = self._run_queries(spark, tracer, path, RELATIONAL_QUERIES, "measured",
+                                    out=os.path.join(self.work, "star_out"),
+                                    staged=("measured",))
+        self.check_queries(path, STAR_TABLES, written)
         self.calls = {q: 1 for q in self.phases}
         for q in LLM_QUERIES:
             self.layer[f"{q}.cold_s"] = statistics.median(self.times[(q, "cold")])
