@@ -79,64 +79,7 @@ def entry(spark: SparkSession) -> DataFrame:
 #: CHANGED_AS_OF_ROUND or later (so a query that missed one round's
 #: 50-slot sample keeps its priority until actually re-verified, and
 #: no hand-maintained cleanup is needed).
-#: r13 (VERDICT r12 #1): dedup_semdedup's assignment is re-shaped from
-#: the flat corpus-derived-k Lloyd assign (n·k distances — the one
-#: remaining scale-killer) to the TWO-LEVEL coarse-then-fine
-#: hierarchical assign (kc = ⌈√k⌉ cells × kf = ⌈k/kc⌉ fine centroids
-#: per cell, ~2n·√k total assignment work), so its r12 flat-k row is
-#: stale by construction. Net-new registrations (kmeans_two_level,
-#: the hierarchical assignment exposed as its own operator;
-#: text_bpe_encode, the tokenizer-APPLY half of the r12 BPE trainer;
-#: wave 2: text_bpe_tokenize_docs, the per-document encode, and
-#: text_lm_likelihood_buckets, CCNet-style LM quality bucketing;
-#: wave 3: text_gopher_rules, the canonical Gopher §A1.1 per-document
-#: heuristic gate, and sample_temperature_mixture, α=0.5
-#: temperature-scaled source sampling with the enacted hash-bucket
-#: selection; wave 4: text_paragraph_dedup, C4/RefinedWeb-style
-#: corpus-wide first-occurrence paragraph dedup with document
-#: reconstruction). Net-new registrations: 7, so 7 fresh +
-#: 2 changed-band slots leave 41 tail slots — the two r08-stale
-#: records (streaming_dedup_watermarked, source_schema_evolution) are
-#: the stalest-first HEAD of the tail and drain first, followed by the
-#: 19-query r09 cohort (VERDICT r12 #4: 2 + 19 ≤ 41, so the drain
-#: still completes with all four waves registered).
-#: r14 (optimization round, VERDICT r13 #1): text_paragraph_dedup's
-#: registered default moved from the window shape to the hash-keyed
-#: metadata decision (xxhash64(para) shuffle + exact collision
-#: resolution + map-side doc rebuild) — output-identical by
-#: construction and twin-tested, but the implementation its r13 row
-#: verified is no longer the one registered.
-#: Also r14: similarity_pq_adc's registered default moved from the
-#: all-pairs scored window to the cell-decision shape (candidates
-#: sharing a code word collapse onto distinct cells; per-query work
-#: bounded by PQ_K^PQ_M), and similarity_ivfpq_topk now restricts
-#: candidates BEFORE the ADC chain instead of joining the restriction
-#: into an all-pairs intermediate. Both output-identical (twin tests +
-#: oracle) but the implementations their r09/r13 rows verified are no
-#: longer the ones registered.
-#: And dedup_simhash: the band self-join now carries 4 small-int band
-#: keys derived straight from the vote columns instead of the 64-char
-#: fingerprint string (narrower shuffle, int XOR/popcount verify) —
-#: same pairs, same hamming, twin-tested against the string shape.
-#: And text_repetition_signals / quality_gate_rollup (shared _signals
-#: core): bigrams built array-side instead of lead()-over-window, and
-#: the two top-gram row_number windows became min(struct(-cnt, gram))
-#: aggregations — same rows, twin-tested.
-#: r15 (optimization round 2): similarity_pq_adc's registered mode
-#: became the metadata-driven pairs-vs-cells auto decision;
-#: text_repetition_signals / quality_gate_rollup moved to the one-pass
-#: Arrow map shape (quality._signals mode="map"). All three are
-#: output-identical (twin tests + oracle) but their r14 rows verified
-#: different implementations. (dedup_semdedup / kmeans_two_level are
-#: NOT in the band: the depth-3 hierarchy was measured and REJECTED —
-#: their registered implementations remain the r13-verified two-level
-#: shape; see OPTIMIZATION_r15.md.)
-#: Also r15: the windowed-feature stats stage moved from bounded
-#: rowsBetween frames (O(window) decimal re-aggregation per row) to
-#: running-sum + lag differences (O(1)/row) — exact-integer decimal
-#: arithmetic, bit-identical output (twin-pinned), but the
-#: implementation the features_* rows verified is no longer the one
-#: registered.
+#: Why each name is in the band: see this file's git history.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
     "similarity_pq_adc",
     "text_repetition_signals",

@@ -30,26 +30,6 @@ ROWS_PER_BAND = 3
 SHINGLE_K = 3
 JACCARD_THRESHOLD = 0.5
 
-# Signature-agreement prefilter: MEASURED AND REJECTED in r07 (VERDICT
-# r06 #3). The idea: gate banded candidates on ≥ m of 12 matching
-# MinHash components (candidacy already implies 3 from the matched
-# band) before the exact gram-join verify. Measured on the sf0.1 corpus
-# and its 10× probe image, both implementations: (a) joining the cached
-# signature relation to each pair side — t10 2.34 → 3.04 s; (b) the
-# zero-extra-shuffle variant carrying all 12 components through the
-# exploded band rows — t10 2.34 → 2.67 s (and that carry would 5× the
-# band exchange width at scale). Root cause, counted not argued: this
-# corpus's banded candidates are almost all TRUE near-dups (258
-# candidates → 256 verified pairs at 1×; at 10×, m = 4 rejects 56 of
-# 2621 = 2.1%, m = 5 rejects 59), so there is no false-candidate mass
-# for a prefilter to shed — the verify tail is linear join/agg CPU over
-# pairs that must be verified anyway. Both variants produced
-# bit-identical output at m ∈ {4, 5} (no true pair lost), so the
-# rejection is purely economic. Kept as a test hook (``agree_min``
-# parameter below) so the measurement is reproducible; the registered
-# query runs unfiltered. Full numbers: docs/BENCH_NOTES.md §r07.
-MINHASH_AGREE_MIN = 0  # prefilter disabled — rejected, see above
-
 # SimHash parameters: 64-bit fingerprint, 4 bands × 16 bits, Hamming ≤ 6.
 SIMHASH_BITS = 64
 SIMHASH_BANDS = 4
@@ -315,20 +295,13 @@ def _band_rows(sigs: DataFrame) -> DataFrame:
     )
 
 
-def _q_dedup_minhash(
-    spark: SparkSession, sf_dir: str, agree_min: int = MINHASH_AGREE_MIN
-) -> DataFrame:
+def _q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs: shingle rows → 12 seeded md5
     min-aggregates (ONE shuffle on doc_id, map-side combine) → 4 band
     keys → equi-join on band key → exact Jaccard ≥ 0.5 verify via gram
     co-counts. No all-pairs product, no document arrays in shuffles.
-
-    ``agree_min`` > ROWS_PER_BAND enables the signature-agreement
-    prefilter that was measured and REJECTED in r07 (see the
-    MINHASH_AGREE_MIN comment above for the numbers); it remains as a
-    parameter so the measurement is reproducible and so
-    tests/test_fuzzy_dedup_bands.py can assert the no-lost-pair
-    property. Registered queries run the module constant (disabled)."""
+    The rejected signature-agreement prefilter is measured in
+    docs/BENCH_NOTES.md §r07."""
     grams = _gram_rows(spark, sf_dir)
     sigs = _sig_rows(spark, sf_dir)
     bands = _band_rows(sigs)
@@ -349,28 +322,6 @@ def _q_dedup_minhash(
         )
         .distinct()
     )
-    if agree_min > ROWS_PER_BAND:
-        # candidacy already implies one fully-matching band
-        # (ROWS_PER_BAND agreements), so smaller thresholds are free —
-        # the predicate only pays its two cached-sig joins beyond that
-        sa = sigs.select(
-            F.col("doc_id").alias("doc_a"),
-            *[F.col(f"mh{j}").alias(f"a{j}") for j in range(NUM_HASHES)],
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("doc_b"),
-            *[F.col(f"mh{j}").alias(f"b{j}") for j in range(NUM_HASHES)],
-        )
-        agree = sum(
-            F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0)
-            for j in range(NUM_HASHES)
-        )
-        cand = (
-            cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .filter(agree >= F.lit(agree_min))
-            .select("doc_a", "doc_b")
-        )
     sizes = sigs.select("doc_id", "n")
     return _verify_jaccard(cand, grams, JACCARD_THRESHOLD, sizes=sizes)
 
@@ -517,20 +468,6 @@ def _simhash_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hx.groupBy("doc_id").agg(*aggs)
 
 
-def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sim) — the fingerprint as a '0'/'1' string (the oracle's
-    representation; kept as the bits-mode twin of the registered
-    integer-key query)."""
-    votes = _simhash_votes(spark, sf_dir)
-    sim = F.concat(
-        *[
-            F.when(F.col(f"v{p}") > 0, F.lit("1")).otherwise(F.lit("0"))
-            for p in range(SIMHASH_BITS)
-        ]
-    )
-    return votes.select("doc_id", sim.alias("sim"))
-
-
 _SIMKEY_CACHE: dict = {}
 _SIMKEY_CACHE_MAX = 4
 
@@ -601,92 +538,19 @@ sims AS (
 )"""
 
 
-def _q_dedup_simhash(
-    spark: SparkSession, sf_dir: str, mode: str = "keys"
-) -> DataFrame:
+def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: 64-bit fingerprints, banded into 4×16-bit
     keys, exact Hamming ≤ 6 verify on band-collision candidates. By
     pigeonhole, recall is guaranteed for pairs with Hamming ≤ 3; pairs at
     4-6 are kept when they happen to collide on a band (standard banded
     SimHash trade-off — more bands for more recall).
 
-    ``mode="keys"`` (registered default, r14 — guide §2.3 narrower
-    types): the fingerprint enters the band self-join as 4 SMALL INTS
-    straight from the vote columns; each banded row shuffles
-    (doc_id, band, key int, 4 key ints) ≈ 30 B instead of the pre-r14
-    (doc_id, 64-char sim string, 16-char key) ≈ 100 B, and the Hamming
-    verify is 4 codegen'd int XOR+popcounts with no conv/substring
-    re-parsing per candidate pair. ``mode="bits"`` keeps the string
-    shape (twin-tested output-identical)."""
-    band_w = SIMHASH_BITS // SIMHASH_BANDS
-    if mode == "bits":
-        docs = _simhash_df(spark, sf_dir)
-        bands = docs.select(
-            "doc_id",
-            "sim",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.substring(
-                                "sim", 1 + b * band_w, band_w
-                            ).alias("key"),
-                        )
-                        for b in range(SIMHASH_BANDS)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(
-            "doc_id",
-            "sim",
-            F.col("bk.band").alias("band"),
-            F.col("bk.key").alias("key"),
-        )
-        a, b = bands.alias("a"), bands.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.sim").alias("sim_a"),
-                F.col("b.sim").alias("sim_b"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        # Hamming via per-band integer XOR + popcount (codegen'd
-        # builtins), not a position-by-position HOF: F.aggregate never
-        # enters whole-stage codegen (same pitfall the shingle path
-        # documents), so the old 64-step fold paid 128 interpreted
-        # substring calls per candidate pair — measured 1.77 s -> 0.59 s
-        # at sf0.1 (t10 5.2 -> 2.1 s), identical pairs at both gates.
-        parts = [
-            F.bit_count(
-                F.conv(F.substring("sim_a", 1 + b * band_w, band_w), 2, 10)
-                .cast("long")
-                .bitwiseXOR(
-                    F.conv(
-                        F.substring("sim_b", 1 + b * band_w, band_w), 2, 10
-                    ).cast("long")
-                )
-            )
-            for b in range(SIMHASH_BANDS)
-        ]
-        hamming = parts[0]
-        for part in parts[1:]:
-            hamming = hamming + part
-        return (
-            cand.withColumn("hamming", hamming.cast("long"))
-            .filter(F.col("hamming") <= HAMMING_THRESHOLD)
-            .select("doc_a", "doc_b", "hamming")
-        )
-    if mode != "keys":
-        raise ValueError(f"unknown simhash mode: {mode!r}")
+    The fingerprint enters the band self-join as 4 SMALL INTS straight
+    from the vote columns; each banded row shuffles (doc_id, band,
+    key int, 4 key ints) ≈ 30 B instead of the oracle's (doc_id, 64-char
+    sim string, 16-char key) ≈ 100 B, and the Hamming verify is 4
+    codegen'd int XOR+popcounts per candidate pair. The string-keyed
+    shape it replaced is measured in OPTIMIZATION_r14.md."""
     docs = _simhash_keys(spark, sf_dir)
     kcols = [f"k{b}" for b in range(SIMHASH_BANDS)]
     bands = docs.select(

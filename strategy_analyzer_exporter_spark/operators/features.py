@@ -208,84 +208,56 @@ def _dec_to_double(c: Column) -> Column:
 
 def _window_stat_cols(
     ma_col: str, y_col: str, sfx: str, w_day, cfg: FeatureConfig
-) -> dict[str, Column]:
-    """The five window statistics feeding lag-1 autocorrelation + slope,
-    as pure window aggregates (no arrays, no interpreted lambdas —
-    everything stays in WindowExec / whole-stage codegen).
+) -> tuple[dict[str, Column], dict[str, Column]]:
+    """The five window statistics feeding lag-1 autocorrelation + slope
+    (count, sum, sum of squares, lag-product sum and first value over
+    the last ``window`` rows of the day), as pure window aggregates (no
+    arrays, no interpreted lambdas — everything stays in WindowExec /
+    whole-stage codegen).
 
-    Emitted as *named columns in their own projection stage*: Catalyst
-    does NOT dedupe textually-identical window expressions, so inlining
-    these into the autocorr arithmetic would multiply each sliding sum
-    ~15× in the physical plan (observed: 62 window exprs vs 11).
+    Each frame is O(1) per row: Spark evaluates a bounded
+    ``rowsBetween(-20, 0)`` aggregate by RE-AGGREGATING the whole frame
+    for every row, so each sliding sum is instead the difference of two
+    RUNNING sums (UnboundedPreceding frames are incrementally
+    maintained) picked up via ``lag``. first-of-frame is
+    ``lag(x, window-1)`` with the day's running first as fallback, and
+    the frame count is ``least(row_number, window)`` (x is never null).
+    The bounded-frame shape it replaced is measured in
+    OPTIMIZATION_r15.md §4.
 
-    The sums are computed over DECIMAL(38,12) so they are exact and
-    order-independent — Spark folds a sliding frame sequentially while
-    DuckDB uses a segment tree, so double sums would disagree in the
-    last bit; decimal sums cannot.
+    The sums are computed over DECIMAL so they are exact and
+    independent of fold order — Spark folds a frame sequentially while
+    DuckDB (the oracle's bounded frames) uses a segment tree, so double
+    sums would disagree in the last bit; exact decimal sums cannot, and
+    a difference of exact running sums equals the frame sum (day
+    cumulatives ≤ ~1e21 ≪ the 10^26 capacity of decimal(38,12)). The
+    running sums are RE-CAST to decimal(30,12) before the difference: a
+    (38,12)−(38,12) result needs precision 39, which Spark caps by
+    REDUCING the scale to 11 — silently rounding the 12th decimal off
+    the quantized grid (measured: 1 row differs at sf0.01). (30,12) is
+    exact for any day-cumulative here (integer part ≤ 1e18 ≫ the ~1e9
+    bound of an 86400-bar day of ma² sums) and subtracts to (31,12).
+
+    Returns TWO projection-stage dicts (running sums, then stats from
+    them): Catalyst does NOT dedupe textually-identical window
+    expressions, so referencing a running sum both directly and under
+    ``lag`` in one projection would materialize it twice, and inlining
+    the stats into the autocorr arithmetic would multiply each window
+    expression many times over. Stage 1 names the cumulative columns
+    and stage 2's lags/differences reference plain columns; both stages
+    share one (day, time) sort — two adjacent Window nodes, no extra
+    exchange.
 
     Known residual: the per-element double→decimal cast itself is not
     engine-identical for magnitudes where 1e-12 is below the double's
     ulp (Spark rounds the shortest decimal string, DuckDB the exact
     binary expansion), leaving ~1e-17 relative noise on the staged
     sums. Measured effect: 1 row in 89,034 lands one float32 ulp off
-    the oracle at sf0.1 (bit-exact at sf0.01). No decimal scale fixes
-    this — coarser grids quantize real signal, finer grids diverge more
-    (see the measured scale sweep in operators/pipeline.kmeans_update);
-    it is the floor of cross-engine float parity for windowed sums of
-    arbitrary doubles."""
-    w21 = w_day.rowsBetween(-(cfg.window - 1), 0)
-    w20 = w_day.rowsBetween(-(cfg.window - 2), 0)
-    x = F.col(ma_col)
-    dec = "decimal(38,12)"
-    # y_col = x·(previous x in day), pre-staged (window functions can't
-    # nest); null on the day's first row, so the 20-row sum automatically
-    # covers frame positions 1..n−1
-    y = F.col(y_col).cast(dec)
-    return {
-        f"_n_{sfx}": F.count(x).over(w21).cast("double"),
-        f"_s_{sfx}": _dec_to_double(F.sum(x.cast(dec)).over(w21)),
-        f"_ss_{sfx}": _dec_to_double(F.sum((x * x).cast(dec)).over(w21)),
-        f"_p_{sfx}": _dec_to_double(
-            F.coalesce(F.sum(y).over(w20), F.lit(0).cast(dec))
-        ),
-        f"_first_{sfx}": F.first(x).over(w21),
-    }
-
-
-def _window_stat_cols_running(
-    ma_col: str, y_col: str, sfx: str, w_day, cfg: FeatureConfig
-) -> tuple[dict[str, Column], dict[str, Column]]:
-    """:func:`_window_stat_cols` with O(1)-per-row window frames (r15,
-    guide §2.4/§1.2 "per-task work"): Spark evaluates a bounded
-    ``rowsBetween(-20, 0)`` aggregate by RE-AGGREGATING the whole frame
-    for every row (SlidingWindowFunctionFrame), so the six decimal
-    sliding sums cost O(window) decimal adds per row. The quantized
-    sums are EXACT scaled integers, so each sliding sum equals the
-    difference of two RUNNING sums (UnboundedPreceding frames are
-    incrementally maintained, O(1)/row) picked up via ``lag`` — decimal
-    arithmetic has no rounding at these magnitudes (day-cumulative
-    ≤ ~1e21 ≪ the 10^26 capacity of decimal(38,12)), so every derived
-    value is bit-identical to the frame-aggregated form (twin-pinned in
-    tests/test_features_pipeline.py). first-of-frame becomes
-    ``lag(x, window-1)`` with the day's running first as fallback, and
-    the frame count is ``least(row_number, window)`` (x is never null).
-
-    Returns TWO projection-stage dicts (running sums, then stats from
-    them): referencing a running sum both directly and under ``lag``
-    in one projection makes Catalyst materialize it TWICE (it never
-    dedupes window expressions — see :func:`_window_stat_cols`), so
-    stage 1 names the cumulative columns and stage 2's lags/differences
-    reference plain columns. Both stages share one (day, time) sort —
-    two adjacent Window nodes, no extra exchange (plan-pinned in
-    plans/r15/features_flagship_after.txt).
-
-    The running sums are RE-CAST to decimal(30,12) before the
-    difference: a (38,12)−(38,12) result needs precision 39, which
-    Spark caps by REDUCING the scale to 11 — silently rounding the
-    12th decimal off the quantized grid (measured: 1 row differs at
-    sf0.01). (30,12) is exact for any day-cumulative here (integer
-    part ≤ 1e18 ≫ the ~1e9 bound of an 86400-bar day of ma² sums)
-    and subtracts to (31,12) — no precision-loss path, scale intact."""
+    the oracle at sf0.1 (bit-exact at sf0.001 and sf0.01). No decimal
+    scale fixes this — coarser grids quantize real signal, finer grids
+    diverge more (see the measured scale sweep in
+    operators/pipeline.kmeans_update); it is the floor of cross-engine
+    float parity for windowed sums of arbitrary doubles."""
     wrun = w_day.rowsBetween(Window.unboundedPreceding, 0)
     x = F.col(ma_col)
     dec = "decimal(38,12)"
@@ -519,8 +491,6 @@ def features_df(
     spark: SparkSession,
     sf_dir: str,
     cfg: FeatureConfig = TESTDATA_CONFIG,
-    ema_impl: str = "pandas",
-    stats_impl: str = "running",
 ) -> DataFrame:
     """bars → session filter → EMA → window features → warm-up gate →
     alphabetical float32 export projection (FIXTURES.md §2 schema).
@@ -546,54 +516,25 @@ def features_df(
     # column pruning, so without this drop they cross the Python
     # boundary both ways (2 of 9 input columns) for nothing.
     sess = sess.drop("event_id", "user_id")
-    w_day = Window.partitionBy("day").orderBy("time")
-    if ema_impl == "pandas":
-        ma = _with_ema_and_lag_products(sess, cfg)
-    else:
-        ma = with_ema_fold(sess, cfg).withColumns(
-            {
-                "_y_f": F.col("moving_average") * F.lag("moving_average").over(w_day),
-                "_y_s": F.col("slow_moving_average")
-                * F.lag("slow_moving_average").over(w_day),
-            }
-        )
-    return _staged_to_export(ma, cfg, stats_impl=stats_impl)
+    return _staged_to_export(_with_ema_and_lag_products(sess, cfg), cfg)
 
 
-def _staged_to_export(
-    ma: DataFrame, cfg: FeatureConfig, stats_impl: str = "running"
-) -> DataFrame:
+def _staged_to_export(ma: DataFrame, cfg: FeatureConfig) -> DataFrame:
     """Shared pipeline tail: per-day window stats → autocorr/slope/
     distance/location features → per-day warm-up gate → alphabetical
     float32 export projection. ``ma`` must carry day/time/OHLCV plus
     moving_average, slow_moving_average, _y_f, _y_s (within-day lag
-    products). ``stats_impl="running"`` (registered default, r15) uses
-    O(1)-per-row running-sum/lag frames; ``"frame"`` is the pre-r15
-    bounded-frame shape — bit-identical (see
-    :func:`_window_stat_cols_running`), twin-pinned."""
+    products). Window stats: see :func:`_window_stat_cols`."""
     w_day = Window.partitionBy("day").orderBy("time")
-    if stats_impl == "running":
-        cums_f, stats_f = _window_stat_cols_running(
-            "moving_average", "_y_f", "f", w_day, cfg
-        )
-        cums_s, stats_s = _window_stat_cols_running(
-            "slow_moving_average", "_y_s", "s", w_day, cfg
-        )
-        # two projection stages → two adjacent Window nodes sharing one
-        # (day, time) sort: running sums first, O(1) lags/diffs second
-        staged = ma.withColumns({**cums_f, **cums_s}).withColumns(
-            {**stats_f, **stats_s, "_rn": F.row_number().over(w_day)}
-        )
-    else:
-        # one Window stage, all expressions sharing one (day, time) sort
-        stats = {
-            **_window_stat_cols("moving_average", "_y_f", "f", w_day, cfg),
-            **_window_stat_cols(
-                "slow_moving_average", "_y_s", "s", w_day, cfg
-            ),
-            "_rn": F.row_number().over(w_day),
-        }
-        staged = ma.withColumns(stats)
+    cums_f, stats_f = _window_stat_cols("moving_average", "_y_f", "f", w_day, cfg)
+    cums_s, stats_s = _window_stat_cols(
+        "slow_moving_average", "_y_s", "s", w_day, cfg
+    )
+    # two projection stages → two adjacent Window nodes sharing one
+    # (day, time) sort: running sums first, O(1) lags/diffs second
+    staged = ma.withColumns({**cums_f, **cums_s}).withColumns(
+        {**stats_f, **stats_s, "_rn": F.row_number().over(w_day)}
+    )
 
     slope_tol = float(cfg.slope_tolerance)
     slope = (
@@ -800,7 +741,8 @@ FROM feat"""
 def features_sql(cfg: FeatureConfig = TESTDATA_CONFIG) -> str:
     """DuckDB oracle for :func:`features_df` — same op sequence: EMA by
     left-fold over per-day prefix lists, autocorrelation by exact-decimal
-    window sums expanded exactly like _window_stat_cols."""
+    bounded-frame window sums (the values _window_stat_cols derives from
+    running sums)."""
     ema_f = X.ema_fold_sql("_closes", cfg.span_fast)
     ema_s = X.ema_fold_sql("_closes", cfg.span_slow)
     return f"""

@@ -395,7 +395,12 @@ def _q_kmeans(
     # partial-aggregates it, with no vec_id join. Cache e for the
     # iteration phase, materialize the final assignment WHILE the cache
     # is hot (localCheckpoint, eager), then unpersist.
-    key = (spark.sparkContext.applicationId, sf_dir, vector.kernel(), k)
+    key = (
+        spark.sparkContext.applicationId,
+        os.path.abspath(sf_dir),
+        vector.kernel(),
+        k,
+    )
     cached = _KMEANS_CACHE.get(key)
     if cached is not None:
         return cached
@@ -413,22 +418,16 @@ def _q_kmeans(
     return out
 
 
-def _kmeans_assign_body(
-    k_sql: str | None = None, extra_ctes: tuple = ()
-) -> str:
+def _kmeans_assign_body(k_sql: str | None = None) -> str:
     """WITH-body CTE chain ending in ``assign`` (vec_id, cid) — the
     converged k-means assignment. Shared by the k-means oracle and the
     SemDeDup oracle below, so both engines always agree on the same
     unrolled Lloyd iterations. ``k_sql`` overrides the fixed
     ``KM_K`` centroid count with a SQL expression (DuckDB accepts
     expressions in LIMIT) — the SemDeDup oracle derives k from the
-    corpus size with it, mirroring the Spark side exactly.
-    ``extra_ctes`` are spliced in right after ``e`` so a derived
-    ``k_sql`` can reference its own scalar CTEs (the r15 hierarchical
-    split)."""
+    corpus size with it, mirroring the Spark side exactly."""
     ctes = [
         f"e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v\n     FROM embeddings)",
-        *extra_ctes,
         f"""c0 AS (
     SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
     FROM e ORDER BY vec_id LIMIT {k_sql if k_sql is not None else KM_K}
@@ -512,61 +511,6 @@ def two_level_kc_kf(k: int) -> tuple[int, int]:
     preserved (never loosened) by the two-level split."""
     kc = ceil_sqrt(k)
     return kc, -(-k // kc)
-
-
-# Depth-adaptive hierarchy (r15, VERDICT r14 next-round #1): with
-# k ∝ n the TWO-level split's per-vector assignment work is
-# kc + kf ≈ 2√k ∝ √n — an n^1.5 total, the one acknowledged
-# asymptotic scale-killer left after r13/r14. A BALANCED three-level
-# split k = k1·k2·k3 (each ≈ ∛k) makes every level's per-vector work
-# k^(1/3) ⇒ total ∝ n^(4/3). The depth DECISION is metadata-only
-# (derived from the same corpus count k already is) and mirrored
-# exactly in the oracle SQL: depth 3 activates only when the
-# two-level split's larger level exceeds HIER_FLAT_MAX centroids —
-# below that, the split degenerates to (kc, kf, 1) and the third
-# level is an exact identity, so every corpus the driver checks
-# (k ≤ 20 at sf ≤ 0.1 ⇒ kc ≤ 5) computes bit-identically to the r13
-# two-level registration. HIER_FLAT_MAX = 32 is the numpy
-# centroid-block size (kmeans_assign_stream/fine_assign `blk`): a
-# level at ≤ 32 centroids is a single block pass per batch, so
-# splitting it buys no flops while paying an extra KM_ITERS-round
-# Lloyd level of fixed cost (measured crossover in
-# OPTIMIZATION_r15.md).
-
-HIER_FLAT_MAX = 32
-
-
-def icbrt_ceil(k: int) -> int:
-    """⌈∛k⌉ exactly: the smallest m ≥ 1 with m³ ≥ k. Float cbrt is NOT
-    guaranteed correctly rounded (unlike IEEE sqrt), so the float
-    result only seeds a ±2 candidate window and the answer is picked
-    by exact integer cube comparison — the oracle SQL applies the
-    identical adjustment, so both engines agree for every feasible k
-    regardless of libm rounding (tests/test_substring_semdedup.py
-    sweeps the agreement)."""
-    m0 = round(k ** (1.0 / 3.0))
-    for m in (m0 - 2, m0 - 1, m0, m0 + 1, m0 + 2):
-        if m >= 1 and m * m * m >= k:
-            return m
-    raise AssertionError(f"icbrt_ceil window missed k={k}")
-
-
-def hier_split(k: int, flat_max: int = HIER_FLAT_MAX) -> tuple[int, int, int]:
-    """(k1, k2, k3): the depth-adaptive split of the derived k.
-
-    kc = ⌈√k⌉ ≤ flat_max → (kc, kf, 1): the two-level split unchanged,
-    third level degenerate (identity — one centroid per cell).
-    kc > flat_max → balanced depth 3: k1 = ⌈∛k⌉, r = ⌈k/k1⌉,
-    k2 = ⌈√r⌉, k3 = ⌈r/k2⌉. k1·k2·k3 ≥ k1·r ≥ k, so the expected leaf
-    size stays ≤ the CAP contract of the derived k, exactly like the
-    two-level split."""
-    kc, kf = two_level_kc_kf(k)
-    if kc <= flat_max:
-        return kc, kf, 1
-    k1 = icbrt_ceil(k)
-    r = -(-k // k1)
-    k2 = ceil_sqrt(r)
-    return k1, k2, -(-r // k2)
 
 
 def fine_init(ev: DataFrame, kf: int) -> DataFrame:
@@ -706,21 +650,18 @@ def fine_update_from_v(assigned_v: DataFrame) -> DataFrame:
     )
 
 
-def _fine_rounds(ev: DataFrame, kf: int, with_v: bool = False) -> DataFrame:
+def _fine_rounds(ev: DataFrame, kf: int) -> DataFrame:
     """fine_init → KM_ITERS fused assign+update rounds → final assign
-    over an (vec_id, ccid, v) relation: the per-cell Lloyd block shared
-    by the two-level assign and (r15) the third hierarchy level.
-    Between rounds the ≤ cells·kf-row centroid relation is eagerly
-    localCheckpointed (the lineage-truncation pattern of the flat
-    rounds); ``with_v`` passes the vector through the FINAL assign so a
-    following level can key on the result without a (vec_id → v)
-    join."""
+    over an (vec_id, ccid, v) relation: the per-cell Lloyd block of the
+    two-level assign. Between rounds the ≤ cells·kf-row centroid
+    relation is eagerly localCheckpointed (the lineage-truncation
+    pattern of the flat rounds)."""
     fc = fine_init(ev, kf)
     for _ in range(KM_ITERS):
         fc = fine_update_from_v(
             fine_assign(ev, fc, with_v=True).select("ccid", "fcid", "v")
         ).localCheckpoint()
-    return fine_assign(ev, fc, with_v=with_v)
+    return fine_assign(ev, fc)
 
 
 # Converged two-level assignment memo, keyed like _KMEANS_CACHE.
@@ -758,7 +699,12 @@ def two_level_assign(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         # eager checkpoints truncate per-round lineage, final assign
         # stays inspectable)
         return _fine_rounds(ev, kf)
-    key = (spark.sparkContext.applicationId, sf_dir, vector.kernel(), k, "2lvl")
+    key = (
+        spark.sparkContext.applicationId,
+        os.path.abspath(sf_dir),
+        vector.kernel(),
+        k,
+    )
     cached = _TWO_LEVEL_CACHE.get(key)
     if cached is not None:
         return cached
@@ -775,135 +721,46 @@ def two_level_assign(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     return out
 
 
-# Converged three-level assignment memo, keyed like _TWO_LEVEL_CACHE.
-_HIER_CACHE: dict = {}
-
-
-def hier_assign(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int,
-    flat_max: int = HIER_FLAT_MAX,
-) -> DataFrame:
-    """(vec_id, cid): the depth-adaptive hierarchical assignment at the
-    derived k (r15, VERDICT r14 #1 — see :func:`hier_split`).
-
-    Degenerate split (kc ≤ flat_max, every corpus the driver checks):
-    delegates to :func:`two_level_assign` and flattens
-    cid = ccid·kf + fcid — bit-identical to the r13/r14 registration.
-
-    Active split (kc > flat_max): coarse flat Lloyd at k1 = ⌈∛k⌉, then
-    two per-cell fine levels of k2 and k3 centroids via the shared
-    :func:`_fine_rounds` block — cid = (c1·k2 + f2)·k3 + f3. No level
-    ever scores more than max(k1, k2, k3) ≈ ∛k centroids per vector,
-    so total assignment work is ~3n·∛k (n^4/3 at k ∝ n) instead of the
-    two-level ~2n·√k (n^1.5). Between levels the (vec_id, cell, v)
-    relation is persisted (arrow kernel) so level 3's rounds do not
-    re-run level 2; the fold kernel keeps the oracle-shaped live plan
-    (centroid relations are eagerly checkpointed, so plan size stays
-    linear in rounds)."""
-    from strategy_analyzer_exporter_spark.functions import vector
-    from strategy_analyzer_exporter_spark.operators.similarity import _spread
-
-    k1, k2, k3 = hier_split(k, flat_max)
-    if k3 == 1:
-        return two_level_assign(spark, sf_dir, k).select(
-            "vec_id",
-            (F.col("ccid") * F.lit(k2) + F.col("fcid")).alias("cid"),
-        )
-    coarse = _q_kmeans(spark, sf_dir, k=k1, hint_cents=False).select(
-        "vec_id", F.col("cid").alias("ccid")
-    )
-    e = _spread(
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
-    ev = coarse.join(e, "vec_id").select("vec_id", "ccid", "v")
-
-    def _flatten12(l2: DataFrame) -> DataFrame:
-        return l2.select(
-            "vec_id",
-            (F.col("ccid") * F.lit(k2) + F.col("fcid")).alias("ccid"),
-            "v",
-        )
-
-    def _flatten123(l3: DataFrame) -> DataFrame:
-        return l3.select(
-            "vec_id",
-            (F.col("ccid") * F.lit(k3) + F.col("fcid")).alias("cid"),
-        )
-
-    if vector.kernel() == "fold":
-        return _flatten123(_fine_rounds(_flatten12(_fine_rounds(ev, k2, with_v=True)), k3))
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        vector.kernel(),
-        k,
-        flat_max,
-        "3lvl",
-    )
-    cached = _HIER_CACHE.get(key)
-    if cached is not None:
-        return cached
-    ev = ev.persist()
-    try:
-        ev3 = _flatten12(_fine_rounds(ev, k2, with_v=True)).persist()
-        try:
-            out = _flatten123(_fine_rounds(ev3, k3)).localCheckpoint()
-        finally:
-            ev3.unpersist()
-    finally:
-        ev.unpersist()
-    _HIER_CACHE[key] = out
-    return out
-
-
-def _fine_chain_sql(
-    prefix: str, ev_cte: str, kf_sql: str, out_cte: str
-) -> str:
-    """CTE chain: per-cell fine Lloyd over ``ev_cte`` (vec_id, ccid, v)
-    → ``out_cte`` (vec_id, ccid, fcid) — the SQL mirror of
-    :func:`_fine_rounds`, shared by the two-level body and (r15) the
-    third hierarchy level so the unrolled iterations can never
-    drift."""
+def _fine_chain_sql(kf_sql: str) -> str:
+    """CTE chain: per-cell fine Lloyd over ``ev`` (vec_id, ccid, v)
+    → ``tl_assign`` (vec_id, ccid, fcid) — the SQL mirror of
+    :func:`_fine_rounds`."""
     ctes = [
-        f"""{prefix}0 AS (
+        f"""f0 AS (
     SELECT ccid, CAST(rn - 1 AS BIGINT) AS fcid, v AS cv FROM (
         SELECT ccid, v,
                row_number() OVER (PARTITION BY ccid ORDER BY vec_id) AS rn
-        FROM {ev_cte})
+        FROM ev)
     WHERE rn <= {kf_sql}
 )""",
     ]
-    cur = f"{prefix}0"
+    cur = "f0"
     for i in range(KM_ITERS):
         ctes.append(
-            f"""{prefix}a{i} AS (
+            f"""fa{i} AS (
     SELECT vec_id, ccid, fcid FROM (
-        SELECT {ev_cte}.vec_id, {ev_cte}.ccid, c.fcid, {_sqdist_sql(f"{ev_cte}.v", "c.cv")} AS dist
-        FROM {ev_cte} JOIN {cur} c USING (ccid))
+        SELECT ev.vec_id, ev.ccid, c.fcid, {_sqdist_sql("ev.v", "c.cv")} AS dist
+        FROM ev JOIN {cur} c USING (ccid))
     QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, fcid) = 1
 )"""
         )
         ctes.append(
-            f"""{prefix}{i + 1} AS (
+            f"""f{i + 1} AS (
     SELECT ccid, fcid, list(m ORDER BY pos) AS cv FROM (
-        SELECT a.ccid, a.fcid, r.pos, {davg_sql(f"{ev_cte}.v[r.pos]")} AS m
-        FROM {prefix}a{i} a JOIN {ev_cte} USING (vec_id)
+        SELECT a.ccid, a.fcid, r.pos, {davg_sql("ev.v[r.pos]")} AS m
+        FROM fa{i} a JOIN ev USING (vec_id)
         CROSS JOIN (SELECT CAST(range AS INTEGER) AS pos
                     FROM range(1, {KM_DIM} + 1)) r
         GROUP BY a.ccid, a.fcid, r.pos)
     GROUP BY ccid, fcid
 )"""
         )
-        cur = f"{prefix}{i + 1}"
+        cur = f"f{i + 1}"
     ctes.append(
-        f"""{out_cte} AS (
+        f"""tl_assign AS (
     SELECT vec_id, ccid, fcid FROM (
-        SELECT {ev_cte}.vec_id, {ev_cte}.ccid, c.fcid, {_sqdist_sql(f"{ev_cte}.v", "c.cv")} AS dist
-        FROM {ev_cte} JOIN {cur} c USING (ccid))
+        SELECT ev.vec_id, ev.ccid, c.fcid, {_sqdist_sql("ev.v", "c.cv")} AS dist
+        FROM ev JOIN {cur} c USING (ccid))
     QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, fcid) = 1
 )"""
     )
@@ -931,80 +788,7 @@ def _two_level_assign_body(k_raw_sql: str) -> str:
     SELECT a.vec_id, a.cid AS ccid, e.v
     FROM assign a JOIN e USING (vec_id)
 )""",
-        _fine_chain_sql("f", "ev", kf_sql, "tl_assign"),
-    ]
-    return ",\n".join(ctes)
-
-
-def _hier_split_ctes(k_raw_sql: str, flat_max: int) -> tuple[str, ...]:
-    """CTEs ``hk``/``hr``/``hs`` deriving the depth-adaptive split
-    (k1, k2, k3) in-SQL exactly as :func:`hier_split` does in Python
-    (agreement swept in tests/test_substring_semdedup.py). ``hk``
-    picks ⌈∛k⌉ by exact integer cube comparison over a ±2 window
-    around the float seed — libm cbrt/pow rounding cannot change the
-    result (see :func:`icbrt_ceil`). The inactive branches keep every
-    expression well-defined (r = 1, not 0) so vectorized CASE
-    evaluation never divides by zero."""
-    return (
-        f"""hk AS (
-    SELECT k, kc,
-           CASE WHEN kc <= {flat_max} THEN kc
-                WHEN (m0-2)*(m0-2)*(m0-2) >= k THEN m0-2
-                WHEN (m0-1)*(m0-1)*(m0-1) >= k THEN m0-1
-                WHEN m0*m0*m0 >= k THEN m0
-                WHEN (m0+1)*(m0+1)*(m0+1) >= k THEN m0+1
-                ELSE m0+2 END AS k1
-    FROM (SELECT k, kc, CAST(round(pow(k, 1.0/3.0)) AS BIGINT) AS m0
-          FROM (SELECT {k_raw_sql} AS k,
-                       CAST(ceil(sqrt({k_raw_sql})) AS BIGINT) AS kc
-                FROM e))
-)""",
-        f"""hr AS (
-    SELECT k, kc, k1,
-           CASE WHEN kc > {flat_max} THEN CAST(ceil(k / k1) AS BIGINT)
-                ELSE CAST(1 AS BIGINT) END AS r
-    FROM hk
-)""",
-        f"""hs AS (
-    SELECT k1,
-           CASE WHEN kc > {flat_max} THEN CAST(ceil(sqrt(r)) AS BIGINT)
-                ELSE CAST(ceil(k / kc) AS BIGINT) END AS k2,
-           CASE WHEN kc > {flat_max}
-                THEN CAST(ceil(r / ceil(sqrt(r))) AS BIGINT)
-                ELSE CAST(1 AS BIGINT) END AS k3
-    FROM hr
-)""",
-    )
-
-
-def _hier_assign_body(k_raw_sql: str, flat_max: int = HIER_FLAT_MAX) -> str:
-    """WITH-body CTE chain ending in ``h_assign`` (vec_id, cid) — the
-    depth-adaptive hierarchical assignment, the SQL mirror of
-    :func:`hier_assign`. Degenerate split (k3 = 1, every corpus the
-    driver checks): the third level's single-centroid Lloyd is an
-    exact identity, so ``cid`` equals the two-level body's
-    ccid·kf + fcid bit-for-bit. Active split: coarse flat Lloyd at
-    k1 = ⌈∛k⌉, then two fine levels of k2 and k3 centroids —
-    cid = (c1·k2 + f2)·k3 + f3, exactly the Spark flattening."""
-    k1_sql = "(SELECT k1 FROM hs)"
-    k2_sql = "(SELECT k2 FROM hs)"
-    k3_sql = "(SELECT k3 FROM hs)"
-    ctes = [
-        # coarse: ends in CTE `assign`; the split CTEs ride after `e`
-        _kmeans_assign_body(k1_sql, extra_ctes=_hier_split_ctes(k_raw_sql, flat_max)),
-        """ev AS (
-    SELECT a.vec_id, a.cid AS ccid, e.v
-    FROM assign a JOIN e USING (vec_id)
-)""",
-        _fine_chain_sql("f", "ev", k2_sql, "fl2"),
-        f"""ev3 AS (
-    SELECT t.vec_id, t.ccid * {k2_sql} + t.fcid AS ccid, e.v
-    FROM fl2 t JOIN e USING (vec_id)
-)""",
-        _fine_chain_sql("g", "ev3", k3_sql, "fl3"),
-        f"""h_assign AS (
-    SELECT vec_id, ccid * {k3_sql} + fcid AS cid FROM fl3
-)""",
+        _fine_chain_sql(kf_sql),
     ]
     return ",\n".join(ctes)
 
@@ -1083,22 +867,8 @@ def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment (kc = ⌈√k⌉ coarse cells × kf = ⌈k/kc⌉ fine centroids,
     ~2n·√k assignment work, never n·k) at k = max(KM_K, ⌈n/CAP⌉), so
     expected cluster size stays ≤ CAP and the pairwise quadratic is
-    bounded per cluster (~n·CAP total).
-
-    r15 measured rejection of the depth-3 hierarchy (VERDICT r14
-    next-round #1): hier_assign's ACTIVE three-level branch makes the
-    assignment itself 2.02× faster at the 100× tier (cold 37.5 s vs
-    75.8 s at n=200k, k=2000 — the n^1.5 → n^4/3 claim is real on that
-    stage), but its leaves come out of THREE stacked data-dependent
-    k-means splits instead of two and lose balance: measured
-    Σ|cluster|² 50.8M vs 22.2M (max leaf 2320 vs 500 at CAP=100), and
-    the quadratic within-cluster pair stage — the term that dominates
-    this query end-to-end at every reachable tier — inherits the skew
-    plus a single-hot-leaf straggler. Full-query A/B at 100×: two-level
-    12.8 s warm / 133.7 s cold vs hier 63.9 s warm / 231 s cold
-    (OPTIMIZATION_r15.md). The balanced two-level split stays the
-    registered default; hier_assign remains the measured twin for the
-    tier where assignment flops (not leaf balance) dominate.
+    bounded per cluster (~n·CAP total). The rejected depth-3 hierarchy
+    is measured in OPTIMIZATION_r15.md.
 
     The dropped set — a data-dependent
     fraction of the corpus, so NO forced broadcast (r06 house rule):
@@ -1196,10 +966,8 @@ def _q_kmeans_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus-partitioning consumer) rides on. k is corpus-derived by
     the same k = max(KM_K, ⌈n/CAP⌉) rule; cid = ccid·kf + fcid is the
     flattened two-level cluster id. See :func:`two_level_assign` for
-    the plan shape (~2n·√k assignment work, never n·k), and
-    :func:`_q_semdedup`'s docstring for the r15 measured rejection of
-    the depth-3 hier_assign twin (leaf balance beats assignment flops
-    at every reachable tier)."""
+    the plan shape (~2n·√k assignment work, never n·k); the rejected
+    depth-3 hierarchy is measured in OPTIMIZATION_r15.md."""
     n = _corpus_rows(sf_dir, "embeddings")
     if n < 0:
         n = load_table(spark, sf_dir, "embeddings").count()

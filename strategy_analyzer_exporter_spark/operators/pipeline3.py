@@ -396,9 +396,10 @@ register(
 # window form's, not probabilistically so. Documents are rebuilt
 # MAP-SIDE from each doc's own text at the kept block indices (the
 # winner list is metadata), so document text crosses exactly one
-# exchange in the whole query: the final doc_id join. The r13 window
-# and min-struct shapes remain as twins (mode="window"/"agg"),
-# output-identical and pinned by the planted twin test.
+# exchange in the whole query: the final doc_id join. The window and
+# min-struct shapes it replaced shuffle the paragraph text, about 3×
+# this shape's shuffle bytes on the sf0.1 corpus; their wall-clock
+# measurements are in OPTIMIZATION_r14.md.
 
 
 def _para_blocks(tk: F.Column) -> F.Column:
@@ -417,75 +418,22 @@ def _para_blocks(tk: F.Column) -> F.Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _q_paragraph_dedup(
-    spark: SparkSession, sf_dir: str, mode: str = "hash"
-) -> DataFrame:
+def _q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide first-occurrence paragraph dedup + doc rebuild.
 
-    ``mode``:
-    - ``"hash"`` (registered default, r14): metadata-only decision —
-      the explode emits (ph=xxhash64(para), doc_id, para_idx) and the
-      para string is dropped before anything shuffles. ONE hash(ph)
-      aggregation (map-side partial min+count) finds each hash's first
-      occurrence and its row count; cnt=1 hashes are unique paragraphs
-      by construction, cnt>1 hashes (duplicate mass + any 64-bit
-      collisions) are re-derived with text and resolved EXACTLY per
-      (ph, para) — collisions cannot change the output. Winners are
-      pure metadata (doc_id, para_idx); kept_text is re-sliced from the
-      document's own text map-side, so text crosses exactly one
-      exchange (the final doc_id join).
-    - ``"window"``: the r13 shape — row_number() over
-      partitionBy(para): materializes+sorts each para's full row list
-      in one window task (hot-boilerplate skew at web scale) and
-      shuffles full paragraph text twice.
-    - ``"agg"``: the r13 skew-safe twin — min-struct aggregation keyed
-      on the para STRING + a join back; map-side partial min bounds
-      hot-key state but full text still crosses the exchanges.
-
-    All three are output-IDENTICAL (lexicographic struct min ≡
-    row_number over the same order; pinned by the planted twin test
-    and the sf0.001 corpus equality in tests/test_quality_mixture.py)."""
+    Metadata-only decision: the explode emits (ph=xxhash64(para),
+    doc_id, para_idx) and the para string is dropped before anything
+    shuffles. ONE hash(ph) aggregation (map-side partial min+count)
+    finds each hash's first occurrence and its row count; cnt=1 hashes
+    are unique paragraphs by construction, cnt>1 hashes (duplicate mass
+    + any 64-bit collisions) are re-derived with text and resolved
+    EXACTLY per (ph, para) — collisions cannot change the output, which
+    equals the oracle's row_number() over partitionBy(para). Winners
+    are pure metadata (doc_id, para_idx); kept_text is re-sliced from
+    the document's own text map-side, so text crosses exactly one
+    exchange (the final doc_id join)."""
     d = load_table(spark, sf_dir, "documents")
     blocks = _para_blocks(tokens(F.col("text")))
-    if mode in ("window", "agg"):
-        rows = d.select(
-            "doc_id", F.posexplode(blocks).alias("para_idx", "para")
-        ).withColumn("para_idx", F.col("para_idx").cast("long"))
-        if mode == "agg":
-            first = rows.groupBy("para").agg(
-                F.min(F.struct("doc_id", "para_idx")).alias("first")
-            )
-            ranked = rows.join(first, "para").withColumn(
-                "kept",
-                (F.col("doc_id") == F.col("first.doc_id"))
-                & (F.col("para_idx") == F.col("first.para_idx")),
-            )
-        else:
-            w = Window.partitionBy("para").orderBy("doc_id", "para_idx")
-            ranked = rows.withColumn("kept", F.row_number().over(w) == 1)
-        per_doc = ranked.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n_paras"),
-            F.sum(F.col("kept").cast("long")).alias("n_kept"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(F.col("kept"), F.struct("para_idx", "para"))
-                        )
-                    ),
-                    lambda s: s["para"],
-                ),
-                " ",
-            ).alias("kept_text"),
-        )
-        return d.select("doc_id").join(per_doc, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce("n_paras", F.lit(0)).alias("n_paras"),
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-            F.coalesce("kept_text", F.lit("")).alias("kept_text"),
-        )
-    if mode != "hash":
-        raise ValueError(f"unknown paragraph-dedup mode: {mode!r}")
     # --- decision pass: 24-byte metadata rows only -------------------
     rows_k = d.select(
         "doc_id", F.posexplode(blocks).alias("para_idx", "para")

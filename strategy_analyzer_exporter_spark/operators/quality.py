@@ -16,14 +16,12 @@ signals are the n-gram ones implemented here:
 - ``mean_tok_len``    — mean token length (C4's word-length sanity gate)
 - ``repetitive``      — the Gopher-style composite gate
 
-Execution strategy follows text.py doctrine: explode tokens to ROWS
-(codegen'd builtins, map-side partial aggregation); bigrams come from
-``lead() over (doc_id, pos)`` — one hash(doc_id) shuffle that every
-downstream per-doc aggregate reuses. All counts are exact integers;
-every ratio is one double division of those integers, so floats match
-the DuckDB oracle bit-for-bit. Ties for "top" break lexicographically
-(row_number over count desc, gram asc) — deterministic in both
-engines. Zero/one-token documents survive with NULL fractions.
+The signals are computed per document in one ``mapInPandas`` pass (see
+:func:`_signals`). All counts are exact integers; every ratio is one
+double division of those integers, so floats match the DuckDB oracle
+bit-for-bit. Ties for "top" break lexicographically (count desc, gram
+asc) — deterministic in both engines. Zero/one-token documents survive
+with NULL fractions.
 """
 
 from __future__ import annotations
@@ -41,359 +39,92 @@ TOP_WORD_MAX = 0.30
 MIN_TOKENS = 10
 
 
-def _signals(
-    spark: SparkSession, sf_dir: str, mode: str = "map"
-) -> DataFrame:
-    """``mode="map"`` (registered default, r15 — guide §2.4 remove
-    shuffles outright + §4.2, resolving VERDICT r14 #2): every signal
-    here is a PER-DOCUMENT local computation (counts, top gram with a
-    (cnt DESC, gram ASC) tie-break, distinct bigrams), so no gram row
-    ever needs to cross a shuffle — one Arrow-batched mapInPandas pass
-    computes each doc's stats in a per-doc dict (bounded state: a
-    doc's own vocabulary, the same bound the agg shapes' per-(doc,
-    gram) hash groups carry), and the only exchange left is the final
-    broadcast-size doc join. The dedup._shingle_gen precedent applies:
-    the equivalent HOF expressions never enter codegen, and the
-    explode+agg forms shuffle every gram counted — measured
-    interleaved min-of-7 (OPTIMIZATION_r15.md): map 0.56/0.63 s at
-    1×/10× vs 0.95-1.9 (fused), 1.2-1.8 (agg), 1.0-1.4 (window).
+def _signals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every signal here is a PER-DOCUMENT local computation (counts,
+    top gram with a (cnt DESC, gram ASC) tie-break, distinct bigrams),
+    so no gram row ever needs to cross a shuffle: one Arrow-batched
+    mapInPandas pass computes each doc's stats in a per-doc dict
+    (bounded state: a doc's own vocabulary), and the only exchange
+    left is the final broadcast-size doc join. The explode+aggregate
+    and lead()/row_number shapes it replaced shuffle every gram
+    counted; their measurements are in OPTIMIZATION_r15.md.
+
     Tie-break parity: Python min on (-cnt, gram) — UTF-8 byte order
-    equals code-point order, so min matches Spark's min(struct) and
-    the oracle's row_number ordering byte-for-byte. Tokenization is
+    equals code-point order, so min matches the oracle's row_number
+    ordering byte-for-byte. Tokenization is
     `[t for t in text.split(" ") if t]` ≡ functions.tokens ≡
-    TOKENS_SQL (empties dropped, NULL text → no row).
+    TOKENS_SQL (empties dropped, NULL text → no row)."""
+    from strategy_analyzer_exporter_spark.sources.tables import spread_scan
 
-    ``mode="fused"`` (r15 intermediate, kept as a twin): ONE tokenized
-    projection emits both gram kinds as a single plain-string explode
-    (a bigram always contains ' ', a unigram never does — (doc_id,
-    gram) cannot collide across kinds), ONE (doc_id, gram) count
-    aggregation, per-doc stats from ONE conditional aggregation, with
-    spread_scan ahead of the pipeline. NULL semantics pinned to the
-    per-kind left joins' (n_distinct_bigrams via sum(when(kind, 1)),
-    not count, so a bigram-less doc keeps its NULL ratio).
-    ``mode="agg"`` (r14): array-side bigrams + min-struct top-gram,
-    unigrams and bigrams as separate relations, each re-reading and
-    re-tokenizing `documents`.
-    ``mode="window"`` is the pre-r14 lead()/row_number shape. All four
-    twin-tested identical."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    if mode == "map":
-        from strategy_analyzer_exporter_spark.sources.tables import spread_scan
+    raw = spread_scan(load_table(spark, sf_dir, "documents")).select(
+        "doc_id", "text"
+    )
 
-        raw = spread_scan(load_table(spark, sf_dir, "documents")).select(
-            "doc_id", "text"
-        )
+    def gen(batches):
+        import pandas as _pd
 
-        def gen(batches):
-            import pandas as _pd
-
-            for pdf in batches:
-                out: dict[str, list] = {
-                    k: []
-                    for k in (
-                        "doc_id",
-                        "n_tokens",
-                        "n_chars_tok",
-                        "top_word",
-                        "top_word_n",
-                        "n_bigrams",
-                        "n_distinct_bigrams",
-                        "top_bigram",
-                        "top_bigram_n",
+        for pdf in batches:
+            out: dict[str, list] = {
+                k: []
+                for k in (
+                    "doc_id",
+                    "n_tokens",
+                    "n_chars_tok",
+                    "top_word",
+                    "top_word_n",
+                    "n_bigrams",
+                    "n_distinct_bigrams",
+                    "top_bigram",
+                    "top_bigram_n",
+                )
+            }
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                toks = [t for t in (text or "").split(" ") if t]
+                n = len(toks)
+                if n == 0:
+                    continue  # absent row ≡ explode of empty array
+                wc: dict[str, int] = {}
+                chars = 0
+                for t in toks:
+                    wc[t] = wc.get(t, 0) + 1
+                    chars += len(t)
+                tw, twn = min(wc.items(), key=lambda kv: (-kv[1], kv[0]))
+                out["doc_id"].append(doc_id)
+                out["n_tokens"].append(n)
+                out["n_chars_tok"].append(chars)
+                out["top_word"].append(tw)
+                out["top_word_n"].append(twn)
+                if n >= 2:
+                    bc: dict[str, int] = {}
+                    for i in range(n - 1):
+                        b = toks[i] + " " + toks[i + 1]
+                        bc[b] = bc.get(b, 0) + 1
+                    tb, tbn = min(
+                        bc.items(), key=lambda kv: (-kv[1], kv[0])
                     )
-                }
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                    toks = [t for t in (text or "").split(" ") if t]
-                    n = len(toks)
-                    if n == 0:
-                        continue  # absent row ≡ explode of empty array
-                    wc: dict[str, int] = {}
-                    chars = 0
-                    for t in toks:
-                        wc[t] = wc.get(t, 0) + 1
-                        chars += len(t)
-                    tw, twn = min(wc.items(), key=lambda kv: (-kv[1], kv[0]))
-                    out["doc_id"].append(doc_id)
-                    out["n_tokens"].append(n)
-                    out["n_chars_tok"].append(chars)
-                    out["top_word"].append(tw)
-                    out["top_word_n"].append(twn)
-                    if n >= 2:
-                        bc: dict[str, int] = {}
-                        for i in range(n - 1):
-                            b = toks[i] + " " + toks[i + 1]
-                            bc[b] = bc.get(b, 0) + 1
-                        tb, tbn = min(
-                            bc.items(), key=lambda kv: (-kv[1], kv[0])
-                        )
-                        out["n_bigrams"].append(n - 1)
-                        out["n_distinct_bigrams"].append(len(bc))
-                        out["top_bigram"].append(tb)
-                        out["top_bigram_n"].append(tbn)
-                    else:
-                        # single-token doc: no bigram relation row —
-                        # NULLs here ≡ the bigram_stats left-join miss
-                        out["n_bigrams"].append(None)
-                        out["n_distinct_bigrams"].append(None)
-                        out["top_bigram"].append(None)
-                        out["top_bigram_n"].append(None)
-                yield _pd.DataFrame(out)
+                    out["n_bigrams"].append(n - 1)
+                    out["n_distinct_bigrams"].append(len(bc))
+                    out["top_bigram"].append(tb)
+                    out["top_bigram_n"].append(tbn)
+                else:
+                    # single-token doc: no bigram relation row —
+                    # NULLs here ≡ the bigram_stats left-join miss
+                    out["n_bigrams"].append(None)
+                    out["n_distinct_bigrams"].append(None)
+                    out["top_bigram"].append(None)
+                    out["top_bigram_n"].append(None)
+            yield _pd.DataFrame(out)
 
-        stats = raw.mapInPandas(
-            gen,
-            "doc_id bigint, n_tokens bigint, n_chars_tok bigint, "
-            "top_word string, top_word_n bigint, n_bigrams bigint, "
-            "n_distinct_bigrams bigint, top_bigram string, "
-            "top_bigram_n bigint",
-        )
-        out = (
-            d.join(stats, "doc_id", "left")
-            .select(
-                "doc_id",
-                "lang",
-                F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-                F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-                "top_word",
-                "top_word_n",
-                (
-                    F.col("top_word_n").cast("double")
-                    / F.col("n_tokens").cast("double")
-                ).alias("top_word_frac"),
-                "top_bigram",
-                "top_bigram_n",
-                (
-                    F.col("top_bigram_n").cast("double")
-                    / F.col("n_bigrams").cast("double")
-                ).alias("top_bigram_frac"),
-                (
-                    F.col("n_distinct_bigrams").cast("double")
-                    / F.col("n_bigrams").cast("double")
-                ).alias("distinct_bigram_ratio"),
-                (
-                    F.col("n_chars_tok").cast("double")
-                    / F.col("n_tokens").cast("double")
-                ).alias("mean_tok_len"),
-            )
-        )
-        return out.withColumn(
-            "repetitive",
-            F.coalesce(F.col("top_bigram_frac") > TOP_BIGRAM_MAX, F.lit(False))
-            | F.coalesce(F.col("top_word_frac") > TOP_WORD_MAX, F.lit(False)),
-        )
-    if mode == "fused":
-        from strategy_analyzer_exporter_spark.sources.tables import spread_scan
-
-        # spread the single-split test-corpus scan BEFORE the heavy
-        # tokenize+explode+partial-agg pipeline (guide §2.5 input skew;
-        # the spread_scan metadata conditional is a no-op on any
-        # multi-file layout). Without it the fused single pipeline runs
-        # the whole gram pass on ONE core — the r14 two-branch shape
-        # accidentally got two tasks, and the window shape parallelized
-        # via its token-row exchange; fusing must not serialize.
-        docs = spread_scan(load_table(spark, sf_dir, "documents")).select(
-            "doc_id", _tokens(F.col("text")).alias("toks")
-        )
-        # both gram kinds in ONE string array: tokens are space-split,
-        # so a unigram can never contain ' ' and a bigram always does —
-        # the kind needs no tag column and no struct wrapper, and
-        # (doc_id, gram) alone is collision-free across kinds, so ONE
-        # count aggregation serves both
-        bi_arr = F.when(
-            F.size("toks") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - 1),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.get(F.col("toks"), i - 1),
-                    F.get(F.col("toks"), i),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        gc = (
-            docs.select(
-                "doc_id", F.explode(F.concat("toks", bi_arr)).alias("gram")
-            )
-            .groupBy("doc_id", "gram")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum(F.length("gram")).alias("chars"),
-            )
-        )
-        k1 = F.col("gram").contains(" ")
-        k0 = ~k1
-        stats = gc.groupBy("doc_id").agg(
-            F.sum(F.when(k0, F.col("cnt"))).alias("n_tokens"),
-            F.sum(F.when(k0, F.col("chars"))).alias("n_chars_tok"),
-            F.min(
-                F.when(
-                    k0,
-                    F.struct((-F.col("cnt")).alias("nc"), F.col("gram").alias("tok")),
-                )
-            ).alias("_topw"),
-            F.sum(F.when(k1, F.col("cnt"))).alias("n_bigrams"),
-            F.sum(F.when(k1, F.lit(1))).alias("n_distinct_bigrams"),
-            F.min(
-                F.when(
-                    k1,
-                    F.struct(
-                        (-F.col("cnt")).alias("nc"), F.col("gram").alias("bigram")
-                    ),
-                )
-            ).alias("_topb"),
-        )
-        out = (
-            d.join(stats, "doc_id", "left")
-            .select(
-                "doc_id",
-                "lang",
-                F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-                F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-                F.col("_topw.tok").alias("top_word"),
-                (-F.col("_topw.nc")).alias("top_word_n"),
-                (
-                    (-F.col("_topw.nc")).cast("double")
-                    / F.col("n_tokens").cast("double")
-                ).alias("top_word_frac"),
-                F.col("_topb.bigram").alias("top_bigram"),
-                (-F.col("_topb.nc")).alias("top_bigram_n"),
-                (
-                    (-F.col("_topb.nc")).cast("double")
-                    / F.col("n_bigrams").cast("double")
-                ).alias("top_bigram_frac"),
-                (
-                    F.col("n_distinct_bigrams").cast("double")
-                    / F.col("n_bigrams").cast("double")
-                ).alias("distinct_bigram_ratio"),
-                (
-                    F.col("n_chars_tok").cast("double")
-                    / F.col("n_tokens").cast("double")
-                ).alias("mean_tok_len"),
-            )
-        )
-        return out.withColumn(
-            "repetitive",
-            F.coalesce(F.col("top_bigram_frac") > TOP_BIGRAM_MAX, F.lit(False))
-            | F.coalesce(F.col("top_word_frac") > TOP_WORD_MAX, F.lit(False)),
-        )
-    if mode == "window":
-        uni = load_table(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.posexplode_outer(_tokens(F.col("text"))).alias("pos", "tok"),
-        )
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        bi = uni.withColumn("nxt", F.lead("tok").over(w)).select(
-            "doc_id",
-            F.when(
-                F.col("tok").isNotNull() & F.col("nxt").isNotNull(),
-                F.concat_ws(" ", "tok", "nxt"),
-            ).alias("bigram"),
-        )
-        uni = uni.drop("pos")
-    elif mode == "agg":
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", _tokens(F.col("text")).alias("toks")
-        )
-        uni = docs.select("doc_id", F.explode_outer("toks").alias("tok"))
-        bi = docs.select(
-            "doc_id",
-            F.explode_outer(
-                F.when(
-                    F.size("toks") >= 2,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("toks") - 1),
-                        lambda i: F.concat_ws(
-                            " ",
-                            F.get(F.col("toks"), i - 1),
-                            F.get(F.col("toks"), i),
-                        ),
-                    ),
-                )
-            ).alias("bigram"),
-        )
-    else:
-        raise ValueError(f"unknown signals mode: {mode!r}")
-
-    # unigram stats
-    wc = (
-        uni.filter(F.col("tok").isNotNull())
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum(F.length("tok")).alias("chars"))
+    stats = raw.mapInPandas(
+        gen,
+        "doc_id bigint, n_tokens bigint, n_chars_tok bigint, "
+        "top_word string, top_word_n bigint, n_bigrams bigint, "
+        "n_distinct_bigrams bigint, top_bigram string, "
+        "top_bigram_n bigint",
     )
-    if mode == "agg":
-        word_stats = (
-            wc.groupBy("doc_id")
-            .agg(
-                F.sum("cnt").alias("n_tokens"),
-                F.sum("chars").alias("n_chars_tok"),
-                F.min(
-                    F.struct((-F.col("cnt")).alias("nc"), F.col("tok"))
-                ).alias("_top"),
-            )
-            .select(
-                "doc_id",
-                "n_tokens",
-                "n_chars_tok",
-                F.col("_top.tok").alias("top_word"),
-                (-F.col("_top.nc")).alias("top_word_n"),
-            )
-        )
-    else:
-        ww = Window.partitionBy("doc_id").orderBy(
-            F.col("cnt").desc(), F.col("tok")
-        )
-        word_stats = (
-            wc.withColumn("rn", F.row_number().over(ww))
-            .groupBy("doc_id")
-            .agg(
-                F.sum("cnt").alias("n_tokens"),
-                F.sum("chars").alias("n_chars_tok"),
-                F.max(F.when(F.col("rn") == 1, F.col("tok"))).alias("top_word"),
-                F.max(F.when(F.col("rn") == 1, F.col("cnt"))).alias("top_word_n"),
-            )
-        )
-
-    # bigram stats
-    bc = (
-        bi.filter(F.col("bigram").isNotNull())
-        .groupBy("doc_id", "bigram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    if mode == "agg":
-        bigram_stats = (
-            bc.groupBy("doc_id")
-            .agg(
-                F.sum("cnt").alias("n_bigrams"),
-                F.count(F.lit(1)).alias("n_distinct_bigrams"),
-                F.min(
-                    F.struct((-F.col("cnt")).alias("nc"), F.col("bigram"))
-                ).alias("_top"),
-            )
-            .select(
-                "doc_id",
-                "n_bigrams",
-                "n_distinct_bigrams",
-                F.col("_top.bigram").alias("top_bigram"),
-                (-F.col("_top.nc")).alias("top_bigram_n"),
-            )
-        )
-    else:
-        bw = Window.partitionBy("doc_id").orderBy(
-            F.col("cnt").desc(), F.col("bigram")
-        )
-        bigram_stats = (
-            bc.withColumn("rn", F.row_number().over(bw))
-            .groupBy("doc_id")
-            .agg(
-                F.sum("cnt").alias("n_bigrams"),
-                F.count(F.lit(1)).alias("n_distinct_bigrams"),
-                F.max(F.when(F.col("rn") == 1, F.col("bigram"))).alias("top_bigram"),
-                F.max(F.when(F.col("rn") == 1, F.col("cnt"))).alias("top_bigram_n"),
-            )
-        )
-
     out = (
-        d.join(word_stats, "doc_id", "left")
-        .join(bigram_stats, "doc_id", "left")
+        d.join(stats, "doc_id", "left")
         .select(
             "doc_id",
             "lang",
@@ -401,20 +132,23 @@ def _signals(
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             "top_word",
             "top_word_n",
-            (F.col("top_word_n").cast("double") / F.col("n_tokens").cast("double")).alias(
-                "top_word_frac"
-            ),
+            (
+                F.col("top_word_n").cast("double")
+                / F.col("n_tokens").cast("double")
+            ).alias("top_word_frac"),
             "top_bigram",
             "top_bigram_n",
             (
-                F.col("top_bigram_n").cast("double") / F.col("n_bigrams").cast("double")
+                F.col("top_bigram_n").cast("double")
+                / F.col("n_bigrams").cast("double")
             ).alias("top_bigram_frac"),
             (
                 F.col("n_distinct_bigrams").cast("double")
                 / F.col("n_bigrams").cast("double")
             ).alias("distinct_bigram_ratio"),
             (
-                F.col("n_chars_tok").cast("double") / F.col("n_tokens").cast("double")
+                F.col("n_chars_tok").cast("double")
+                / F.col("n_tokens").cast("double")
             ).alias("mean_tok_len"),
         )
     )

@@ -37,22 +37,18 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # Aggregation
 
 
-def _q_pricing_summary(
-    spark: SparkSession, sf_dir: str, spread: bool = True
-) -> DataFrame:
+def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-style grouped aggregation. Scale: map-side partial agg on
     (returnflag, linestatus) — 6 groups — so the shuffle carries only
     partials; the scan prunes to 7 columns + pushes the date filter.
 
-    r14: the partial aggregation (7 exact-decimal aggregates over every
+    The partial aggregation (7 exact-decimal aggregates over every
     surviving row) is the expensive half, and on the single-row-group
     test file it ran on ONE core — spread_scan parallelizes it when the
     scan yields fewer splits than the session (no-op on any multi-file
     layout); decimal sums are order-independent, so the result is
-    bit-identical. ``spread=False`` is the pre-r14 measurement twin."""
-    li = _t(spark, sf_dir, "lineitem")
-    if spread:
-        li = spread_scan(li)
+    bit-identical (measured in OPTIMIZATION_r14.md)."""
+    li = spread_scan(_t(spark, sf_dir, "lineitem"))
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
@@ -306,26 +302,14 @@ GROUP BY n_name""",
 )
 
 
-def _q_join_multiway(
-    spark: SparkSession, sf_dir: str, spread: bool = False
-) -> DataFrame:
+def _q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-style 6-way join. Scale: lineitem⋈orders⋈customer are the
     big shuffles (AQE re-plans skew); supplier/nation/region broadcast.
-    Catalyst reorders the dim joins below the fact joins.
-
-    r14 — spread_scan MEASURED AND REJECTED here (kept as the
-    ``spread=True`` twin for re-measurement): at bench layout every dim
-    side broadcasts and the cascade collapses into lineitem's
-    single-split scan stage, but the broadcast-hash probes are cheap
-    enough that paying a round-robin repartition (with its
-    sort-before-repartition of 600k rows on that same single core)
-    LOST: 0.495 s → 0.754 s median-of-3, same session. Contrast
-    _q_pricing_summary, where the avoided work (7 exact-decimal
-    aggregates/row) is heavy enough that the identical spread wins
-    1.033 → 0.569 s."""
+    Catalyst reorders the dim joins below the fact joins. No
+    spread_scan ahead of the joins: the broadcast-hash probes are too
+    cheap to pay for a repartition (measured in OPTIMIZATION_r14.md).
+    """
     li = _t(spark, sf_dir, "lineitem")
-    if spread:
-        li = spread_scan(li)
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     # supplier SCALES with sf (no hint — AQE broadcasts while small);

@@ -191,16 +191,20 @@ def ingest_parquet_to_duckdb(
 
     con = duckdb.connect(db_path)
     try:
+        # the glob is a bound parameter, not spliced SQL: a path may hold
+        # a quote
         glob = os.path.join(parquet_path, "**", "*.parquet")
         if mode == "replace":
             con.execute(f"DROP TABLE IF EXISTS {quote_ident(table)}")
         con.execute(
             f"CREATE TABLE IF NOT EXISTS {quote_ident(table)} AS "
-            f"SELECT * FROM read_parquet('{glob}', hive_partitioning=true) LIMIT 0"
+            f"SELECT * FROM read_parquet(?, hive_partitioning=true) LIMIT 0",
+            [glob],
         )
         con.execute(
             f"INSERT INTO {quote_ident(table)} "
-            f"SELECT * FROM read_parquet('{glob}', hive_partitioning=true)"
+            f"SELECT * FROM read_parquet(?, hive_partitioning=true)",
+            [glob],
         )
         n = con.execute(
             f"SELECT count(*) FROM {quote_ident(table)}"

@@ -36,3 +36,27 @@ def test_print_sink_formats_bar_fields_and_caps_rows(spark):
     assert lines[0].startswith("t=") and ", d=" in lines[0]
     for key in ("O=", "H=", "L=", "C=", "Vol="):
         assert key in lines[0]
+
+
+def test_ingest_parquet_to_duckdb_quoted_path(tmp_path):
+    """A staging path holding a single quote ingests (replace, then
+    append) instead of breaking the SQL around the parquet glob."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from strategy_analyzer_exporter_spark.sinks import ingest_parquet_to_duckdb
+
+    stage = tmp_path / "it's" / "stage"
+    (stage / "day=7").mkdir(parents=True)
+    papq.write_table(pa.table({"x": [1, 2, 3]}), stage / "day=7" / "part.parquet")
+    db = str(tmp_path / "it's" / "out.duckdb")
+
+    assert ingest_parquet_to_duckdb(str(stage), db, "t") == 3
+    assert ingest_parquet_to_duckdb(str(stage), db, "t", mode="append") == 6
+    con = duckdb.connect(db)
+    try:
+        rows = con.execute("SELECT day, x FROM t ORDER BY x, day").fetchall()
+    finally:
+        con.close()
+    assert rows == [(7, 1), (7, 1), (7, 2), (7, 2), (7, 3), (7, 3)]

@@ -236,33 +236,22 @@ def test_autocorr_from_sums_bit_equals_windowed():
 
 
 def test_running_stats_byte_equal_to_frame_stats(spark):
-    """r15: the O(1)-per-row running-sum/lag window stats
-    (stats_impl="running", the registered default) must reproduce the
-    bounded-frame shape to the byte at BOTH gate scales — the decimal
+    """The O(1)-per-row running-sum/lag window stats must reproduce the
+    oracle's bounded-frame sums (``features_sql``: ROWS BETWEEN frames
+    over exact decimals) to the bit at BOTH gate scales — the decimal
     sliding sums are exact integers, so difference-of-running-sums is
     the identical value, and everything downstream is the same pinned
     float64 sequence. Also guards the decimal(30,12) re-cast: a naked
     (38,12)−(38,12) difference goes through Spark's precision-loss
     path (scale 12 → 11) and rounds the quantized grid (measured: 1
-    row at sf0.01 before the fix)."""
-    from strategy_analyzer_exporter_spark.operators.features import (
-        TESTDATA_CONFIG,
-        features_df,
-    )
+    row at sf0.01 without it)."""
+    from oracle_harness import compare
+
+    from strategy_analyzer_exporter_spark.operators.features import features_sql
 
     for sf in ("0.001", "0.01"):
         d = f"/root/testdata/sf{sf}"
-        a = (
-            features_df(spark, d, TESTDATA_CONFIG, stats_impl="running")
-            .toPandas()
-            .sort_values(["day", "time"])
-            .reset_index(drop=True)
+        r = compare(
+            features_df(spark, d, TESTDATA_CONFIG), features_sql(TESTDATA_CONFIG), sf_dir=d
         )
-        b = (
-            features_df(spark, d, TESTDATA_CONFIG, stats_impl="frame")
-            .toPandas()
-            .sort_values(["day", "time"])
-            .reset_index(drop=True)
-        )
-        assert list(a.columns) == list(b.columns)
-        assert a.equals(b), sf
+        assert r["ok"], (sf, r["detail"])

@@ -58,70 +58,6 @@ def test_straddling_pair_found(spark, fuzzy_dir):
     assert not any(5 in k for k in keys)
 
 
-# ---------------------------------------------------------------------------
-# MinHash signature-agreement prefilter hook (r07, measured-and-rejected
-# — dedup.py MINHASH_AGREE_MIN). The registered query runs unfiltered;
-# this test pins the property the rejection analysis relied on: on a
-# corpus of planted near-dups, enabling the prefilter at m = 4 or 5
-# loses NO pair the exact-Jaccard verify accepts.
-
-
-@pytest.fixture(scope="module")
-def planted_dir(tmp_path_factory):
-    import random
-
-    rng = random.Random(7)
-    vocab = [f"w{i}" for i in range(400)]
-    rows = []
-    did = 0
-    for base in range(30):
-        words = [rng.choice(vocab) for _ in range(40)]
-        rows.append({"doc_id": did, "text": " ".join(words)})
-        did += 1
-        if base % 3 == 0:  # plant a near-dup: ~12% of words replaced
-            mut = list(words)
-            for _ in range(5):
-                mut[rng.randrange(len(mut))] = rng.choice(vocab)
-            rows.append({"doc_id": did, "text": " ".join(mut)})
-            did += 1
-    for r in rows:
-        r["lang"] = "en"
-        r["source"] = "t"
-        r["n_chars"] = len(r["text"])
-    d = tmp_path_factory.mktemp("planted")
-    pd.DataFrame(rows).to_parquet(d / "documents.parquet")
-    return str(d)
-
-
-def test_agreement_prefilter_loses_no_verified_pair(spark, planted_dir):
-    from strategy_analyzer_exporter_spark.operators.dedup import (
-        _q_dedup_minhash,
-        clear_gram_cache,
-    )
-
-    try:
-        unfiltered = {
-            (r.doc_a, r.doc_b)
-            for r in _q_dedup_minhash(spark, planted_dir, agree_min=0).collect()
-        }
-        assert unfiltered, "corpus must yield planted near-dup pairs"
-        for m in (4, 5):
-            got = {
-                (r.doc_a, r.doc_b)
-                for r in _q_dedup_minhash(
-                    spark, planted_dir, agree_min=m
-                ).collect()
-            }
-            assert got == unfiltered, (
-                f"agree_min={m} changed the verified pair set: "
-                f"lost={unfiltered - got} gained={got - unfiltered}"
-            )
-    finally:
-        # drop ONLY the tmp corpus's cache entries; the shared
-        # sf-fixture caches other dedup tests rely on stay resident
-        clear_gram_cache(planted_dir)
-
-
 def test_incremental_dedup_equals_full_pairs_cross_side(spark):
     """dedup_incremental_minhash (batch-vs-corpus band join) must find
     EXACTLY the full self-join query's verified pairs that straddle the
@@ -146,19 +82,20 @@ def test_incremental_dedup_equals_full_pairs_cross_side(spark):
 
 
 def test_simhash_int_keys_equal_bits_twin(spark):
-    """r14 optimization: the registered integer-band-key SimHash must
-    produce EXACTLY the string-fingerprint twin's pairs+hamming on the
-    real corpora — the int key k_b is the base-2 reading of the string
-    band substring by construction, so any divergence is a bug in the
-    bit packing."""
+    """The registered integer-band-key SimHash must produce EXACTLY the
+    pairs+hamming of its bits twin, the oracle, on the real corpora.
+    The oracle bands and verifies the '0'/'1' fingerprint string; the
+    int key k_b is the base-2 reading of that string's band substring
+    by construction, so any divergence is a bug in the bit packing."""
+    from oracle_harness import compare
+
     from strategy_analyzer_exporter_spark.operators.dedup import (
         _q_dedup_simhash,
     )
+    from strategy_analyzer_exporter_spark.registry import ORACLES
 
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        keys = sorted(tuple(r) for r in _q_dedup_simhash(spark, sf).collect())
-        bits = sorted(
-            tuple(r)
-            for r in _q_dedup_simhash(spark, sf, mode="bits").collect()
-        )
-        assert keys == bits, (sf, len(keys), len(bits))
+        df = _q_dedup_simhash(spark, sf)
+        assert df.count() > 0, sf
+        r = compare(df, ORACLES["dedup_simhash"], sf_dir=sf)
+        assert r["ok"], (sf, r["detail"])

@@ -3,6 +3,7 @@ counts. These guard the 100 TB properties that value-correctness tests
 can't see (SURVEY.md §4)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from strategy_analyzer_exporter_spark import plans as P
 from strategy_analyzer_exporter_spark.operators.features import (
@@ -495,28 +496,44 @@ BROADCAST_HINT_ALLOWLIST: dict[str, object] = {
 }
 
 
-def test_no_forced_broadcast_of_scaling_relations(spark):
+@pytest.fixture(scope="module")
+def registered_plans(spark):
+    """One sweep over every registered batch query: builds each ONCE and
+    records (broadcast hints, unpartitioned windows, active vector
+    kernel) for the two repo-wide plan checks below. Streaming queries
+    are skipped: building one runs a whole stream, and the returned
+    DataFrame is a finished memory-table result with no join or window
+    surface on the batch side."""
+    from strategy_analyzer_exporter_spark.functions import vector
+    from strategy_analyzer_exporter_spark.registry import QUERIES
+
+    kern = vector.kernel()
+    out = {}
+    for name, fn in sorted(QUERIES.items()):
+        if name.startswith("streaming_"):
+            continue
+        q = fn(spark, SF)
+        out[name] = (
+            P.count_broadcast_hints(q),
+            P.count_unpartitioned_windows(q),
+            kern,
+        )
+    return out
+
+
+def test_no_forced_broadcast_of_scaling_relations(registered_plans):
     """Repo-wide broadcast-hint sweep: every registered query's analyzed
     plan must contain EXACTLY the allowlisted hint count (default 0),
     resolved for the ACTIVE vector kernel — a new unvetted hint fails
     under the kernel it is added on, and so does a stale allowlist
     entry after a hint is removed (ADVICE r06; the kernel-keyed form
     closes the r07 review's gap where a flat value set accepted the
-    OTHER kernel's count). Streaming queries are skipped (building one
-    runs a whole stream; their plans carry no joins on the batch
-    side)."""
-    from strategy_analyzer_exporter_spark.functions import vector
-    from strategy_analyzer_exporter_spark.registry import QUERIES
-
-    kern = vector.kernel()
+    OTHER kernel's count)."""
     offenders = {}
-    for name, fn in sorted(QUERIES.items()):
-        if name.startswith("streaming_"):
-            continue
+    for name, (n, _, kern) in registered_plans.items():
         allowed = BROADCAST_HINT_ALLOWLIST.get(name, 0)
         if isinstance(allowed, dict):
             allowed = allowed[kern]
-        n = P.count_broadcast_hints(fn(spark, SF))
         if n != allowed:
             offenders[name] = (n, allowed)
     assert not offenders, offenders
@@ -591,24 +608,15 @@ def test_minhash_exchange_budget(spark):
     assert P.count_exchanges(q) <= 6, P.physical_plan(q)
 
 
-def test_no_registered_query_has_unpartitioned_window(spark):
+def test_no_registered_query_has_unpartitioned_window(registered_plans):
     """No registered query may rank through a WindowExec with an empty
     partition spec — that moves the whole relation to ONE task (the
     q3/q10/vocab defect of VERDICT r03). Global top-k must be
     TakeOrderedAndProject + a constant-key window over the k survivors
-    (functions/topk.py). Streaming queries are skipped: their returned
-    DataFrame is a finished memory-table result with no window surface,
-    and building one runs a whole stream."""
-    from strategy_analyzer_exporter_spark.registry import QUERIES
-
-    offenders = {}
-    for name, fn in sorted(QUERIES.items()):
-        if name.startswith("streaming_"):
-            continue
-        q = fn(spark, SF)
-        n = P.count_unpartitioned_windows(q)
-        if n:
-            offenders[name] = n
+    (functions/topk.py)."""
+    offenders = {
+        name: n for name, (_, n, _) in registered_plans.items() if n
+    }
     assert not offenders, offenders
 
 

@@ -10,6 +10,7 @@ import re
 
 import pandas as pd
 import pyspark.sql.functions as F
+from oracle_harness import compare
 
 from strategy_analyzer_exporter_spark import plans as P
 from strategy_analyzer_exporter_spark.operators.quality import (
@@ -253,17 +254,21 @@ def test_paragraph_dedup_plan_shape(spark):
     assert re.search(r"partial_min\(struct\(doc_id[^)]*para_idx", plan), plan
 
 
-def test_paragraph_dedup_twins_are_identical(spark, tmp_path_factory):
-    """All three shapes — hash (registered default), window, min-struct
-    agg — must produce EXACTLY the same output on the planted corpus
-    (where ties between (doc_id, para_idx) orderings are exercised: the
-    same block appears at different positions in different docs, plus
-    an in-doc duplicate block) AND on the real sf0.001 corpus; the agg
-    twin's plan must contain no Window."""
+def test_paragraph_dedup_hash_equals_window_oracle(spark, tmp_path_factory):
+    """The registered hash-keyed decision must produce EXACTLY the
+    oracle's row_number() over partitionBy(para) output on the planted
+    corpus (where ties between (doc_id, para_idx) orderings are
+    exercised: the same block appears at different positions in
+    different docs, plus an in-doc duplicate block) AND on the real
+    sf0.001 corpus. The planted corpus holds only `documents`, so its
+    oracle runs on a DuckDB view of that one table."""
+    import duckdb
+
     from strategy_analyzer_exporter_spark.operators.pipeline3 import (
         PARA_TOKENS,
         _q_paragraph_dedup,
     )
+    from strategy_analyzer_exporter_spark.registry import ORACLES
 
     def block(prefix):
         return " ".join(f"{prefix}{i}" for i in range(PARA_TOKENS))
@@ -276,18 +281,15 @@ def test_paragraph_dedup_twins_are_identical(spark, tmp_path_factory):
         {"doc_id": 4, "text": f"{B} {B}"},  # in-doc duplicate block
     ]
     sf = _write_docs(tmp_path_factory, "paraskew", rows)
-    for d in (sf, SF):
-        win = sorted(
-            map(tuple, _q_paragraph_dedup(spark, d, mode="window").collect())
-        )
-        agg = sorted(
-            map(tuple, _q_paragraph_dedup(spark, d, mode="agg").collect())
-        )
-        hsh = sorted(map(tuple, _q_paragraph_dedup(spark, d).collect()))
-        assert win == agg
-        assert win == hsh
-    plan = P.physical_plan(_q_paragraph_dedup(spark, SF, mode="agg"))
-    assert "Window" not in plan, plan
+    con = duckdb.connect()
+    con.read_parquet(f"{sf}/documents.parquet").create_view("documents")
+    want = sorted(con.execute(ORACLES["text_paragraph_dedup"]).fetchall())
+    con.close()
+    got = sorted(map(tuple, _q_paragraph_dedup(spark, sf).collect()))
+    assert got == want
+    assert [r[:3] for r in got] == [(1, 2, 2), (2, 2, 0), (3, 1, 0), (4, 2, 0)]
+    r = compare(_q_paragraph_dedup(spark, SF), ORACLES["text_paragraph_dedup"], sf_dir=SF)
+    assert r["ok"], r["detail"]
 
 
 def test_temperature_mixture_broadcasts_plan_not_corpus(spark):
@@ -300,34 +302,19 @@ def test_temperature_mixture_broadcasts_plan_not_corpus(spark):
     assert P.count_exchanges(q) <= 5, plan
 
 
-def test_repetition_signals_agg_equals_window_twin(spark):
-    """r14/r15 optimization: the registered single-tokenize _signals
-    (r15 fused: one kind-tagged explode feeding one count aggregation
-    and one conditional per-doc aggregation) must produce EXACTLY the
-    r14 two-relation agg shape's rows AND the pre-r14
-    lead()/row_number shape's rows on the real corpora — the (cnt
-    DESC, gram ASC) tie-break is encoded as min(struct(-cnt, gram)),
-    and the fused NULL semantics (sum(when(kind...)) over an absent
-    kind) must reproduce the per-kind left joins'. The registered plan
-    must be window-free and must scan `documents` for tokenize ONCE
-    (two scans total: the gram pipeline + the doc_id/lang side)."""
+def test_repetition_signals_map_equals_window_oracle(spark):
+    """The registered one-pass map _signals must produce EXACTLY the
+    oracle's explode + row_number shape on the real corpora — the
+    (cnt DESC, gram ASC) tie-break is a Python min over (-cnt, gram),
+    and single-token docs must reproduce the per-kind left joins' NULLs.
+    The plan must be window-free and must scan `documents` for the map
+    pass ONCE (two scans total: the map pass + the doc_id/lang side)."""
     from strategy_analyzer_exporter_spark.operators.quality import _signals
+    from strategy_analyzer_exporter_spark.registry import ORACLES
 
     for sf in (SF, "/root/testdata/sf0.01"):
-        by_mode = {
-            m: sorted(
-                tuple(r) for r in _signals(spark, sf, mode=m).collect()
-            )
-            for m in ("map", "fused", "agg", "window")
-        }
-        assert (
-            by_mode["map"]
-            == by_mode["fused"]
-            == by_mode["agg"]
-            == by_mode["window"]
-        )
-        default = sorted(tuple(r) for r in _signals(spark, sf).collect())
-        assert default == by_mode["map"]
+        r = compare(_signals(spark, sf), ORACLES["text_repetition_signals"], sf_dir=sf)
+        assert r["ok"], (sf, r["detail"])
     plan = P.physical_plan(_signals(spark, SF))
     assert "Window" not in plan
     scans = [

@@ -568,6 +568,28 @@ def test_fine_assign_kernels_bit_identical(spark, tl_dir, monkeypatch):
     assert len(out["arrow"]) == 450
 
 
+def test_kmeans_memos_key_on_absolute_path(spark, tl_dir, monkeypatch):
+    """A relative and an absolute spelling of the same corpus share one
+    memo entry: the second spelling gets the first one's checkpointed
+    DataFrame back instead of building and checkpointing it again."""
+    import os
+
+    from strategy_analyzer_exporter_spark.functions import vector
+    from strategy_analyzer_exporter_spark.operators.pipeline import (
+        _q_kmeans,
+        two_level_assign,
+    )
+
+    monkeypatch.setenv(vector.KERNEL_ENV, "arrow")
+    rel = os.path.relpath(tl_dir)
+    assert rel != tl_dir
+    flat = _q_kmeans(spark, rel, k=3, hint_cents=False)
+    assert _q_kmeans(spark, tl_dir, k=3, hint_cents=False) is flat
+    tl = two_level_assign(spark, rel, 6)
+    assert two_level_assign(spark, tl_dir, 6) is tl
+    assert tl.count() == 450
+
+
 # ---------------------------------------------------------------------------
 # BPE at production depth — r13 (VERDICT r12 #3)
 
@@ -791,162 +813,3 @@ def test_lm_likelihood_buckets_planted(spark, tmp_path_factory):
         1: ("xx", 4, 6, 10 / 28, 1),
         2: ("xx", 4, 2, 6 / 28, 2),
     }
-
-
-# ---------------------------------------------------------------------------
-# Depth-adaptive hierarchical assignment — r15 (VERDICT r14 #1)
-
-
-def test_hier_split_sql_matches_python():
-    """The oracle derives (k1, k2, k3) with pow/round/ceil over
-    doubles; the Spark side with exact integer arithmetic seeded by a
-    float cbrt. Both apply the same exact integer cube adjustment, so
-    they must agree for every feasible k and threshold — swept over a
-    range plus the cube/square boundary shapes where libm rounding
-    could bite."""
-    import duckdb
-
-    from strategy_analyzer_exporter_spark.operators.pipeline import (
-        _hier_split_ctes,
-        hier_split,
-    )
-
-    ks = list(range(1, 600))
-    ks += [m * m + d for m in (100, 1000, 10**4) for d in (-1, 0, 1)]
-    ks += [m**3 + d for m in (5, 10, 32, 100, 1000) for d in (-1, 0, 1)]
-    ks += [10**6, 10**9, 10**12]
-    con = duckdb.connect()
-    for fm in (1, 4, 32):
-        for k in ks:
-            got = con.execute(
-                "WITH e AS (SELECT 1), "
-                + ",\n".join(_hier_split_ctes(str(k), fm))
-                + " SELECT k1, k2, k3 FROM hs"
-            ).fetchone()
-            assert tuple(got) == hier_split(k, fm), (k, fm)
-
-
-def test_hier_split_degenerate_and_leaf_capacity():
-    """Below the threshold the split is exactly the two-level one plus
-    an identity third level; above it the split is balanced and never
-    loosens the leaf-capacity contract k1·k2·k3 ≥ k."""
-    from strategy_analyzer_exporter_spark.operators.pipeline import (
-        HIER_FLAT_MAX,
-        ceil_sqrt,
-        hier_split,
-        two_level_kc_kf,
-    )
-
-    for k in range(1, 5000):
-        k1, k2, k3 = hier_split(k)
-        assert k1 * k2 * k3 >= k, k
-        if ceil_sqrt(k) <= HIER_FLAT_MAX:
-            kc, kf = two_level_kc_kf(k)
-            assert (k1, k2, k3) == (kc, kf, 1), k
-        else:
-            assert k3 > 1, k
-
-
-def test_hier_assign_degenerate_equals_two_level(spark, tl_dir):
-    """At the default threshold every driver corpus takes the
-    degenerate split, and hier_assign must equal the r13 two-level
-    assignment flattened — the bit-for-bit no-change guarantee for
-    the judged scale factors."""
-    from strategy_analyzer_exporter_spark.operators.pipeline import (
-        hier_assign,
-        two_level_assign,
-        two_level_kc_kf,
-    )
-
-    k = 5
-    _, kf = two_level_kc_kf(k)
-    old = {
-        r["vec_id"]: r["ccid"] * kf + r["fcid"]
-        for r in two_level_assign(spark, tl_dir, k).collect()
-    }
-    new = {
-        r["vec_id"]: r["cid"] for r in hier_assign(spark, tl_dir, k).collect()
-    }
-    assert new == old
-    assert len(new) == 450
-
-
-def test_hier_oracle_degenerate_equals_two_level_oracle(tl_dir):
-    """DuckDB-only: on a degenerate-split corpus the hier body's
-    h_assign must reproduce the two-level body's flattened cid — the
-    identity of the k3=1 third Lloyd level, proven on data."""
-    import duckdb
-
-    from strategy_analyzer_exporter_spark.operators.pipeline import (
-        _SEMDEDUP_K_RAW_SQL,
-        _hier_assign_body,
-        _two_level_assign_body,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{tl_dir}/embeddings.parquet')"
-    )
-    kf_sql = (
-        f"(SELECT CAST(ceil(({_SEMDEDUP_K_RAW_SQL}) / "
-        f"ceil(sqrt({_SEMDEDUP_K_RAW_SQL}))) AS BIGINT) FROM e)"
-    )
-    old = con.execute(
-        f"WITH {_two_level_assign_body(_SEMDEDUP_K_RAW_SQL)}\n"
-        f"SELECT vec_id, ccid * {kf_sql} + fcid AS cid FROM tl_assign "
-        "ORDER BY vec_id"
-    ).fetchall()
-    new = con.execute(
-        f"WITH {_hier_assign_body(_SEMDEDUP_K_RAW_SQL)}\n"
-        "SELECT vec_id, cid FROM h_assign ORDER BY vec_id"
-    ).fetchall()
-    assert old == new and len(new) == 450
-
-
-def test_hier_assign_active_branch_matches_oracle(spark, tl_dir):
-    """The ACTIVE three-level branch, forced with flat_max=1 (the
-    driver corpora never reach it at the default threshold): Spark's
-    hier_assign must equal the DuckDB h_assign body built with the
-    same threshold, under BOTH vector kernels — the full dual-engine,
-    dual-kernel lockstep for the new code path."""
-    import duckdb
-
-    from strategy_analyzer_exporter_spark.functions import vector
-    from strategy_analyzer_exporter_spark.operators.pipeline import (
-        _SEMDEDUP_K_RAW_SQL,
-        _hier_assign_body,
-        hier_assign,
-        hier_split,
-    )
-
-    assert hier_split(5, 1) == (2, 2, 2)  # genuinely three levels
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{tl_dir}/embeddings.parquet')"
-    )
-    oracle = {
-        vid: cid
-        for vid, cid in con.execute(
-            f"WITH {_hier_assign_body(_SEMDEDUP_K_RAW_SQL, flat_max=1)}\n"
-            "SELECT vec_id, cid FROM h_assign"
-        ).fetchall()
-    }
-    assert len(oracle) == 450
-    for kern in ("arrow", "fold"):
-        import os
-
-        prev = os.environ.get(vector.KERNEL_ENV)
-        os.environ[vector.KERNEL_ENV] = kern
-        try:
-            got = {
-                r["vec_id"]: r["cid"]
-                for r in hier_assign(spark, tl_dir, 5, flat_max=1).collect()
-            }
-        finally:
-            if prev is None:
-                os.environ.pop(vector.KERNEL_ENV, None)
-            else:
-                os.environ[vector.KERNEL_ENV] = prev
-        assert got == oracle, kern
