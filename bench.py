@@ -28,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 # headline set: the reference-pipeline equivalent + the heaviest
 # representative of each operator family
@@ -384,6 +384,7 @@ def _summary_builds(spark) -> dict:
     of each summary costs, making the warm numbers interpretable).
     Runs AFTER the headline loop: each memo is cleared for SF_DIR and
     the summary re-materialized through the noop sink once."""
+    from strategy_analyzer_exporter_spark import summaries
     from strategy_analyzer_exporter_spark.operators import dedup as D
     from strategy_analyzer_exporter_spark.operators import pq as PQ
 
@@ -397,22 +398,15 @@ def _summary_builds(spark) -> dict:
         spark.sparkContext.setJobDescription(None)
 
     noop = lambda df: df.write.format("noop").mode("overwrite").save()  # noqa: E731
-    # minhash gram + signature relations (_GRAM_CACHE/_SIG_CACHE; the
-    # sig build consumes the just-built gram cache, so the two numbers
-    # decompose the pipeline the way the caches do)
-    D.clear_gram_cache(SF_DIR)
+    summaries.clear(SF_DIR)
+    # minhash gram + signature relations (the sig build consumes the
+    # just-built gram relation, so the two numbers decompose the
+    # pipeline the way the memo does)
     timed("minhash_gram_rows", lambda: noop(D._gram_rows(spark, SF_DIR)))
     timed("minhash_sig_rows", lambda: noop(D._sig_rows(spark, SF_DIR)))
-    # simhash band-key summary (_SIMKEY_CACHE — swept by
-    # clear_gram_cache above since r15)
     timed("simhash_keys", lambda: noop(D._simhash_keys(spark, SF_DIR)))
     # PQ index (codebooks + codes; localCheckpoint is eager, so the
     # call itself is the build)
-    import os as _os
-
-    norm = _os.path.abspath(SF_DIR)
-    for key in [k for k in PQ._INDEX_CACHE if k[1] == norm]:
-        PQ._INDEX_CACHE.pop(key)
     timed("pq_index", lambda: PQ._pq_index(spark, SF_DIR))
     return out
 

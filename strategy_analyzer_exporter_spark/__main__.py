@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import sys
 import tempfile
 
@@ -84,15 +85,16 @@ def main(argv: list[str] | None = None) -> int:
         )
         from strategy_analyzer_exporter_spark.sinks import export_to_duckdb
 
-        staging = os.path.join(
-            tempfile.mkdtemp(prefix="sae_export_"), "features_parquet"
-        )
-        n = export_to_duckdb(
-            features_df(spark, args.sf_dir),
-            db_path=args.duckdb,
-            table=args.table,
-            staging_dir=staging,
-        )
+        staging = tempfile.mkdtemp(prefix="sae_export_")
+        try:
+            n = export_to_duckdb(
+                features_df(spark, args.sf_dir),
+                db_path=args.duckdb,
+                table=args.table,
+                staging_dir=os.path.join(staging, "features_parquet"),
+            )
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
         print(f"exported {n} rows to {args.duckdb}:{args.table}")
         return 0
     finally:

@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from strategy_analyzer_exporter_spark import summaries
 from strategy_analyzer_exporter_spark.registry import register
 from strategy_analyzer_exporter_spark.sources.tables import load_table
 
@@ -67,42 +68,6 @@ def _shingles_sql(tokens: str, k: int = SHINGLE_K) -> str:
 
 # ---------------------------------------------------------------------------
 # MinHash + LSH
-
-
-# (sf_dir, k) → persisted gram relation. A keyed cache, not a per-call
-# persist: dedup queries are re-invoked (bench warm-ups, repeated driver
-# runs), and persisting a NEW copy per call leaked one cached RDD into
-# executor memory every invocation. Bounded by eviction below.
-# _SIG_CACHE holds the MinHash signature relation (one ~420-byte row per
-# doc) the same way: four plan subtrees consume it (two band-join sides
-# + two Jaccard size lookups), and without the cache Spark computes the
-# gram→signature aggregation once PER subtree — the broadcast build side
-# of the band join cannot reuse the probe side's shuffle stage.
-_GRAM_CACHE: dict[tuple[str, int], DataFrame] = {}
-_SIG_CACHE: dict[tuple[str, int], DataFrame] = {}
-_GRAM_CACHE_MAX = 4  # ≥ #(sf_dir, k) combos live at once (2 per sf_dir)
-
-
-def clear_gram_cache(sf_dir: str | None = None) -> None:
-    """Unpersist cached gram/signature relations (test/bench hygiene).
-    With ``sf_dir``, drop only that corpus's entries — tests staging
-    throwaway tmp corpora use this so the shared sf-fixture caches the
-    rest of the session relies on stay resident. ``sf_dir`` is
-    normalized the same way the cache keys are built (ADVICE r07: a
-    relative-vs-absolute spelling of the same path must not silently
-    clear nothing and leak the persisted relations)."""
-    import os
-
-    norm = os.path.abspath(sf_dir) if sf_dir is not None else None
-    for cache in (_GRAM_CACHE, _SIG_CACHE):
-        for key in [k for k in cache if norm is None or k[0] == norm]:
-            cache.pop(key).unpersist()
-    # batch-gram and simhash-key cache keys are (applicationId,
-    # abspath) — path at [1] (ADVICE r14: _SIMKEY_CACHE was not
-    # covered by this sweep, leaving tmp-corpus relations persisted)
-    for cache in (_BATCH_GRAM_CACHE, _SIMKEY_CACHE):
-        for key in [k for k in cache if norm is None or k[1] == norm]:
-            cache.pop(key).unpersist()
 
 
 def _shingle_gen(k: int):
@@ -155,39 +120,33 @@ def _gram_rows(spark: SparkSession, sf_dir: str, k: int = SHINGLE_K) -> DataFram
     intersection probes, size counts) consume it, and caching one copy
     beats recomputing the scan+shingle fan-out — exactly a materialized
     CTE, which is what the DuckDB oracle does with its `sh` CTE."""
-    import os
 
-    key = (os.path.abspath(sf_dir), k)
-    cached = _GRAM_CACHE.get(key)
-    if cached is not None:
-        return cached
-    d = load_table(spark, sf_dir, "documents")
-    # the test corpus is one small parquet file → one input partition;
-    # spread the shingling across cores. Round-robin, not keyed: the
-    # CACHE-VISIBLE partitioning is established after shingling below.
-    # (At real scale the scan already yields many partitions; results
-    # are partitioning-independent.)
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    gen = _shingle_gen(k)
-    # hash-partition the gram rows by doc_id AFTER shingling, so the
-    # PERSISTED relation advertises hashpartitioning(doc_id) to
-    # Catalyst (mapInPandas output partitioning is opaque — without
-    # this, every doc_id-keyed consumer re-shuffles the full gram
-    # relation). With it, the signature aggregation and the Jaccard
-    # verify's doc_a side reuse the cached layout exchange-free, and
-    # joins on (doc_b, gram) co-partition by shuffling only the SMALL
-    # candidate-pair side to match (VERDICT r05 #8: the verify's t10
-    # tail was exactly these two full-gram shuffles). One keyed gram
-    # shuffle at cache-build time buys zero per-query gram shuffles.
-    out = (
-        d.mapInPandas(gen, "doc_id bigint, gram string")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .persist()
-    )
-    if len(_GRAM_CACHE) >= _GRAM_CACHE_MAX:
-        _GRAM_CACHE.pop(next(iter(_GRAM_CACHE))).unpersist()
-    _GRAM_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        # the test corpus is one small parquet file → one input
+        # partition; spread the shingling across cores. Round-robin, not
+        # keyed: the CACHE-VISIBLE partitioning is established after
+        # shingling below. (At real scale the scan already yields many
+        # partitions; results are partitioning-independent.)
+        d = d.repartition(spark.sparkContext.defaultParallelism)
+        # hash-partition the gram rows by doc_id AFTER shingling, so the
+        # PERSISTED relation advertises hashpartitioning(doc_id) to
+        # Catalyst (mapInPandas output partitioning is opaque — without
+        # this, every doc_id-keyed consumer re-shuffles the full gram
+        # relation). With it, the signature aggregation and the Jaccard
+        # verify's doc_a side reuse the cached layout exchange-free, and
+        # joins on (doc_b, gram) co-partition by shuffling only the
+        # SMALL candidate-pair side to match (the verify's tail was
+        # exactly these two full-gram shuffles).
+        # One keyed gram shuffle at cache-build time buys zero per-query
+        # gram shuffles.
+        return (
+            d.mapInPandas(_shingle_gen(k), "doc_id bigint, gram string")
+            .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+            .persist()
+        )
+
+    return summaries.get_or_build("grams", spark, sf_dir, (k,), build)
 
 
 def _sig_rows(spark: SparkSession, sf_dir: str, k: int = SHINGLE_K) -> DataFrame:
@@ -198,20 +157,21 @@ def _sig_rows(spark: SparkSession, sf_dir: str, k: int = SHINGLE_K) -> DataFrame
     self-join's two sides scan this cache instead of re-aggregating the
     multi-TB gram relation per side (VERDICT r04 #4 exchange diet). At
     100 TB the signature relation is ~1 row/doc — orders of magnitude
-    smaller than the grams it summarizes; MEMORY_AND_DISK spills fine."""
-    import os
-
-    key = (os.path.abspath(sf_dir), k)
-    cached = _SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
-    grams = _gram_rows(spark, sf_dir, k)
-    sigs = grams.groupBy("doc_id").agg(*_sig_agg_exprs())
-    out = sigs.persist()
-    if len(_SIG_CACHE) >= _GRAM_CACHE_MAX:
-        _SIG_CACHE.pop(next(iter(_SIG_CACHE))).unpersist()
-    _SIG_CACHE[key] = out
-    return out
+    smaller than the grams it summarizes; MEMORY_AND_DISK spills fine.
+    Without the persist Spark recomputes the aggregation once per
+    consuming subtree (two band-join sides + two size lookups): the
+    band join's broadcast build side cannot reuse the probe side's
+    shuffle stage."""
+    return summaries.get_or_build(
+        "sigs",
+        spark,
+        sf_dir,
+        (k,),
+        lambda: _gram_rows(spark, sf_dir, k)
+        .groupBy("doc_id")
+        .agg(*_sig_agg_exprs())
+        .persist(),
+    )
 
 
 def _verify_jaccard(
@@ -468,10 +428,6 @@ def _simhash_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hx.groupBy("doc_id").agg(*aggs)
 
 
-_SIMKEY_CACHE: dict = {}
-_SIMKEY_CACHE_MAX = 4
-
-
 def _simhash_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, k0..k{SIMHASH_BANDS-1}) — the fingerprint as one int per
     16-bit band, straight from the votes (r14, guide §2.3 narrower
@@ -487,31 +443,21 @@ def _simhash_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtree is ~0.3 s of the query's ~0.8 s at sf0.1, paid twice). The
     cached relation is ~1 row/doc of 5 ints — the corpus summary, not
     the corpus."""
-    import os
 
-    # (applicationId, abspath) like _BATCH_GRAM_CACHE (ADVICE r14: an
-    # abspath-only key would return a persisted DataFrame bound to a
-    # dead session after a Spark restart in the same process)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _SIMKEY_CACHE.get(key)
-    if cached is not None:
-        return cached
-    band_w = SIMHASH_BITS // SIMHASH_BANDS
-    votes = _simhash_votes(spark, sf_dir)
-    keys = []
-    for b in range(SIMHASH_BANDS):
-        k = F.lit(0)
-        for j in range(band_w):
-            p = b * band_w + j
-            k = k + F.when(
-                F.col(f"v{p}") > 0, F.lit(1 << (band_w - 1 - j))
-            ).otherwise(F.lit(0))
-        keys.append(k.cast("int").alias(f"k{b}"))
-    out = votes.select("doc_id", *keys).persist()
-    if len(_SIMKEY_CACHE) >= _SIMKEY_CACHE_MAX:
-        _SIMKEY_CACHE.pop(next(iter(_SIMKEY_CACHE))).unpersist()
-    _SIMKEY_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        band_w = SIMHASH_BITS // SIMHASH_BANDS
+        keys = []
+        for b in range(SIMHASH_BANDS):
+            k = F.lit(0)
+            for j in range(band_w):
+                p = b * band_w + j
+                k = k + F.when(
+                    F.col(f"v{p}") > 0, F.lit(1 << (band_w - 1 - j))
+                ).otherwise(F.lit(0))
+            keys.append(k.cast("int").alias(f"k{b}"))
+        return _simhash_votes(spark, sf_dir).select("doc_id", *keys).persist()
+
+    return summaries.get_or_build("simhash_keys", spark, sf_dir, (), build)
 
 
 _SIMHASH_CTE = f"""toks AS (
@@ -937,13 +883,6 @@ def _idx_derivation() -> str:
         f"code={hashlib.md5(code.encode()).hexdigest()[:12]}"
     )
 
-#: (applicationId, abspath(sf_dir), k, batch pred SQL) → persisted
-#: batch gram relation; the batch side feeds three subtrees (band keys,
-#: verify's doc_b join, sizes) — same keyed-eviction convention as
-#: _GRAM_CACHE. (The r09 annotation said 2-tuple while the keys were
-#: 3-tuples — ADVICE r09; now 4 with the lifecycle query's batch pred.)
-_BATCH_GRAM_CACHE: dict[tuple[str, str, int, str], DataFrame] = {}
-
 
 def _batch_grams(
     spark: SparkSession,
@@ -954,29 +893,24 @@ def _batch_grams(
     """Gram rows for the INCOMING batch only (default: doc_id %
     BATCH_MOD == 0; the lifecycle query narrows it to the not-yet-
     appended split): the ingest path shingles just the new documents —
-    the at-rest index supplies everything corpus-side."""
-    import os
-
+    the at-rest index supplies everything corpus-side. Persisted: the
+    batch side feeds three subtrees (band keys, the verify's doc_b join,
+    sizes)."""
     if pred_sql is None:
         pred_sql = f"doc_id % {BATCH_MOD} = 0"
-    # k and the pred are part of the key like _GRAM_CACHE's (r09
-    # review: a k=5 call after a k=SHINGLE_K call must not return the
-    # wrong shingles)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), k, pred_sql)
-    cached = _BATCH_GRAM_CACHE.get(key)
-    if cached is not None:
-        return cached
-    d = load_table(spark, sf_dir, "documents").filter(F.expr(pred_sql))
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    out = (
-        d.mapInPandas(_shingle_gen(k), "doc_id bigint, gram string")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .persist()
+
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents").filter(F.expr(pred_sql))
+        d = d.repartition(spark.sparkContext.defaultParallelism)
+        return (
+            d.mapInPandas(_shingle_gen(k), "doc_id bigint, gram string")
+            .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+            .persist()
+        )
+
+    return summaries.get_or_build(
+        "batch_grams", spark, sf_dir, (k, pred_sql), build
     )
-    if len(_BATCH_GRAM_CACHE) >= _GRAM_CACHE_MAX:
-        _BATCH_GRAM_CACHE.pop(next(iter(_BATCH_GRAM_CACHE))).unpersist()
-    _BATCH_GRAM_CACHE[key] = out
-    return out
 
 
 #: (short label, DDL, bucket columns) for the three index tables —
@@ -2103,9 +2037,6 @@ def run_stream_index_ingest(
         q.stop()
 
 
-_STREAM_IDX_CACHE: dict = {}
-
-
 def _q_streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end streaming lifecycle: base index (corpus only) →
     STREAM the lifecycle's appended split in 3 micro-batches, each
@@ -2121,14 +2052,13 @@ def _q_streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     to base — the stream genuinely runs (and its epochs genuinely
     commit) in every session, memoized within the session like the
     k-means assignment."""
-    import os as _os
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    tables = _STREAM_IDX_CACHE.get(key)
-    if tables is None:
+    def build() -> tuple[str, str, str]:
         tables = dedup_index_tables(spark, sf_dir, name_extra="stream")
         run_stream_index_ingest(spark, sf_dir, tables)
-        _STREAM_IDX_CACHE[key] = tables
+        return tables
+
+    tables = summaries.get_or_build("stream_index", spark, sf_dir, (), build)
     return _at_rest_incremental(
         spark, sf_dir, tables, batch_pred_sql=_LC_BATCH_PRED
     )

@@ -956,9 +956,9 @@ _WAV_DIR_CACHE: dict[str, str] = {}
 
 #: abspath(sf_dir) → sorted doc-id list (shared by the file-per-record
 #: and packed-shard stagings so two media-source queries in one bench
-#: run cost ONE fingerprint job, not two). Keys normalized like the
-#: dedup gram cache (ADVICE r07): a relative spelling must not fork a
-#: second cache entry and re-run the collect.
+#: run cost ONE fingerprint job, not two). Keys are absolute paths: a
+#: relative spelling must not fork a second cache entry and re-run the
+#: collect.
 _DOC_IDS_CACHE: dict[str, list[int]] = {}
 
 

@@ -31,6 +31,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from strategy_analyzer_exporter_spark import summaries
 from strategy_analyzer_exporter_spark.functions import (
     TOKENS_SQL as _TOKENS_SQL,
 )
@@ -342,10 +343,6 @@ def kmeans_update_from_v(assigned_v: DataFrame) -> DataFrame:
     )
 
 
-# Converged-assignment memo, keyed like pq.py's _INDEX_CACHE.
-_KMEANS_CACHE: dict = {}
-
-
 def _q_kmeans(
     spark: SparkSession,
     sf_dir: str,
@@ -387,35 +384,32 @@ def _q_kmeans(
         return kmeans_assign(e, cents, hint_cents).select("vec_id", "cid")
     # production path: centroids live on the driver between rounds
     # (k×dim doubles — collect() returns exact binary doubles). The
-    # converged assignment is memoized per (session, corpus, kernel)
-    # like the PQ index (pq.py _pq_index) — clustering is built once
-    # and consumed many times; checkpointed DataFrames stay valid for
-    # the life of the Spark application. Each round is ONE job: the
+    # converged assignment is a session summary — clustering is built
+    # once and consumed many times; checkpointed DataFrames stay valid
+    # for the life of the Spark application. Each round is ONE job: the
     # fused assign emits (cid, v) from a single map pass and the update
     # partial-aggregates it, with no vec_id join. Cache e for the
     # iteration phase, materialize the final assignment WHILE the cache
     # is hot (localCheckpoint, eager), then unpersist.
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        vector.kernel(),
-        k,
+    def build() -> DataFrame:
+        e.persist()
+        try:
+            rows = cents.collect()
+            for _ in range(KM_ITERS):
+                rows = kmeans_update_from_v(
+                    kmeans_assign_stream(e, rows, with_v=True).select("cid", "v")
+                ).collect()
+            return (
+                kmeans_assign_stream(e, rows)
+                .select("vec_id", "cid")
+                .localCheckpoint()
+            )
+        finally:
+            e.unpersist()
+
+    return summaries.get_or_build(
+        "kmeans", spark, sf_dir, (vector.kernel(), k), build
     )
-    cached = _KMEANS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    e = e.persist()
-    try:
-        rows = cents.collect()
-        for _ in range(KM_ITERS):
-            rows = kmeans_update_from_v(
-                kmeans_assign_stream(e, rows, with_v=True).select("cid", "v")
-            ).collect()
-        out = kmeans_assign_stream(e, rows).select("vec_id", "cid").localCheckpoint()
-    finally:
-        e.unpersist()
-    _KMEANS_CACHE[key] = out
-    return out
 
 
 def _kmeans_assign_body(k_sql: str | None = None) -> str:
@@ -664,10 +658,6 @@ def _fine_rounds(ev: DataFrame, kf: int) -> DataFrame:
     return fine_assign(ev, fc)
 
 
-# Converged two-level assignment memo, keyed like _KMEANS_CACHE.
-_TWO_LEVEL_CACHE: dict = {}
-
-
 def two_level_assign(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """(vec_id, ccid, fcid): the converged two-level assignment at
     kc = ⌈√k⌉ coarse cells × kf = ⌈k/kc⌉ fine centroids per cell.
@@ -699,26 +689,21 @@ def two_level_assign(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         # eager checkpoints truncate per-round lineage, final assign
         # stays inspectable)
         return _fine_rounds(ev, kf)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        vector.kernel(),
-        k,
+
+    def build() -> DataFrame:
+        ev.persist()
+        try:
+            return (
+                _fine_rounds(ev, kf)
+                .select("vec_id", "ccid", "fcid")
+                .localCheckpoint()
+            )
+        finally:
+            ev.unpersist()
+
+    return summaries.get_or_build(
+        "two_level", spark, sf_dir, (vector.kernel(), k), build
     )
-    cached = _TWO_LEVEL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    ev = ev.persist()
-    try:
-        out = (
-            _fine_rounds(ev, kf)
-            .select("vec_id", "ccid", "fcid")
-            .localCheckpoint()
-        )
-    finally:
-        ev.unpersist()
-    _TWO_LEVEL_CACHE[key] = out
-    return out
 
 
 def _fine_chain_sql(kf_sql: str) -> str:

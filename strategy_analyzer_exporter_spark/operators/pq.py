@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from strategy_analyzer_exporter_spark import summaries
 from strategy_analyzer_exporter_spark.functions import davg_sql
 from strategy_analyzer_exporter_spark.functions.topk import ranked_init
 from strategy_analyzer_exporter_spark.registry import register
@@ -74,41 +75,33 @@ def _codebook(sub: DataFrame) -> DataFrame:
     return kmeans_update(assigned, sub).localCheckpoint()
 
 
-# The index (per-subspace codebooks + per-vector codes) is built once
-# per (session, corpus, kernel) and memoized — a PQ index is
-# constructed once and queried many times; repeated query builds must
-# pay the ~20-job Lloyd/encode cost only the first time. Checkpointed
-# DataFrames stay valid for the life of the Spark application.
-_INDEX_CACHE: dict = {}
-
-
 def _pq_index(spark: SparkSession, sf_dir: str):
-    import os
-
+    """(codes, codebooks): the per-vector codes and the per-subspace
+    codebooks, built once per session, corpus and kernel — a PQ index
+    is constructed once and queried many times, so repeated query
+    builds pay the ~20-job Lloyd/encode cost only the first time.
+    Checkpointed DataFrames stay valid for the life of the Spark
+    application."""
     from strategy_analyzer_exporter_spark.functions import vector
     from strategy_analyzer_exporter_spark.operators.pipeline import kmeans_assign
 
-    # abspath-normalized like the dedup gram cache (ADVICE r08): a
-    # relative spelling of the same corpus must not fork a duplicate
-    # ~20-job Lloyd/encode build and leak its localCheckpoint lineage
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-           vector.kernel())
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    emb = load_table(spark, sf_dir, "embeddings")
-    codes = None
-    cbs = []
-    for m in range(PQ_M):
-        sub = _subspace(emb, m)
-        cb = _codebook(sub)
-        cbs.append(cb)
-        code_m = kmeans_assign(sub, cb).select(
-            "vec_id", F.col("cid").alias(f"code{m}")
-        )
-        codes = code_m if codes is None else codes.join(code_m, "vec_id")
-    codes = codes.localCheckpoint()
-    _INDEX_CACHE[key] = (codes, cbs)
-    return codes, cbs
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings")
+        codes = None
+        cbs = []
+        for m in range(PQ_M):
+            sub = _subspace(emb, m)
+            cb = _codebook(sub)
+            cbs.append(cb)
+            code_m = kmeans_assign(sub, cb).select(
+                "vec_id", F.col("cid").alias(f"code{m}")
+            )
+            codes = code_m if codes is None else codes.join(code_m, "vec_id")
+        return codes.localCheckpoint(), cbs
+
+    return summaries.get_or_build(
+        "pq_index", spark, sf_dir, (vector.kernel(),), build
+    )
 
 
 def _adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,31 +418,29 @@ def _fullv(emb: DataFrame) -> DataFrame:
 def _coarse_index(spark: SparkSession, sf_dir: str):
     """(cells, cents): per-vector cell assignment + the coarse centroid
     relation, memoized like the PQ index (built once, probed many)."""
-    import os
-
     from strategy_analyzer_exporter_spark.functions import vector
     from strategy_analyzer_exporter_spark.operators.pipeline import (
         kmeans_assign,
         kmeans_update,
     )
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-           vector.kernel(), "ivf")
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    fv = _fullv(load_table(spark, sf_dir, "embeddings"))
-    c0 = ranked_init(fv, "vec_id", IVF_CELLS, "cid").select(
-        "cid", F.col("v").alias("cv")
+    def build():
+        fv = _fullv(load_table(spark, sf_dir, "embeddings"))
+        c0 = ranked_init(fv, "vec_id", IVF_CELLS, "cid").select(
+            "cid", F.col("v").alias("cv")
+        )
+        assigned = kmeans_assign(fv, c0).select("vec_id", "cid")
+        cents = kmeans_update(assigned, fv).localCheckpoint()
+        cells = (
+            kmeans_assign(fv, cents)
+            .select("vec_id", F.col("cid").alias("cell"))
+            .localCheckpoint()
+        )
+        return cells, cents
+
+    return summaries.get_or_build(
+        "ivf_index", spark, sf_dir, (vector.kernel(),), build
     )
-    assigned = kmeans_assign(fv, c0).select("vec_id", "cid")
-    cents = kmeans_update(assigned, fv).localCheckpoint()
-    cells = (
-        kmeans_assign(fv, cents)
-        .select("vec_id", F.col("cid").alias("cell"))
-        .localCheckpoint()
-    )
-    _INDEX_CACHE[key] = (cells, cents)
-    return cells, cents
 
 
 def _q_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 # Spark 4's EliminateWindowPartitions folds constant window partition
 # keys away — turning the deliberate `partitionBy(lit(0))` that
 # functions/topk.py uses on k-row relations back into an UNPARTITIONED
@@ -51,16 +49,24 @@ def get_spark(
 
     Settings that matter at scale (100 TB design point):
     - AQE + coalesce + skew-join handling enabled.
-    - shuffle partitions sized from the environment rather than the
-      Spark default of 200.
+    - shuffle partitions sized to the cores rather than the Spark
+      default of 200.
+
+    Cores and driver heap fit the host unless ``SPARK_GRAFT_CPUS`` /
+    ``SPARK_GRAFT_DRIVER_MEM`` say otherwise: every core this process
+    may run on, and a third of physical memory capped at 8 GiB — the
+    rest is left to the Python workers (Arrow batches, pandas frames)
+    and DuckDB, which all live outside the JVM heap.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(mem // 3, 8 << 30) >> 20}m"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -68,11 +74,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode = driver-only, so this is the whole executor heap;
-        # 16g showed GC-bound bimodal latency (2s vs 50s on identical
-        # plans) once several heavy queries shared a session — 48g keeps
-        # old-gen churn out of the measurement on the 128 GiB test host
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # local mode = driver-only, so this is the whole executor heap
+        .config("spark.driver.memory", heap)
         # whole-stage codegen emits one compiled class per plan stage;
         # a session that runs the full 100-query registry (or the 14
         # headline bench plans with warm-ups) overflows the JVM-17

@@ -60,3 +60,50 @@ def test_ingest_parquet_to_duckdb_quoted_path(tmp_path):
     finally:
         con.close()
     assert rows == [(7, 1), (7, 1), (7, 2), (7, 2), (7, 3), (7, 3)]
+
+
+def test_cli_export_ingests_features_and_removes_staging(spark, tmp_path, monkeypatch):
+    """``export`` end to end on the active session: the DuckDB table
+    holds every feature row, and the parquet staging copy is gone."""
+    import tempfile
+
+    import duckdb
+
+    from strategy_analyzer_exporter_spark.__main__ import main
+    from strategy_analyzer_exporter_spark.operators.features import features_df
+
+    sf = "/root/testdata/sf0.001"
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    db = str(tmp_path / "out.duckdb")
+
+    assert main(["export", "--sf-dir", sf, "--duckdb", db]) == 0
+    con = duckdb.connect(db)
+    try:
+        n = con.execute("SELECT count(*) FROM features").fetchone()[0]
+    finally:
+        con.close()
+    assert n == features_df(spark, sf).count() > 0
+    assert not list(tmp_path.glob("sae_export_*"))
+    assert not spark.sparkContext._jsc.sc().isStopped()
+
+
+def test_cli_export_unwritable_target_raises_and_removes_staging(
+    spark, tmp_path, monkeypatch
+):
+    """A --duckdb path under a regular file cannot be created: the
+    error reaches the caller and the staging copy is still removed."""
+    import tempfile
+
+    import duckdb
+    import pytest
+
+    from strategy_analyzer_exporter_spark.__main__ import main
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("")
+
+    with pytest.raises(duckdb.IOException, match="not_a_dir"):
+        main(["export", "--sf-dir", "/root/testdata/sf0.001",
+              "--duckdb", str(blocker / "out.duckdb")])
+    assert not list(tmp_path.glob("sae_export_*"))

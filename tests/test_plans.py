@@ -599,10 +599,10 @@ def test_minhash_exchange_budget(spark):
     the one-time gram/signature cache builds. Budget ≤ 6 distinct
     exchanges (measured 2 warm at sf0.001; headroom for AQE SMJ
     fallbacks at larger sf)."""
-    from strategy_analyzer_exporter_spark.operators import dedup
+    from strategy_analyzer_exporter_spark import summaries
     from strategy_analyzer_exporter_spark.registry import QUERIES
 
-    dedup.clear_gram_cache()
+    summaries.clear()
     q = QUERIES["dedup_minhash_lsh"](spark, SF)
     q.write.format("noop").mode("overwrite").save()
     assert P.count_exchanges(q) <= 6, P.physical_plan(q)

@@ -108,14 +108,11 @@ def test_streamed_index_equals_batch_lifecycle_output(spark):
 def test_stream_rerun_is_idempotent_per_session(spark):
     """Running the stream twice over the same staged files commits
     nothing new: every batch's predicate is already in the chain."""
-    from strategy_analyzer_exporter_spark.operators import dedup as D
+    from strategy_analyzer_exporter_spark import summaries
 
-    key = next(iter(D._STREAM_IDX_CACHE), None)
-    tables = (
-        D._STREAM_IDX_CACHE[key]
-        if key
-        else dedup_index_tables(spark, SF, name_extra="stream")
-    )
+    tables = summaries.get(
+        "stream_index", spark, SF
+    ) or dedup_index_tables(spark, SF, name_extra="stream")
     ok, preds_before = epochs.chain_state(_idx_dirs(tables))
     if not (ok and len(preds_before) == 3):
         pytest.skip("stream fork not populated in this session")
