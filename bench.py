@@ -121,9 +121,8 @@ PROBE_QUERIES = (
     "corpus_clean_pipeline",
     "similarity_bruteforce_topk",
     "kmeans_embeddings",
-    # pair-shaped ANN (r03 regression pair): measured under BOTH pair
-    # kernels by _scale_probe so the column-UDF-vs-fold trade-off
-    # documented in functions/vector.py is data, not argument
+    # pair-shaped ANN (r03 regression pair): the banded bucket +
+    # Catalyst-fold re-rank shape documented in functions/vector.py
     "similarity_lsh_ann",
     "similarity_pq_adc",
     # r05 analytics wave (VERDICT r04 #8): the post-broadcast-fix join
@@ -320,7 +319,6 @@ PROBE_QUERIES = (
     # t1). Full MFPT cost curve: docs/BENCH_NOTES.md §r07.
     "streaming_features",
 )
-PAIR_KERNEL_PROBE = ("similarity_lsh_ann",)
 
 # VERDICT r09 #5: the flat-exponent at-rest family gets a THIRD decade.
 # Every scale claim so far rests on 1×/10×; for layouts whose whole
@@ -749,29 +747,6 @@ def _scale_probe(spark, queries) -> dict:
         probe[name] = _probe_one(
             spark, queries[name], dirs100 if name in PROBE100_QUERIES else dirs
         )
-        if name in PAIR_KERNEL_PROBE:
-            # measure the OTHER pair kernel too (kernel choice happens
-            # at query-build time, so flip the env and rebuild)
-            from strategy_analyzer_exporter_spark.functions import vector
-
-            if vector.kernel() == "fold":
-                # the global fold override wins inside pair_cosine/
-                # pair_bucket, so a flipped pair-kernel env would be a
-                # silent no-op and the [pair=arrow] label a lie — skip
-                continue
-            active = vector.pair_kernel()
-            other = "arrow" if active == "fold" else "fold"
-            prev = os.environ.get(vector.PAIR_KERNEL_ENV)
-            os.environ[vector.PAIR_KERNEL_ENV] = other
-            try:
-                probe[f"{name}[pair={other}]"] = _probe_one(
-                    spark, queries[name], dirs
-                )
-            finally:
-                if prev is None:
-                    os.environ.pop(vector.PAIR_KERNEL_ENV, None)
-                else:
-                    os.environ[vector.PAIR_KERNEL_ENV] = prev
     return probe
 
 

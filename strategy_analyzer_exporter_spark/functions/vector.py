@@ -1,55 +1,48 @@
-"""Dual-path vector kernels (dot / cosine / squared-L2 / LSH bucket).
+"""Vector kernels (dot / cosine / squared-L2 / LSH bucket): one path
+per call shape, chosen by the call site.
 
-Two interchangeable, **bit-identical** execution paths:
+Every path performs, per row, the exact sequence of correctly-rounded
+IEEE-754 double ops (widen to double, multiply, left-fold add from
+0.0, sqrt, divide) that the DuckDB ``list_reduce`` oracle performs, so
+float parity holds whichever shape a query uses. The numpy paths get
+it from a COLUMN-WISE left fold — ``acc = acc + prods[:, d]`` for
+d = 0..dim-1 (:func:`fold_sum`); the Catalyst path from ``zip_with`` +
+``aggregate``. The two are asserted bit-exact in
+tests/test_vector_kernels.py.
 
-- ``arrow`` (default, production): vectorized numpy. The per-row
-  reduction is a COLUMN-WISE left fold — ``acc = acc + prods[:, d]``
-  for d = 0..dim-1 — which performs, for every row, the exact sequence
-  of correctly-rounded IEEE-754 double ops (widen to double, multiply,
-  left-fold add from 0.0, sqrt, divide) that the Catalyst fold and the
-  DuckDB ``list_reduce`` oracle perform, so float parity is preserved
-  (asserted bit-exact in tests/test_vector_kernels.py).
-- ``fold``: pure-Catalyst ``zip_with`` + ``aggregate`` expressions —
-  no Python workers at all. Select with
-  ``SPARK_GRAFT_VECTOR_KERNEL=fold``; the oracle-shaped reference
-  path and the fallback for environments without Arrow.
+The three shapes, and what the 1×/10×/100× probe measured for each
+(local[32], embeddings 2k→200k rows, min-of-3 warm):
 
-What the 1×/10×/100× probe measured (local[32], embeddings 2k→200k
-rows, min-of-3 warm):
-
-- The column-UDF form of the arrow path (``cosine(a, b)`` on pair
-  rows) pays Arrow transfer of BOTH vectors per pair — it wins where
-  the per-row compute is heavy (the 8-plane LSH ``bucket``: 2-3×
-  faster) and loses where pairs are cheap but numerous.
-- The decisive production shape is the STREAMED kernel
-  (``mapInPandas`` with the small side — query matrix, centroids — in
-  the UDF closure; see similarity._bruteforce_scored_stream and
-  pipeline.kmeans_assign_stream): the corpus crosses the Arrow
-  boundary once, not once per pair. Measured flat 0.88→0.95 s from 1×
-  to 100× pair count (exponent ≈ 0.02) while the Catalyst fold grew
-  1.23→2.07 s and keeps growing linearly in pairs with a ~100 µs/pair
-  interpreted cost that would dominate at 100 TB.
-
-So: streamed-numpy for the O(n·k) scoring loops, column-UDF numpy for
-per-row signatures, Catalyst fold for oracle work — all three
-bit-identical, switchable per session.
-
-One nuance for PAIR-shaped scoring (LSH re-rank, embedding-cosine
-dedup), where both sides are large and neither fits a closure: the
-column UDF wins at bench scale (fewer interpreted ops), but it ships
-both vectors through Arrow per pair while the Catalyst fold computes
-in place with zero serialization — at extreme candidate volumes the
-fold can be the right pick, which is exactly why it stays one env
-var away. The structural fix at scale is to shrink the pair stream
-itself (tighter bands, or PQ/ADC where candidates carry codes, not
-vectors — see operators/pq.py).
+- **Per-row signatures and query-side distances** — a numpy column
+  ``pandas_udf`` (:func:`sqdist`, :func:`bucket`). The per-row compute
+  is heavy enough to repay the Arrow round-trip: the 8-plane LSH
+  bucket runs 2-3× faster than the Catalyst fold.
+- **Streamed O(n·k) scoring** — ``mapInPandas`` (or a cogroup) with
+  the small side (query matrix, centroids) in the UDF closure, built
+  from :func:`stack` and :func:`fold_sum`
+  (similarity._bruteforce_scored_stream, pipeline.kmeans_assign_stream,
+  pipeline.fine_assign). The corpus crosses the Arrow boundary once,
+  not once per pair: flat 0.88→0.95 s from 1× to 100× pair count
+  (exponent ≈ 0.02), while the Catalyst fold grew 1.23→2.07 s, linear
+  in pairs at ~100 µs/pair interpreted.
+- **Pair-shaped re-rank and banded buckets** — the Catalyst fold
+  (:func:`fold_cosine`, :func:`fold_bucket`). Both sides are large and
+  joined into pair rows, so no side fits a closure, and a column UDF
+  would ship BOTH 64-dim vectors through Arrow per pair while the fold
+  computes in place. Candidates per query are bounded by the banding
+  (corpus/2^bits per bucket), so the per-pair cost stays small: the
+  whole banded query (bucket + re-rank) ran 0.35 s all-fold vs 0.67 s
+  with the numpy kernels at 1×, 0.74 s vs 1.60 s at 10× (reused plan,
+  warm), because an 8-plane codegen dot fold is cheap while each
+  Python stage pays a fixed Arrow round-trip. The structural fix at
+  extreme pair volume is to shrink the pair stream itself (PQ/ADC,
+  where candidates carry 4 codes instead of vectors — operators/pq.py).
 """
 
 # NOTE: no `from __future__ import annotations` here — pandas_udf
 # resolves the pd.Series type hints at definition time, and PEP-563
 # stringified hints defeat that inference.
 
-import os
 from functools import lru_cache
 
 import numpy as np
@@ -57,37 +50,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-KERNEL_ENV = "SPARK_GRAFT_VECTOR_KERNEL"
-
-
-def kernel() -> str:
-    """Active kernel: ``arrow`` (default) or ``fold``."""
-    k = os.environ.get(KERNEL_ENV, "arrow")
-    return k if k in ("arrow", "fold") else "arrow"
-
-
-PAIR_KERNEL_ENV = "SPARK_GRAFT_PAIR_KERNEL"
-
-
-def pair_kernel() -> str:
-    """Kernel for PAIR-shaped scoring (both sides large, joined into
-    pair rows — LSH re-rank, embedding-cosine dedup, IVF re-rank).
-
-    Default ``fold``: measured at sf0.1 and on the 10× probe
-    (BENCH_r04 scale_probe), the in-place Catalyst fold beats the
-    column UDF on banded pair streams — the candidates per query are
-    bounded by construction (corpus/2^bits per bucket), so the fold's
-    per-pair interpreted cost stays small while the column UDF pays
-    Arrow transfer of BOTH 64-dim vectors per pair. ``arrow`` remains
-    one env var away for unbanded/huge pair volumes; the structural
-    fix at extreme volume is PQ/ADC (operators/pq.py), where
-    candidates carry 4 codes instead of vectors."""
-    k = os.environ.get(PAIR_KERNEL_ENV, "fold")
-    return k if k in ("arrow", "fold") else "fold"
-
-
 # ---------------------------------------------------------------------------
-# fold path (pure Catalyst, pinned order — matches DuckDB list_reduce)
+# Catalyst fold (pinned order — matches DuckDB list_reduce)
 
 
 def fold_dot(a: Column, b: Column) -> Column:
@@ -101,12 +65,15 @@ def fold_cosine(a: Column, b: Column) -> Column:
 
 
 def fold_sqdist(a: Column, b: Column) -> Column:
-    """Left-fold squared L2 over (already double) elements."""
+    """Left-fold squared L2 over (already double) elements: the
+    reference :func:`sqdist` is pinned against in the tests."""
     diffs = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _fold_bucket(v: Column, planes: tuple[tuple[float, ...], ...]) -> Column:
+def fold_bucket(v: Column, planes: list[list[float]]) -> Column:
+    """Random-hyperplane sign signature ('0'/'1' string), one codegen
+    dot fold per plane."""
     bits = []
     for plane in planes:
         lit = F.array(*[F.lit(x) for x in plane])
@@ -115,7 +82,7 @@ def _fold_bucket(v: Column, planes: tuple[tuple[float, ...], ...]) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# arrow path (numpy column-wise left fold — same op sequence per row)
+# numpy (column-wise left fold — same op sequence per row)
 
 
 def stack(s):
@@ -133,33 +100,14 @@ def fold_sum(prods):
     return acc
 
 
-_stack = stack  # back-compat aliases for the kernel tests
-_fold_sum = fold_sum
-
-
-@lru_cache(maxsize=1)
-def _arrow_cosine():
-    @F.pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if not len(a):
-            return pd.Series([], dtype="float64")
-        va, vb = _stack(a), _stack(b)
-        dot = _fold_sum(va * vb)
-        na = _fold_sum(va * va)
-        nb = _fold_sum(vb * vb)
-        return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
-
-    return _cos
-
-
 @lru_cache(maxsize=1)
 def _arrow_sqdist():
     @F.pandas_udf("double")
     def _sq(a: pd.Series, b: pd.Series) -> pd.Series:
         if not len(a):
             return pd.Series([], dtype="float64")
-        d = _stack(a) - _stack(b)
-        return pd.Series(_fold_sum(d * d))
+        d = stack(a) - stack(b)
+        return pd.Series(fold_sum(d * d))
 
     return _sq
 
@@ -172,61 +120,22 @@ def _arrow_bucket(planes):
     def _bkt(v: pd.Series) -> pd.Series:
         if not len(v):
             return pd.Series([], dtype="object")
-        V = _stack(v)  # (n, dim)
-        acc = _fold_sum(V[:, None, :] * P[None, :, :])  # (n, n_planes)
+        V = stack(v)  # (n, dim)
+        acc = fold_sum(V[:, None, :] * P[None, :, :])  # (n, n_planes)
         bits = acc > 0
         return pd.Series(["".join("1" if x else "0" for x in row) for row in bits])
 
     return _bkt
 
 
-# ---------------------------------------------------------------------------
-# dispatchers
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity, dual-path; both paths bit-identical."""
-    if kernel() == "fold":
-        return fold_cosine(a, b)
-    return _arrow_cosine()(a, b)
-
-
-def pair_cosine(a: Column, b: Column) -> Column:
-    """Cosine for pair-shaped relations — see :func:`pair_kernel`.
-    The global ``SPARK_GRAFT_VECTOR_KERNEL=fold`` override still wins
-    (it exists to force the oracle-shaped path everywhere)."""
-    if kernel() == "fold" or pair_kernel() == "fold":
-        return fold_cosine(a, b)
-    return _arrow_cosine()(a, b)
-
-
-def pair_bucket(v: Column, planes: list[list[float]]) -> Column:
-    """LSH bucket signature for the banded-ANN family, following the
-    same kernel choice as :func:`pair_cosine`: measured at sf0.1 and on
-    the 10× probe, the whole banded query (bucket + re-rank) runs
-    fastest ALL-fold — 0.35 s vs 0.67 s at 1×, 0.74 s vs 1.60 s at 10×
-    (reused-plan, warm) — because an 8-plane codegen dot fold is cheap
-    while each Python stage pays a fixed Arrow round-trip. The arrow
-    bucket stays the default for signature-only pipelines via
-    :func:`bucket`."""
-    key = tuple(tuple(p) for p in planes)
-    if kernel() == "fold" or pair_kernel() == "fold":
-        return _fold_bucket(v, key)
-    return _arrow_bucket(key)(v)
-
-
 def sqdist(a: Column, b: Column) -> Column:
-    """Squared L2 distance, dual-path; both paths bit-identical."""
-    if kernel() == "fold":
-        return fold_sqdist(a, b)
+    """Squared L2 distance as a numpy column UDF."""
     return _arrow_sqdist()(a, b)
 
 
 def bucket(v: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane sign signature ('0'/'1' string), dual-path.
-    The plane matrix is baked into the kernel (broadcast with the UDF),
-    so only the embedding column crosses the Arrow boundary."""
-    key = tuple(tuple(p) for p in planes)
-    if kernel() == "fold":
-        return _fold_bucket(v, key)
-    return _arrow_bucket(key)(v)
+    """Random-hyperplane sign signature ('0'/'1' string) as a numpy
+    column UDF. The plane matrix is baked into the kernel (broadcast
+    with the UDF), so only the embedding column crosses the Arrow
+    boundary."""
+    return _arrow_bucket(tuple(tuple(p) for p in planes))(v)

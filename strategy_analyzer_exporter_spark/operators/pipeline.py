@@ -39,6 +39,7 @@ from strategy_analyzer_exporter_spark.functions import (
     davg,
     davg_sql,
     tokens as _tokens,
+    vector,
 )
 from strategy_analyzer_exporter_spark.functions.topk import ranked_init
 from strategy_analyzer_exporter_spark.registry import register, register_deferred
@@ -200,16 +201,6 @@ KM_ITERS = 2
 KM_DIM = 64
 
 
-def _sqdist(a: Column, b: Column) -> Column:
-    """Squared L2 via the dual-path kernel (functions/vector.py):
-    Arrow/numpy by default, pure-Catalyst fold with
-    SPARK_GRAFT_VECTOR_KERNEL=fold — both accumulate in the identical
-    pinned left-fold order, so either path matches the oracle."""
-    from strategy_analyzer_exporter_spark.functions import vector
-
-    return vector.sqdist(a, b)
-
-
 def _sqdist_sql(a: str, b: str) -> str:
     return (
         f"list_reduce([CAST(0.0 AS DOUBLE)] || "
@@ -235,8 +226,6 @@ def kmeans_assign_stream(
     ONE map pass + one partially-aggregated shuffle, with no
     (vec_id → v) join per round (VERDICT r03 wrong #2)."""
     import numpy as np
-
-    from strategy_analyzer_exporter_spark.functions import vector
 
     cent_rows = sorted(cent_rows, key=lambda r: r.cid)
     cids = np.asarray([r.cid for r in cent_rows], dtype=np.int64)
@@ -285,25 +274,16 @@ def kmeans_assign_stream(
     return emb.mapInPandas(gen, schema)
 
 
-def kmeans_assign(
-    emb: DataFrame, cents: DataFrame, broadcast_cents: bool = True
-) -> DataFrame:
+def kmeans_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, cid, dist): nearest centroid per vector — a map-only
-    scan of the (arbitrarily large) embedding relation followed by one
-    min-by-key aggregation on vec_id. Ties break to the lowest cid via
-    struct ordering (deterministic in both engines).
-
-    ``broadcast_cents``: hint the centroid side only when the CALLER's
-    k is scale-independent (kmeans_embeddings' fixed KM_K). SemDeDup's
-    corpus-derived k makes the centroid relation GROW with the data,
-    so its fold path passes False and lets AQE pick the strategy at
-    runtime — broadcast while genuinely small, never a forced OOM
-    (the r06 house rule; caught by the fold-kernel hint sweep in
-    r12 — the 3 hint nodes had been latent since the r11
-    registration)."""
-    cside = F.broadcast(cents) if broadcast_cents else cents
-    scored = emb.crossJoin(cside).select(
-        "vec_id", "cid", _sqdist(F.col("v"), F.col("cv")).alias("dist")
+    scan of the (arbitrarily large) embedding relation against the
+    broadcast centroid relation, followed by one min-by-key aggregation
+    on vec_id. Ties break to the lowest cid via struct ordering
+    (deterministic in both engines). Callers pass a scale-independent
+    k (the PQ codebooks' PQ_K, the IVF cells), so the hint can never
+    force a growing relation into a broadcast (the r06 house rule)."""
+    scored = emb.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "cid", vector.sqdist(F.col("v"), F.col("cv")).alias("dist")
     )
     return (
         scored.groupBy("vec_id")
@@ -343,18 +323,13 @@ def kmeans_update_from_v(assigned_v: DataFrame) -> DataFrame:
     )
 
 
-def _q_kmeans(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KM_K,
-    hint_cents: bool = True,
-) -> DataFrame:
+def _q_kmeans(spark: SparkSession, sf_dir: str, k: int = KM_K) -> DataFrame:
     """Lloyd's k-means, k centroids (default KM_K=4), 2 update rounds,
     init = the k lowest-id vectors (deterministic — no sampling). Each
-    round: broadcast-assign (map-only over the big side) + keyed mean
-    (one shuffle on ≤ k×dim rows). The driver never sees vectors; only
-    the k-row centroid relation crosses stages, which is the minimum
-    any k-means carries.
+    round: streamed assign (map-only over the big side, centroids in
+    the UDF closure) + keyed mean (one shuffle on ≤ k×dim rows). Only
+    the k×dim centroid matrix reaches the driver between rounds, the
+    minimum any k-means carries.
 
     Output is the integer assignment (vec_id, cid) — the op's real
     product. Distances stay internal: centroid means are exact to
@@ -371,26 +346,15 @@ def _q_kmeans(
     cents = ranked_init(e, "vec_id", k, "cid").select(
         "cid", F.col("v").alias("cv")
     )
-    from strategy_analyzer_exporter_spark.functions import vector
-
-    if vector.kernel() == "fold":
-        for _ in range(KM_ITERS):
-            assigned = kmeans_assign(e, cents, hint_cents).select(
-                "vec_id", "cid"
-            )
-            # k rows only — eager materialization truncates the nested
-            # per-iteration lineage (same pattern as graph.py PageRank)
-            cents = kmeans_update(assigned, e).localCheckpoint()
-        return kmeans_assign(e, cents, hint_cents).select("vec_id", "cid")
-    # production path: centroids live on the driver between rounds
-    # (k×dim doubles — collect() returns exact binary doubles). The
-    # converged assignment is a session summary — clustering is built
-    # once and consumed many times; checkpointed DataFrames stay valid
-    # for the life of the Spark application. Each round is ONE job: the
-    # fused assign emits (cid, v) from a single map pass and the update
-    # partial-aggregates it, with no vec_id join. Cache e for the
-    # iteration phase, materialize the final assignment WHILE the cache
-    # is hot (localCheckpoint, eager), then unpersist.
+    # centroids live on the driver between rounds (k×dim doubles —
+    # collect() returns exact binary doubles). The converged assignment
+    # is a session summary — clustering is built once and consumed many
+    # times; checkpointed DataFrames stay valid for the life of the
+    # Spark application. Each round is ONE job: the fused assign emits
+    # (cid, v) from a single map pass and the update partial-aggregates
+    # it, with no vec_id join. Cache e for the iteration phase,
+    # materialize the final assignment WHILE the cache is hot
+    # (localCheckpoint, eager), then unpersist.
     def build() -> DataFrame:
         e.persist()
         try:
@@ -407,9 +371,7 @@ def _q_kmeans(
         finally:
             e.unpersist()
 
-    return summaries.get_or_build(
-        "kmeans", spark, sf_dir, (vector.kernel(), k), build
-    )
+    return summaries.get_or_build("kmeans", spark, sf_dir, (k,), build)
 
 
 def _kmeans_assign_body(k_sql: str | None = None) -> str:
@@ -530,47 +492,16 @@ def fine_init(ev: DataFrame, kf: int) -> DataFrame:
 
 def fine_assign(ev: DataFrame, fcents: DataFrame, with_v: bool = False) -> DataFrame:
     """(vec_id, ccid, fcid[, v]): nearest fine centroid WITHIN the
-    vector's own coarse cell. Dual-path like the flat assign:
-
-    - arrow (production): cogroup by ccid — each cell's vectors and
-      its fine-centroid block meet in one Arrow batch, numpy computes
-      the per-cell distance matrix with the pinned column fold, and
-      argmin's first-minimum tie-break equals (dist, fcid) order
-      because the centroid block is sorted by fcid. The corpus crosses
-      the Arrow boundary ONCE per round; the per-group temporary is
-      (cell, kf, dim) with cell ≈ n/kc — bounded by construction, and
-      the groups are data-parallel across executors (the fine
-      centroids are a RELATION keyed by cell, never a driver closure —
-      k = kc·kf grows with the corpus and must not be collected).
-    - fold: the oracle-shaped pure-Catalyst twin — equi-join on ccid,
-      fold sqdist, min-by-(dist, fcid) struct.
-
-    Both paths are bit-identical (tests/test_vector_kernels.py
-    pattern; pinned in tests/test_substring_semdedup.py)."""
-    from strategy_analyzer_exporter_spark.functions import vector
-
-    if vector.kernel() == "fold":
-        scored = ev.join(
-            fcents, F.col("ccid") == F.col("gcid")
-        ).select(
-            "vec_id",
-            "ccid",
-            "fcid",
-            *(["v"] if with_v else []),
-            _sqdist(F.col("v"), F.col("cv")).alias("dist"),
-        )
-        keys = ["vec_id", "ccid"] + (["v"] if with_v else [])
-        return (
-            scored.groupBy(*keys)
-            .agg(F.min(F.struct("dist", "fcid")).alias("m"))
-            .select(
-                "vec_id",
-                "ccid",
-                F.col("m.fcid").alias("fcid"),
-                *(["v"] if with_v else []),
-            )
-        )
-
+    vector's own coarse cell. Cogrouped by ccid: each cell's vectors
+    and its fine-centroid block meet in one Arrow batch, numpy computes
+    the per-cell distance matrix with the pinned column fold, and
+    argmin's first-minimum tie-break equals (dist, fcid) order because
+    the centroid block is sorted by fcid. The corpus crosses the Arrow
+    boundary ONCE per round; the per-group temporary is (cell, kf, dim)
+    with cell ≈ n/kc — bounded by construction, and the groups are
+    data-parallel across executors (the fine centroids are a RELATION
+    keyed by cell, never a driver closure — k = kc·kf grows with the
+    corpus and must not be collected)."""
     import numpy as np
 
     blk = 32  # same centroid-block cap as kmeans_assign_stream
@@ -647,35 +578,42 @@ def fine_update_from_v(assigned_v: DataFrame) -> DataFrame:
 def _fine_rounds(ev: DataFrame, kf: int) -> DataFrame:
     """fine_init → KM_ITERS fused assign+update rounds → final assign
     over an (vec_id, ccid, v) relation: the per-cell Lloyd block of the
-    two-level assign. Between rounds the ≤ cells·kf-row centroid
-    relation is eagerly localCheckpointed (the lineage-truncation
-    pattern of the flat rounds)."""
+    two-level assign, materialized by one eager ``localCheckpoint``.
+    Between rounds the ≤ cells·kf-row centroid relation is eagerly
+    localCheckpointed (the lineage-truncation pattern of the flat
+    rounds). Once the final assignment is checkpointed nothing reads
+    the rounds, so their blocks are released here rather than left to
+    the context cleaner. ``DataFrame.unpersist()`` is a no-op on a
+    checkpoint: the blocks belong to the RDD under its LogicalRDD leaf."""
     fc = fine_init(ev, kf)
-    for _ in range(KM_ITERS):
-        fc = fine_update_from_v(
-            fine_assign(ev, fc, with_v=True).select("ccid", "fcid", "v")
-        ).localCheckpoint()
-    return fine_assign(ev, fc)
+    rounds = []
+    try:
+        for _ in range(KM_ITERS):
+            fc = fine_update_from_v(
+                fine_assign(ev, fc, with_v=True).select("ccid", "fcid", "v")
+            ).localCheckpoint()
+            rounds.append(fc)
+        return fine_assign(ev, fc).localCheckpoint()
+    finally:
+        for r in rounds:
+            r._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def two_level_assign(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """(vec_id, ccid, fcid): the converged two-level assignment at
     kc = ⌈√k⌉ coarse cells × kf = ⌈k/kc⌉ fine centroids per cell.
 
-    Coarse level reuses :func:`_q_kmeans` verbatim at k = kc (memoized
-    under the arrow kernel; kc is corpus-derived so the centroid side
-    is never force-broadcast — hint_cents=False, the r06 house rule).
-    Fine level: per-cell init, KM_ITERS fused assign+update rounds
-    (the assign passes v through so the update needs no vec_id join —
-    the r03 rule), each round ONE cogrouped map pass + one partially-
-    aggregated shuffle on (ccid, fcid, pos). Between rounds the
-    ≤ kc·kf-row centroid relation is eagerly localCheckpointed (same
-    lineage-truncation pattern as the flat rounds)."""
-    from strategy_analyzer_exporter_spark.functions import vector
+    Coarse level reuses :func:`_q_kmeans` verbatim at k = kc (its own
+    summary entry; the centroids ride in the UDF closure, so the
+    corpus-derived kc never becomes a broadcast relation). Fine level:
+    per-cell init, KM_ITERS fused assign+update rounds (the assign
+    passes v through so the update needs no vec_id join — the r03
+    rule), each round ONE cogrouped map pass + one partially-
+    aggregated shuffle on (ccid, fcid, pos); see :func:`_fine_rounds`."""
     from strategy_analyzer_exporter_spark.operators.similarity import _spread
 
     kc, kf = two_level_kc_kf(k)
-    coarse = _q_kmeans(spark, sf_dir, k=kc, hint_cents=False).select(
+    coarse = _q_kmeans(spark, sf_dir, k=kc).select(
         "vec_id", F.col("cid").alias("ccid")
     )
     e = _spread(
@@ -684,26 +622,15 @@ def two_level_assign(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         )
     )
     ev = coarse.join(e, "vec_id").select("vec_id", "ccid", "v")
-    if vector.kernel() == "fold":
-        # oracle-shaped live plan (mirrors _q_kmeans's fold branch:
-        # eager checkpoints truncate per-round lineage, final assign
-        # stays inspectable)
-        return _fine_rounds(ev, kf)
 
     def build() -> DataFrame:
         ev.persist()
         try:
-            return (
-                _fine_rounds(ev, kf)
-                .select("vec_id", "ccid", "fcid")
-                .localCheckpoint()
-            )
+            return _fine_rounds(ev, kf)
         finally:
             ev.unpersist()
 
-    return summaries.get_or_build(
-        "two_level", spark, sf_dir, (vector.kernel(), k), build
-    )
+    return summaries.get_or_build("two_level", spark, sf_dir, (k,), build)
 
 
 def _fine_chain_sql(kf_sql: str) -> str:
@@ -861,8 +788,6 @@ def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     runtime. The count feeding k is read from the parquet footer
     driver-side (no Spark job; Spark-counted only as a fallback on
     unreadable footers)."""
-    from strategy_analyzer_exporter_spark.operators.similarity import _cosine
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = _corpus_rows(sf_dir, "embeddings")
     if n < 0:
@@ -884,7 +809,7 @@ def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped = (
         a.join(b, a.cid_a == b.cid_b)
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(_cosine(F.col("va"), F.col("vb")) >= SEMDEDUP_COS)
+        .filter(vector.fold_cosine(F.col("va"), F.col("vb")) >= SEMDEDUP_COS)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
         .withColumn("is_dropped", F.lit(1))

@@ -15,8 +15,8 @@ pipeline._q_kmeans), codes + ADC join fully in DataFrame ops. The
 codebooks and lookup tables are k×M rows — always broadcast; the only
 per-candidate work is 4 broadcast-hash-join probes and 3 additions.
 
-Float parity: subspace distances use the pinned-fold sqdist
-(functions/vector.py — arrow and fold paths bit-identical), centroid
+Float parity: subspace distances use the pinned-fold ``vector.sqdist``
+(numpy, bit-identical to the oracle's list_reduce), centroid
 means are decimal-staged ``davg`` (order-independent), and the ADC sum
 is a fixed left-associated chain — so the approximate distances, and
 therefore the result rows, match the DuckDB oracle bit-for-bit.
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from strategy_analyzer_exporter_spark import summaries
-from strategy_analyzer_exporter_spark.functions import davg_sql
+from strategy_analyzer_exporter_spark.functions import davg_sql, vector
 from strategy_analyzer_exporter_spark.functions.topk import ranked_init
 from strategy_analyzer_exporter_spark.registry import register
 from strategy_analyzer_exporter_spark.sources.tables import load_table
@@ -77,12 +77,11 @@ def _codebook(sub: DataFrame) -> DataFrame:
 
 def _pq_index(spark: SparkSession, sf_dir: str):
     """(codes, codebooks): the per-vector codes and the per-subspace
-    codebooks, built once per session, corpus and kernel — a PQ index
+    codebooks, built once per session and corpus — a PQ index
     is constructed once and queried many times, so repeated query
     builds pay the ~20-job Lloyd/encode cost only the first time.
     Checkpointed DataFrames stay valid for the life of the Spark
     application."""
-    from strategy_analyzer_exporter_spark.functions import vector
     from strategy_analyzer_exporter_spark.operators.pipeline import kmeans_assign
 
     def build():
@@ -99,18 +98,14 @@ def _pq_index(spark: SparkSession, sf_dir: str):
             codes = code_m if codes is None else codes.join(code_m, "vec_id")
         return codes.localCheckpoint(), cbs
 
-    return summaries.get_or_build(
-        "pq_index", spark, sf_dir, (vector.kernel(),), build
-    )
+    return summaries.get_or_build("pq_index", spark, sf_dir, (), build)
 
 
-def _adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, cand_id, adc_dist) for every query×candidate pair —
-    the shared ADC core of both the flat-PQ and the IVF-PQ query."""
-    from strategy_analyzer_exporter_spark.functions import vector
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    codes, cbs = _pq_index(spark, sf_dir)
+def _adc_join(emb: DataFrame, cbs: list, rel: DataFrame) -> DataFrame:
+    """``rel`` (code0..code3, …) joined to every query's per-subspace
+    distance table — PQ_K rows per query and subspace, broadcast — so
+    each (query, rel row) carries query_id and qd0..qd3, ready for the
+    fixed left-associated ADC sum."""
     qds = []
     for m in range(PQ_M):
         sub = _subspace(emb, m)
@@ -124,8 +119,7 @@ def _adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
                 vector.sqdist(F.col("qv"), F.col("cv")).alias(f"qd{m}"),
             )
         )
-    cand = codes.withColumnRenamed("vec_id", "cand_id")
-    scored = cand
+    scored = rel
     for m in range(PQ_M):
         on = [scored[f"code{m}"] == qds[m][f"qcid{m}"]]
         if m > 0:
@@ -133,12 +127,7 @@ def _adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored = scored.join(F.broadcast(qds[m]), on).drop(f"qcid{m}")
         if m > 0:
             scored = scored.drop(qds[m]["query_id"])
-    adc = (
-        F.col("qd0") + F.col("qd1") + F.col("qd2") + F.col("qd3")
-    ).alias("adc_dist")
-    return scored.filter(F.col("cand_id") != F.col("query_id")).select(
-        "query_id", "cand_id", adc
-    )
+    return scored
 
 
 def _adc_topk(scored: DataFrame) -> DataFrame:
@@ -150,83 +139,47 @@ def _adc_topk(scored: DataFrame) -> DataFrame:
     )
 
 
-def _q_pq_adc(
-    spark: SparkSession, sf_dir: str, mode: str = "auto"
-) -> DataFrame:
-    """Flat-PQ ADC top-k.
-
-    ``mode="auto"`` (registered default, r15 — VERDICT r14 #1: the
-    static cells default lost 27% at the judged SF where distinct
-    cells ≈ n and the extra aggregation is pure cost): pick the shape
-    from cheap metadata the way ``spread_scan`` does — the corpus row
-    count from the parquet FOOTER (a driver-side pyarrow read, no
-    Spark job). Below PQ_K**PQ_M = 65,536 rows the cell space cannot
-    meaningfully collapse the candidate set (reduction is bounded by
-    n/cells ≥ n/65,536 < 1 order), so the pairs shape's lower fixed
-    cost wins; above it the cell reduction grows linearly in n and
-    cells wins (measured crossover: r14 interleaved med-of-3 — 1×
-    n=2k: pairs 0.593 vs cells 0.730; 10× n=20k: 1.924 vs 1.963
-    (tied); 100× n=200k: 3.584 vs cells 2.465, reduction 78×; r15
-    re-measurement in OPTIMIZATION_r15.md). Both shapes produce
-    identical rows (twin-tested, oracle-checked), so the switch is a
-    plan decision, not a semantic one — the same contract as
-    spread_scan's split-count trigger.
-
-    ``mode="cells"`` (r14 — guide §8 "decide with small rows"): every
-    candidate sharing a code word (code0..code3)
-    has the SAME adc_dist for a given query, so the per-candidate
-    decision collapses onto DISTINCT CELLS. One hash aggregation over
-    the codes relation builds (cell → 4 smallest member vec_ids); the
-    per-query ADC chain then scores ≤ min(n, 16⁴) cell rows instead of
-    n candidates, and the final ordering runs over ≤ PQ_TOPK·(PQ_TOPK+1)
-    rows per query. Per-query work is bounded by PQ_K^PQ_M = 65,536
-    cells FOREVER — the only O(n) step left is the single metadata
-    aggregation (doc: vec_ids are 8-byte longs; nothing vector-sized
-    shuffles). Keeping the (PQ_TOPK+1)=4 smallest ids per cell is
-    sufficient: the self-match exclusion removes at most one of them,
-    and a candidate in the global top-k is at worst the k-th eligible
-    of its own cell; a cell holding a global top-k candidate is itself
-    within the top-k cells ordered by (adc_dist, first-eligible-id) —
-    if c cells rank strictly before it, their first eligibles plus the
-    candidate's own cell-local predecessors all precede it globally,
-    so c + (rank within cell) ≤ PQ_TOPK. Output is EXACTLY the pairs
-    form's (twin-tested and oracle-checked): adc_dist is the identical
-    left-associated qd0+qd1+qd2+qd3 over the identical codes.
-
-    ``mode="pairs"``: the pre-r14 shape — score all n×N_QUERIES pairs
-    through the broadcast chain, then row_number over N_QUERIES window
-    partitions (each sorting n rows: measured exp 1.26 at the 1×→10×
-    probe, with 10 window tasks on 32 cores)."""
-    if mode == "auto":
-        from strategy_analyzer_exporter_spark.operators.pipeline import (
-            _corpus_rows,
-        )
-
-        n = _corpus_rows(sf_dir, "embeddings")
-        if n < 0:
-            n = load_table(spark, sf_dir, "embeddings").count()
-        mode = "cells" if n > PQ_K**PQ_M else "pairs"
-    if mode == "pairs":
-        return _adc_topk(_adc_scored(spark, sf_dir))
-    if mode != "cells":
-        raise ValueError(f"unknown pq-adc mode: {mode!r}")
-    from strategy_analyzer_exporter_spark.functions import vector
-
+def _adc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairs shape: score all n×N_QUERIES pairs through the broadcast
+    chain, then row_number over N_QUERIES window partitions (each
+    sorting n rows: measured exp 1.26 at the 1×→10× probe, with 10
+    window tasks on 32 cores)."""
     emb = load_table(spark, sf_dir, "embeddings")
     codes, cbs = _pq_index(spark, sf_dir)
-    qds = []
-    for m in range(PQ_M):
-        sub = _subspace(emb, m)
-        q_sub = sub.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    scored = _adc_join(emb, cbs, codes.withColumnRenamed("vec_id", "cand_id"))
+    adc = (
+        F.col("qd0") + F.col("qd1") + F.col("qd2") + F.col("qd3")
+    ).alias("adc_dist")
+    return _adc_topk(
+        scored.filter(F.col("cand_id") != F.col("query_id")).select(
+            "query_id", "cand_id", adc
         )
-        qds.append(
-            q_sub.crossJoin(F.broadcast(cbs[m])).select(
-                "query_id",
-                F.col("cid").alias(f"qcid{m}"),
-                vector.sqdist(F.col("qv"), F.col("cv")).alias(f"qd{m}"),
-            )
-        )
+    )
+
+
+def _adc_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cells shape (r14 — guide §8 "decide with small rows"): every
+    candidate sharing a code word (code0..code3) has the SAME adc_dist
+    for a given query, so the per-candidate decision collapses onto
+    DISTINCT CELLS. One hash aggregation over the codes relation builds
+    (cell → 4 smallest member vec_ids); the per-query ADC chain then
+    scores ≤ min(n, 16⁴) cell rows instead of n candidates, and the
+    final ordering runs over ≤ PQ_TOPK·(PQ_TOPK+1) rows per query.
+    Per-query work is bounded by PQ_K^PQ_M = 65,536 cells FOREVER — the
+    only O(n) step left is the single metadata aggregation (doc:
+    vec_ids are 8-byte longs; nothing vector-sized shuffles). Keeping
+    the (PQ_TOPK+1)=4 smallest ids per cell is sufficient: the
+    self-match exclusion removes at most one of them, and a candidate
+    in the global top-k is at worst the k-th eligible of its own cell;
+    a cell holding a global top-k candidate is itself within the top-k
+    cells ordered by (adc_dist, first-eligible-id) — if c cells rank
+    strictly before it, their first eligibles plus the candidate's own
+    cell-local predecessors all precede it globally, so
+    c + (rank within cell) ≤ PQ_TOPK. Output is EXACTLY the pairs
+    shape's (twin-tested and oracle-checked): adc_dist is the identical
+    left-associated qd0+qd1+qd2+qd3 over the identical codes."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    codes, cbs = _pq_index(spark, sf_dir)
     cell_cols = [f"code{m}" for m in range(PQ_M)]
     # (cell → 4 smallest member ids): ONE hash agg over 8-byte ids.
     # collect_list's partial state per (task, cell) is bounded by the
@@ -237,14 +190,7 @@ def _q_pq_adc(
         F.slice(F.array_sort(F.collect_list("vec_id")), 1, PQ_TOPK + 1)
         .alias("m4")
     )
-    scored = cells
-    for m in range(PQ_M):
-        on = [scored[f"code{m}"] == qds[m][f"qcid{m}"]]
-        if m > 0:
-            on.append(scored["query_id"] == qds[m]["query_id"])
-        scored = scored.join(F.broadcast(qds[m]), on).drop(f"qcid{m}")
-        if m > 0:
-            scored = scored.drop(qds[m]["query_id"])
+    scored = _adc_join(emb, cbs, cells)
     adc = (
         F.col("qd0") + F.col("qd1") + F.col("qd2") + F.col("qd3")
     ).alias("adc_dist")
@@ -274,6 +220,33 @@ def _q_pq_adc(
         .select("query_id", "cand_id", "adc_dist")
     )
     return _adc_topk(ex)
+
+
+def _q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flat-PQ ADC top-k (r15 — VERDICT r14 #1: the static cells default
+    lost 27% at the judged SF where distinct cells ≈ n and the extra
+    aggregation is pure cost). The shape is picked from cheap metadata
+    the way ``spread_scan`` does — the corpus row count from the
+    parquet FOOTER (a driver-side pyarrow read, no Spark job). Below
+    PQ_K**PQ_M = 65,536 rows the cell space cannot meaningfully
+    collapse the candidate set (reduction is bounded by
+    n/cells ≥ n/65,536 < 1 order), so :func:`_adc_pairs`' lower fixed
+    cost wins; above it the cell reduction grows linearly in n and
+    :func:`_adc_cells` wins (measured crossover: r14 interleaved
+    med-of-3 — 1× n=2k: pairs 0.593 vs cells 0.730; 10× n=20k: 1.924
+    vs 1.963 (tied); 100× n=200k: 3.584 vs cells 2.465, reduction 78×;
+    r15 re-measurement in OPTIMIZATION_r15.md). Both shapes produce
+    identical rows (twin-tested, oracle-checked), so the switch is a
+    plan decision, not a semantic one — the same contract as
+    spread_scan's split-count trigger."""
+    from strategy_analyzer_exporter_spark.operators.pipeline import _corpus_rows
+
+    n = _corpus_rows(sf_dir, "embeddings")
+    if n < 0:
+        n = load_table(spark, sf_dir, "embeddings").count()
+    if n > PQ_K**PQ_M:
+        return _adc_cells(spark, sf_dir)
+    return _adc_pairs(spark, sf_dir)
 
 
 def _pq_sql_parts(train_pred: str | None = None) -> tuple[list, str, str, str]:
@@ -418,7 +391,6 @@ def _fullv(emb: DataFrame) -> DataFrame:
 def _coarse_index(spark: SparkSession, sf_dir: str):
     """(cells, cents): per-vector cell assignment + the coarse centroid
     relation, memoized like the PQ index (built once, probed many)."""
-    from strategy_analyzer_exporter_spark.functions import vector
     from strategy_analyzer_exporter_spark.operators.pipeline import (
         kmeans_assign,
         kmeans_update,
@@ -438,14 +410,10 @@ def _coarse_index(spark: SparkSession, sf_dir: str):
         )
         return cells, cents
 
-    return summaries.get_or_build(
-        "ivf_index", spark, sf_dir, (vector.kernel(),), build
-    )
+    return summaries.get_or_build("ivf_index", spark, sf_dir, (), build)
 
 
 def _q_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from strategy_analyzer_exporter_spark.functions import vector
-
     cells, cents = _coarse_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     fq = (
@@ -471,8 +439,9 @@ def _q_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n×N_QUERIES pairs and joining the restriction in afterwards.
     # Candidate volume through the ADC chain drops from n·N_QUERIES to
     # n·nprobe/cells·N_QUERIES; output rows are the identical set with
-    # the identical adc_dist arithmetic (pre-r14 shape: _adc_scored
-    # joined on (query_id, cand_id) — an n×10-row intermediate).
+    # the identical adc_dist arithmetic (pre-r14 shape: _adc_pairs'
+    # scored pairs joined on (query_id, cand_id) — an n×10-row
+    # intermediate).
     pq_codes, cbs = _pq_index(spark, sf_dir)
     restricted = ivf_cand.join(
         pq_codes.withColumnRenamed("vec_id", "cand_id"), "cand_id"
@@ -607,10 +576,9 @@ register("similarity_ivfpq_topk", _q_ivfpq, _ivfpq_oracle())
 #
 # Parity: codebooks/centroids are double arrays — parquet round-trips
 # IEEE-754 exactly, so qd/adc arithmetic is bit-identical to the
-# in-session twin; codes/cells are exact ints. The two kernels (arrow/
-# fold) produce bit-identical indexes (module docstring), so the staged
-# index is kernel-independent. Oracle REUSED from similarity_ivfpq_topk
-# via register_deferred — same rows, zero drift possible.
+# in-session twin; codes/cells are exact ints. Oracle REUSED from
+# similarity_ivfpq_topk via register_deferred — same rows, zero drift
+# possible.
 
 _PQ_STAGE_VERSION = "v2"  # v2: epoch/append-log protocol (VERDICT r09 #2)
 
@@ -760,8 +728,6 @@ def _at_rest_topk(
     keeps riding the partition-pruned scan (plan-asserted in
     tests/test_plans.py)."""
     import os
-
-    from strategy_analyzer_exporter_spark.functions import vector
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = spark.read.parquet(os.path.join(d, "centroids"))

@@ -1,12 +1,13 @@
 """Similarity search over the ``embeddings`` table (array<float>, dim 64).
 
-Vector math goes through the dual-path kernel in
-``functions/vector.py``: a vectorized Arrow ``pandas_udf`` by default
-(production — batches through numpy, no interpreted expression walk),
-or the pure-Catalyst left-fold with ``SPARK_GRAFT_VECTOR_KERNEL=fold``.
-Both paths perform the identical sequence of correctly-rounded IEEE
-double ops as the DuckDB oracle's ``list_reduce``, so cosines agree
-bit-for-bit either way (asserted in tests/test_vector_kernels.py).
+Vector math goes through ``functions/vector.py``, one path per call
+shape: brute-force scoring streams the corpus through numpy
+(``mapInPandas``, query matrix in the closure), pair re-rank and the
+banded LSH bucket use the Catalyst fold, and the per-row LSH
+signatures use the numpy column UDF. Every path performs the identical
+sequence of correctly-rounded IEEE double ops as the DuckDB oracle's
+``list_reduce``, so cosines agree bit-for-bit (asserted in
+tests/test_vector_kernels.py).
 
 Two search paths:
 - brute-force cosine top-k: exact baseline; broadcast the query set and
@@ -23,7 +24,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from strategy_analyzer_exporter_spark.functions import vector
@@ -64,15 +65,6 @@ def _dot_fold_sql(a: str, b: str) -> str:
     )
 
 
-def _cosine(a: Column, b: Column) -> Column:
-    # every _cosine call site here scores JOINED PAIR ROWS (LSH/IVF
-    # re-rank, near-dup pairs) — the pair-shaped dispatcher picks the
-    # in-place fold by default (see vector.pair_kernel); the streamed
-    # brute-force path uses its own closure kernel and the fold oracle
-    # path uses fold_cosine directly.
-    return vector.pair_cosine(a, b)
-
-
 def _cosine_sql(a: str, b: str) -> str:
     return (
         f"({_dot_fold_sql(a, b)} / "
@@ -103,36 +95,14 @@ def _spread(df: DataFrame) -> DataFrame:
 # Brute-force cosine top-k
 
 
-def _bruteforce_scored_fold(emb: DataFrame) -> DataFrame:
-    """Pure-Catalyst pair scoring: broadcast query side × corpus, fold
-    cosine per pair. Oracle-shaped reference path."""
-    q = F.broadcast(
-        emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-        )
-    )
-    c = _spread(emb).select(
-        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv")
-    )
-    return (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            vector.fold_cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
-        )
-    )
-
-
 def _bruteforce_scored_stream(emb: DataFrame) -> DataFrame:
-    """Production pair scoring: the query matrix (10×64) rides in the
-    UDF closure; the corpus streams through ONE ``mapInPandas`` pass.
-    No pair row ever carries a vector — at 100 TB the Arrow payload is
-    the corpus itself, once, and the numpy fold does 10 cosines per
-    corpus row in a single vectorized sweep. Per-value float sequence
-    identical to the fold path (column-wise left fold, see
-    functions/vector.py), so the result stays bit-exact vs the oracle."""
+    """Pair scoring: the query matrix (10×64) rides in the UDF closure;
+    the corpus streams through ONE ``mapInPandas`` pass. No pair row
+    ever carries a vector — at 100 TB the Arrow payload is the corpus
+    itself, once, and the numpy fold does 10 cosines per corpus row in
+    a single vectorized sweep. Per-value float sequence identical to
+    the oracle's (column-wise left fold, see functions/vector.py), so
+    the result stays bit-exact."""
     import numpy as np
 
     q_rows = sorted(
@@ -172,16 +142,12 @@ def _bruteforce_scored_stream(emb: DataFrame) -> DataFrame:
 
 def _q_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for each query vector (vec_id < 10).
-    The query side is broadcast (in the UDF closure on the production
-    path); the corpus is scanned once. Ranking uses a (cos desc,
-    vec_id) total order so the row set is deterministic."""
+    The query side rides in the UDF closure; the corpus is scanned
+    once. Ranking uses a (cos desc, vec_id) total order so the row set
+    is deterministic."""
     from pyspark.sql import Window
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    if vector.kernel() == "fold":
-        scored = _bruteforce_scored_fold(emb)
-    else:
-        scored = _bruteforce_scored_stream(emb)
+    scored = _bruteforce_scored_stream(load_table(spark, sf_dir, "embeddings"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("cand_id")
     )
@@ -212,13 +178,6 @@ SELECT query_id, cand_id, cos_sim, rn FROM ranked WHERE rn <= {TOP_K}"""
 # LSH-bucketed ANN
 
 
-def _bucket_expr(v: Column) -> Column:
-    # the banded-ANN family performs best with the SAME kernel for
-    # bucket and re-rank (all-fold by default — vector.pair_bucket has
-    # the measurements); signature-only pipelines keep vector.bucket
-    return vector.pair_bucket(v, _hyperplanes())
-
-
 def _bucket_sql(v: str) -> str:
     planes = _hyperplanes()
     bits = []
@@ -238,7 +197,9 @@ def _q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     withb = emb.select(
-        "vec_id", "embedding", _bucket_expr(F.col("embedding")).alias("bucket")
+        "vec_id",
+        "embedding",
+        vector.fold_bucket(F.col("embedding"), _hyperplanes()).alias("bucket"),
     )
     q = withb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -254,7 +215,7 @@ def _q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            _cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
+            vector.fold_cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -297,7 +258,9 @@ def _q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     never materializes; only same-bucket pairs are scored."""
     emb = load_table(spark, sf_dir, "embeddings")
     withb = emb.select(
-        "vec_id", "embedding", _bucket_expr(F.col("embedding")).alias("bucket")
+        "vec_id",
+        "embedding",
+        vector.fold_bucket(F.col("embedding"), _hyperplanes()).alias("bucket"),
     )
     a = withb.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"), "bucket"
@@ -311,7 +274,7 @@ def _q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            _cosine(F.col("va"), F.col("vb")).alias("cos_sim"),
+            vector.fold_cosine(F.col("va"), F.col("vb")).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= NEARDUP_COS)
     )
@@ -390,7 +353,9 @@ def _q_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "cand_id", "qv", "cv")
         .dropDuplicates(["query_id", "cand_id"])  # union candidates across tables
         .select(
-            "query_id", "cand_id", _cosine(F.col("qv"), F.col("cv")).alias("cos_sim")
+            "query_id",
+            "cand_id",
+            vector.fold_cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
@@ -460,7 +425,7 @@ def _q_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "cand_id",
             "label",
-            _cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
+            vector.fold_cosine(F.col("qv"), F.col("cv")).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))

@@ -186,9 +186,14 @@ def ingest_parquet_to_duckdb(
     parquet_path: str, db_path: str, table: str, mode: str = "replace"
 ) -> int:
     """Load a parquet export into a .duckdb file (driver-side, bulk).
-    Returns the row count. `mode`: replace | append."""
+    Returns the row count. `mode`: replace | append. An append matches
+    columns BY NAME — a hive-partitioned export lists its partition
+    column last, a flat one wherever the frame had it — and a column
+    the table lacks raises instead of landing in another column."""
     import duckdb
 
+    if mode not in ("replace", "append"):
+        raise ValueError(f"unknown ingest mode: {mode!r}")
     con = duckdb.connect(db_path)
     try:
         # the glob is a bound parameter, not spliced SQL: a path may hold
@@ -202,7 +207,7 @@ def ingest_parquet_to_duckdb(
             [glob],
         )
         con.execute(
-            f"INSERT INTO {quote_ident(table)} "
+            f"INSERT INTO {quote_ident(table)} BY NAME "
             f"SELECT * FROM read_parquet(?, hive_partitioning=true)",
             [glob],
         )

@@ -8,8 +8,8 @@ its summary each time.
 An entry of ``kind`` is keyed on (applicationId, abspath(sf_dir),
 params): a stopped session's relations are never handed to the next
 session in the process, two spellings of one corpus share an entry, and
-``params`` holds what else the build reads (``k``, a batch predicate,
-``vector.kernel()``).
+``params`` holds what else the build reads (``k``, a batch
+predicate).
 
 Each kind keeps at most ``BOUND`` entries, first in, first out.
 Eviction and ``clear`` unpersist every DataFrame an entry holds, tuple

@@ -62,6 +62,67 @@ def test_ingest_parquet_to_duckdb_quoted_path(tmp_path):
     assert rows == [(7, 1), (7, 1), (7, 2), (7, 2), (7, 3), (7, 3)]
 
 
+def test_ingest_append_matches_columns_by_name(tmp_path):
+    """An append of a day-partitioned export (hive lists ``day`` last)
+    into a table made from a flat export (``day`` first) stores each
+    value under its own column, and a column the table lacks raises
+    instead of shifting into a neighbour."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+    import pytest
+
+    from strategy_analyzer_exporter_spark.sinks import ingest_parquet_to_duckdb
+
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    papq.write_table(
+        pa.table({"day": [1], "a": [1.5], "b": [2.5]}), flat / "part.parquet"
+    )
+    hive = tmp_path / "hive" / "day=7"
+    hive.mkdir(parents=True)
+    papq.write_table(pa.table({"a": [10.5], "b": [20.5]}), hive / "part.parquet")
+    extra = tmp_path / "extra"
+    extra.mkdir()
+    papq.write_table(
+        pa.table({"day": [9], "a": [0.5], "b": [0.5], "c": [0.5]}),
+        extra / "part.parquet",
+    )
+    db = str(tmp_path / "out.duckdb")
+
+    assert ingest_parquet_to_duckdb(str(flat), db, "t") == 1
+    hive_root = str(tmp_path / "hive")
+    assert ingest_parquet_to_duckdb(hive_root, db, "t", mode="append") == 2
+    con = duckdb.connect(db)
+    try:
+        rows = con.execute("SELECT day, a, b FROM t ORDER BY day").fetchall()
+    finally:
+        con.close()
+    assert rows == [(1, 1.5, 2.5), (7, 10.5, 20.5)]
+    with pytest.raises(duckdb.Error, match='does not have a column with name "c"'):
+        ingest_parquet_to_duckdb(str(extra), db, "t", mode="append")
+
+
+def test_ingest_rejects_unknown_mode(tmp_path):
+    """Only ``replace`` and ``append`` are modes: anything else raises
+    before touching the table, instead of appending."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+    import pytest
+
+    from strategy_analyzer_exporter_spark.sinks import ingest_parquet_to_duckdb
+
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    papq.write_table(pa.table({"x": [1, 2]}), stage / "part.parquet")
+    db = str(tmp_path / "out.duckdb")
+
+    assert ingest_parquet_to_duckdb(str(stage), db, "t") == 2
+    with pytest.raises(ValueError, match="overwrite"):
+        ingest_parquet_to_duckdb(str(stage), db, "t", mode="overwrite")
+    assert ingest_parquet_to_duckdb(str(stage), db, "t") == 2
+
+
 def test_cli_export_ingests_features_and_removes_staging(spark, tmp_path, monkeypatch):
     """``export`` end to end on the active session: the DuckDB table
     holds every feature row, and the parquet staging copy is gone."""

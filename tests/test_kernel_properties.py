@@ -4,9 +4,7 @@
   id space (hypothesis-driven), and parsing is total (never raises) on
   arbitrary byte prefixes of valid files.
 - Column-wise numpy left fold == Python scalar left fold, bit-exact,
-  for arbitrary float inputs — the identity the arrow kernels rest on.
-- End-to-end fold-kernel mode: the pure-Catalyst path still matches
-  the DuckDB oracle (guards the fallback path against rot).
+  for arbitrary float inputs — the identity the numpy kernels rest on.
 """
 
 from __future__ import annotations
@@ -54,22 +52,6 @@ def test_fold_sum_matches_scalar_left_fold(xs):
     for x in xs:
         acc = acc + x
     assert got == acc or (math.isnan(got) and math.isnan(acc))
-
-
-def test_fold_kernel_mode_end_to_end(spark, monkeypatch):
-    from oracle_harness import compare
-
-    import __spark_entry__ as E
-
-    monkeypatch.setenv(vector.KERNEL_ENV, "fold")
-    qs, osql = E.queries(), E.oracle_sql()
-    for name in ("similarity_bruteforce_topk", "kmeans_embeddings"):
-        r = compare(
-            qs[name](spark, "/root/testdata/sf0.001"),
-            osql[name],
-            sf_dir="/root/testdata/sf0.001",
-        )
-        assert r["ok"], f"{name} (fold kernel): {r['detail']}"
 
 
 # ---------------------------------------------------------------------------

@@ -177,17 +177,8 @@ def test_bruteforce_streams_corpus_not_pairs(spark):
     """The production brute-force scorer must be the streamed shape:
     one MapInPandas over the corpus (query matrix in the closure), and
     NO join that materializes vector pairs before scoring."""
-    import os
-
-    import pytest
-
     from strategy_analyzer_exporter_spark.registry import QUERIES
 
-    if os.environ.get("SPARK_GRAFT_VECTOR_KERNEL", "arrow") != "arrow":
-        # the streamed MapInPandas shape IS the arrow kernel; under the
-        # fold kernel this test has no subject — skip, don't fail, so
-        # the whole-file sweep stays runnable under both kernels (r07)
-        pytest.skip("arrow-kernel-specific plan shape")
     plan = P.physical_plan(QUERIES["similarity_bruteforce_topk"](spark, SF))
     assert "MapInPandas" in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -417,15 +408,11 @@ def test_bucketed_staging_reattaches_without_rewrite(spark):
 # small, and stops when it isn't — exactly the adaptivity a hint
 # destroys.
 #
-# Each value is the EXACT allowed hint count — an int when the count is
-# kernel-independent, a {kernel: count} dict when the vector-kernel
-# paths differ (the fold path hints bounded relations — the 10-row
-# query matrix, k centroids — that the arrow path carries in UDF
-# closures instead; the test resolves the ACTIVE kernel, so the other
-# kernel's count never grants headroom). Exact equality, not an upper
-# bound: a removed hint must force the allowlist entry to shrink, or a
-# stale cap would silently admit a future unvetted hint (ADVICE r06).
-BROADCAST_HINT_ALLOWLIST: dict[str, object] = {
+# Each value is the EXACT allowed hint count. Exact equality, not an
+# upper bound: a removed hint must force the allowlist entry to shrink,
+# or a stale cap would silently admit a future unvetted hint (ADVICE
+# r06).
+BROADCAST_HINT_ALLOWLIST: dict[str, int] = {
     # fixed dimension tables: nation = 25 rows, region = 5 at every SF
     "agg_rollup": 2,
     "join_inner_broadcast": 1,
@@ -462,13 +449,11 @@ BROADCAST_HINT_ALLOWLIST: dict[str, object] = {
     "winsorize_prices": 1,
     # PQ codebooks (m × 256 centroids) and per-query distance tables /
     # ground-truth top-k over the FIXED 10-row query evaluation matrix.
-    # similarity_pq_recall composes all four ANN pipelines; counts
-    # measured per kernel in r07: {arrow, fold} — every hinted side
-    # scale-independent under both.
+    # similarity_pq_recall composes all four ANN pipelines; every
+    # hinted side is scale-independent.
     "similarity_pq_adc": 8,
     # the flat-PQ 8 (codebooks + per-query distance tables) + the
-    # coarse-centroid relation (IVF_CELLS rows) on the probe crossJoin;
-    # measured 9 under BOTH kernels
+    # coarse-centroid relation (IVF_CELLS rows) on the probe crossJoin
     "similarity_ivfpq_topk": 9,
     # the at-rest twin: 4 stored codebooks + 4 per-query distance
     # tables (the coarse-probe crossJoin's cents hint is not in the
@@ -490,50 +475,37 @@ BROADCAST_HINT_ALLOWLIST: dict[str, object] = {
     "dedup_incremental_tombstoned": 1,
     # 1-row token total + the 256-row merged CMS matrix (d·w constant)
     "agg_heavy_hitters_cms": 2,
-    "similarity_pq_recall": {"arrow": 16, "fold": 24},
-    "similarity_bruteforce_topk": {"arrow": 0, "fold": 1},  # fold: 10-row query matrix
-    "kmeans_embeddings": {"arrow": 0, "fold": 1},  # fold: k-row centroid relation
+    "similarity_pq_recall": 16,
 }
 
 
 @pytest.fixture(scope="module")
 def registered_plans(spark):
     """One sweep over every registered batch query: builds each ONCE and
-    records (broadcast hints, unpartitioned windows, active vector
-    kernel) for the two repo-wide plan checks below. Streaming queries
+    records (broadcast hints, unpartitioned windows) for the two
+    repo-wide plan checks below. Streaming queries
     are skipped: building one runs a whole stream, and the returned
     DataFrame is a finished memory-table result with no join or window
     surface on the batch side."""
-    from strategy_analyzer_exporter_spark.functions import vector
     from strategy_analyzer_exporter_spark.registry import QUERIES
 
-    kern = vector.kernel()
     out = {}
     for name, fn in sorted(QUERIES.items()):
         if name.startswith("streaming_"):
             continue
         q = fn(spark, SF)
-        out[name] = (
-            P.count_broadcast_hints(q),
-            P.count_unpartitioned_windows(q),
-            kern,
-        )
+        out[name] = (P.count_broadcast_hints(q), P.count_unpartitioned_windows(q))
     return out
 
 
 def test_no_forced_broadcast_of_scaling_relations(registered_plans):
     """Repo-wide broadcast-hint sweep: every registered query's analyzed
-    plan must contain EXACTLY the allowlisted hint count (default 0),
-    resolved for the ACTIVE vector kernel — a new unvetted hint fails
-    under the kernel it is added on, and so does a stale allowlist
-    entry after a hint is removed (ADVICE r06; the kernel-keyed form
-    closes the r07 review's gap where a flat value set accepted the
-    OTHER kernel's count)."""
+    plan must contain EXACTLY the allowlisted hint count (default 0) —
+    a new unvetted hint fails, and so does a stale allowlist entry
+    after a hint is removed (ADVICE r06)."""
     offenders = {}
-    for name, (n, _, kern) in registered_plans.items():
+    for name, (n, _) in registered_plans.items():
         allowed = BROADCAST_HINT_ALLOWLIST.get(name, 0)
-        if isinstance(allowed, dict):
-            allowed = allowed[kern]
         if n != allowed:
             offenders[name] = (n, allowed)
     assert not offenders, offenders
@@ -615,7 +587,7 @@ def test_no_registered_query_has_unpartitioned_window(registered_plans):
     TakeOrderedAndProject + a constant-key window over the k survivors
     (functions/topk.py)."""
     offenders = {
-        name: n for name, (_, n, _) in registered_plans.items() if n
+        name: n for name, (_, n) in registered_plans.items() if n
     }
     assert not offenders, offenders
 

@@ -314,27 +314,25 @@ def test_pq_adc_cell_decision_equals_pairs_twin(spark):
     all-pairs window shape's rows — including adc_dist, which the
     oracle hashes — on sf0.001 AND sf0.01 (the latter has query-cell
     collisions and self-match exclusions in play). r15: the registered
-    default is ``auto`` (metadata decision off the corpus count, the
-    spread_scan pattern), so the shape switch can never change rows —
-    both explicit shapes are pinned equal here and auto must equal
-    them too."""
+    query picks the shape from the corpus count (the spread_scan
+    pattern), so the shape switch can never change rows — both shapes
+    are pinned equal here and the registered query must equal them
+    too."""
     from strategy_analyzer_exporter_spark.operators.pipeline import (
         _corpus_rows,
     )
     from strategy_analyzer_exporter_spark.operators.pq import (
         PQ_K,
         PQ_M,
+        _adc_cells,
+        _adc_pairs,
         _q_pq_adc,
     )
 
     for sf in (SF, "/root/testdata/sf0.01"):
-        cells = sorted(
-            tuple(r) for r in _q_pq_adc(spark, sf, mode="cells").collect()
-        )
-        pairs = sorted(
-            tuple(r) for r in _q_pq_adc(spark, sf, mode="pairs").collect()
-        )
+        cells = sorted(tuple(r) for r in _adc_cells(spark, sf).collect())
+        pairs = sorted(tuple(r) for r in _adc_pairs(spark, sf).collect())
         auto = sorted(tuple(r) for r in _q_pq_adc(spark, sf).collect())
         assert cells == pairs == auto
-        # the auto decision at the gate SFs is pairs (n << K^M)
+        # the registered decision at the gate SFs is pairs (n << K^M)
         assert 0 < _corpus_rows(sf, "embeddings") <= PQ_K**PQ_M

@@ -462,12 +462,12 @@ def _flat_capped_kept(spark, sf_dir):
         _q_kmeans,
         semdedup_k,
     )
-    from strategy_analyzer_exporter_spark.operators.similarity import _cosine
+    from strategy_analyzer_exporter_spark.functions import vector
     from strategy_analyzer_exporter_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     k = semdedup_k(emb.count())
-    x = _q_kmeans(spark, sf_dir, k=k, hint_cents=False).join(emb, "vec_id")
+    x = _q_kmeans(spark, sf_dir, k=k).join(emb, "vec_id")
     a = x.select(
         F.col("vec_id").alias("vec_a"),
         F.col("cid").alias("cid_a"),
@@ -482,7 +482,7 @@ def _flat_capped_kept(spark, sf_dir):
         r["vec_b"]
         for r in a.join(b, a.cid_a == b.cid_b)
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(_cosine(F.col("va"), F.col("vb")) >= SEMDEDUP_COS)
+        .filter(vector.fold_cosine(F.col("va"), F.col("vb")) >= SEMDEDUP_COS)
         .select("vec_b")
         .distinct()
         .collect()
@@ -547,47 +547,47 @@ def test_kc_kf_sql_derivation_matches_python():
         assert (kc_sql, kf_sql) == two_level_kc_kf(k), k
 
 
-def test_fine_assign_kernels_bit_identical(spark, tl_dir, monkeypatch):
-    """The cogrouped-numpy fine assign (arrow) and the pure-Catalyst
-    fold twin produce the identical (vec_id → ccid, fcid) map — the
-    dual-path contract every vector kernel in the repo carries."""
-    from strategy_analyzer_exporter_spark.functions import vector
-    from strategy_analyzer_exporter_spark.operators.pipeline import (
-        two_level_assign,
-    )
-
-    out = {}
-    for kern in ("arrow", "fold"):
-        monkeypatch.setenv(vector.KERNEL_ENV, kern)
-        out[kern] = {
-            r["vec_id"]: (r["ccid"], r["fcid"])
-            for r in two_level_assign(spark, tl_dir, 5).collect()
-        }
-    monkeypatch.delenv(vector.KERNEL_ENV)
-    assert out["arrow"] == out["fold"]
-    assert len(out["arrow"]) == 450
-
-
-def test_kmeans_memos_key_on_absolute_path(spark, tl_dir, monkeypatch):
+def test_kmeans_memos_key_on_absolute_path(spark, tl_dir):
     """A relative and an absolute spelling of the same corpus share one
     memo entry: the second spelling gets the first one's checkpointed
     DataFrame back instead of building and checkpointing it again."""
     import os
 
-    from strategy_analyzer_exporter_spark.functions import vector
     from strategy_analyzer_exporter_spark.operators.pipeline import (
         _q_kmeans,
         two_level_assign,
     )
 
-    monkeypatch.setenv(vector.KERNEL_ENV, "arrow")
     rel = os.path.relpath(tl_dir)
     assert rel != tl_dir
-    flat = _q_kmeans(spark, rel, k=3, hint_cents=False)
-    assert _q_kmeans(spark, tl_dir, k=3, hint_cents=False) is flat
+    flat = _q_kmeans(spark, rel, k=3)
+    assert _q_kmeans(spark, tl_dir, k=3) is flat
     tl = two_level_assign(spark, rel, 6)
     assert two_level_assign(spark, tl_dir, 6) is tl
     assert tl.count() == 450
+
+
+def test_two_level_build_keeps_only_its_summary_entries(spark, tl_dir, tmp_path):
+    """On a corpus no earlier call has seen, a two-level assign leaves
+    exactly two more persisted RDDs: the checkpoints held by the coarse
+    ``kmeans`` entry and the ``two_level`` entry. The per-round fine
+    centroids and the cached (vec_id, ccid, v) relation are released
+    when the build ends."""
+    import os
+    import shutil
+
+    from strategy_analyzer_exporter_spark.operators.pipeline import (
+        two_level_assign,
+    )
+
+    shutil.copy(
+        os.path.join(tl_dir, "embeddings.parquet"), tmp_path / "embeddings.parquet"
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    assert two_level_assign(spark, str(tmp_path), 5).count() == 450
+    grown = set(jsc.getPersistentRDDs().keys()) - before
+    assert len(grown) == 2, grown
 
 
 # ---------------------------------------------------------------------------

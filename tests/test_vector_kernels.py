@@ -1,10 +1,11 @@
-"""Bit-equality between the two vector-kernel paths (arrow vs fold).
+"""Bit-equality between the numpy vector kernels and the Catalyst fold.
 
-The arrow path must be a drop-in replacement for the pinned Catalyst
-fold: same values to the last ulp, for cosine, squared-L2, and the LSH
-bucket signature. Column-wise numpy left-fold == element left-fold is
-an exact identity (same op sequence per row), so any mismatch here is
-a kernel bug, not float noise.
+Each call shape has one path (functions/vector.py), and every path
+must produce the pinned fold's values to the last ulp: the streamed
+brute-force cosine, the squared-L2 and LSH-bucket column UDFs.
+Column-wise numpy left-fold == element left-fold is an exact identity
+(same op sequence per row), so any mismatch here is a kernel bug, not
+float noise.
 """
 
 from __future__ import annotations
@@ -29,15 +30,32 @@ def _emb_pairs(spark):
 
 
 def test_cosine_bit_equal(spark):
-    pairs = _emb_pairs(spark)
-    df = pairs.select(
-        "ia",
-        "ib",
-        vector.fold_cosine(F.col("va"), F.col("vb")).alias("fold"),
-        vector._arrow_cosine()(F.col("va"), F.col("vb")).alias("arrow"),
-    ).toPandas()
-    assert len(df) > 0
-    for f, a in zip(df["fold"], df["arrow"]):
+    """The streamed brute-force scorer (numpy ``stack``/``fold_sum`` in
+    one mapInPandas pass) and ``fold_cosine`` on the same query×corpus
+    pairs agree to the last bit."""
+    from strategy_analyzer_exporter_spark.operators.similarity import (
+        N_QUERIES,
+        _bruteforce_scored_stream,
+    )
+    from strategy_analyzer_exporter_spark.sources.tables import load_table
+
+    emb = load_table(spark, SF, "embeddings")
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    c = emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"))
+    fold = q.crossJoin(c).filter(F.col("query_id") != F.col("cand_id")).select(
+        "query_id",
+        "cand_id",
+        vector.fold_cosine(F.col("qv"), F.col("cv")).alias("fold"),
+    )
+    df = (
+        _bruteforce_scored_stream(emb)
+        .join(fold, ["query_id", "cand_id"], "full")
+        .toPandas()
+    )
+    assert len(df) == N_QUERIES * (emb.count() - 1)
+    for f, a in zip(df["fold"], df["cos_sim"]):
         assert (math.isnan(f) and math.isnan(a)) or f == a, (f, a, f - a)
 
 
@@ -64,19 +82,8 @@ def test_bucket_bit_equal(spark):
     emb = load_table(spark, SF, "embeddings")
     key = tuple(tuple(p) for p in planes)
     df = emb.select(
-        vector._fold_bucket(F.col("embedding"), key).alias("fold"),
+        vector.fold_bucket(F.col("embedding"), key).alias("fold"),
         vector._arrow_bucket(key)(F.col("embedding")).alias("arrow"),
     ).toPandas()
     assert len(df) > 0
     assert (df["fold"] == df["arrow"]).all()
-
-
-def test_kernel_env_dispatch(monkeypatch):
-    monkeypatch.setenv(vector.KERNEL_ENV, "fold")
-    assert vector.kernel() == "fold"
-    monkeypatch.setenv(vector.KERNEL_ENV, "arrow")
-    assert vector.kernel() == "arrow"
-    monkeypatch.setenv(vector.KERNEL_ENV, "bogus")
-    assert vector.kernel() == "arrow"
-    monkeypatch.delenv(vector.KERNEL_ENV)
-    assert vector.kernel() == "arrow"
