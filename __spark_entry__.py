@@ -65,7 +65,9 @@ def _recorded_names() -> tuple[dict[str, int], int, set[str]]:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the reference's full feature pipeline (bars →
     session filter → EMA(9)/EMA(21) → distance/slope/autocorrelation/
-    OLV/CLV → warm-up gate → alphabetical float32 export projection)."""
+    OLV/CLV → warm-up gate → alphabetical float32 export projection),
+    planned as one hash(day) exchange of (day, time, event_id, close)
+    feeding one per-day grouped-map pass that runs every step."""
     from strategy_analyzer_exporter_spark.operators.features import features_df
 
     return features_df(spark, "/root/testdata/sf0.001")
@@ -81,14 +83,12 @@ def entry(spark: SparkSession) -> DataFrame:
 #: no hand-maintained cleanup is needed).
 #: Why each name is in the band: see this file's git history.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
-    "similarity_pq_adc",
-    "text_repetition_signals",
-    "quality_gate_rollup",
     "features_flagship",
-    "features_flagship_full_ema",
     "features_strict_reference_quirk",
+    "streaming_features",
+    "streaming_features_lagged",
 )
-CHANGED_AS_OF_ROUND = 15  # a row from round ≥ 15 post-dates the change
+CHANGED_AS_OF_ROUND = 16  # a row from round ≥ 16 post-dates the change
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

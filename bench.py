@@ -143,11 +143,6 @@ PROBE_QUERIES = (
     # copy → 10× DAYS): the reference's own feature pipeline and the
     # incremental indicator family, measured instead of argued
     "features_flagship",
-    # r07: the single-shuffle applyInPandas twin gets an exponent too —
-    # measured crossover: flagship wins at 1× (1.24 vs 1.47 s), fused
-    # wins at 10× (1.60 vs 1.94 s); the headline keeps the 1×-measured
-    # winner and this probe keeps the crossover on record
-    "features_flagship_fused",
     "bars_macd",
     # r07 (VERDICT r06 #5): the heaviest media decoder — Y4M multi-frame
     # 4:2:0 with per-sampled-frame fan-out inside the Arrow batch.

@@ -18,9 +18,10 @@ bulk-exports them to DuckDB), generalized to a distributed DataFrame engine:
                   (DatabaseWriter.cs:217-256).
 - ``streaming`` — Structured Streaming variants of the feature pipeline.
 
-Everything is declarative DataFrame/SQL so Catalyst plans it; the only
-Python-side compute is the Arrow-batched per-group EMA (inherently
-recursive) and clearly-stubbed multimodal decoders.
+Everything is declarative DataFrame/SQL so Catalyst plans it, except
+where the work is inherently sequential or opaque: the feature export's
+Arrow-batched per-day kernel (bars, EMA fold and window buffers in one
+pass), the vector and text kernels, and clearly-stubbed multimodal decoders.
 """
 
 from strategy_analyzer_exporter_spark.session import get_spark

@@ -1,18 +1,23 @@
-"""Bit-exact Python implementations of the windowed feature math —
-shared by the fused batch pipeline (operators/features.py, one
-applyInPandas pass) and the streaming state operator (streaming/).
+"""Bit-exact Python implementations of the bars derivation and the
+windowed feature math — shared by the batch pipeline
+(operators/features.py, one applyInPandas pass per day) and the
+streaming state operator (streaming/).
 
-Every function reproduces the double op sequence of the Spark-window +
-DECIMAL(38,12) batch expressions (and the DuckDB oracle) exactly:
-per-term HALF_UP quantization to 12 decimals, exact integer sums, ONE
-correctly-rounded conversion back to double, then the same expression
-order. See README "Correctness model".
+Every function reproduces the double op sequence of its Spark/DuckDB
+counterpart: :func:`day_bars` mirrors ``bars_df``/``BARS_CTE``; the
+window sums mirror the DECIMAL(38,12) frame sums of the oracle —
+per-term quantization to 12 decimals (:func:`q12` says where it can
+differ in the last digit), exact integer sums, ONE correctly-rounded
+conversion back to double, then the same expression order. See README
+"Correctness model".
 """
 
 from __future__ import annotations
 
 import math
 from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 
 TOL = 1e-6
 
@@ -23,8 +28,11 @@ _P12 = 10**12
 
 
 def q12(x: float) -> int:
-    """double → DECIMAL(38,12) as a scaled exact integer (the quantize
-    step Spark's cast performs with BigDecimal HALF_UP).
+    """double → DECIMAL(38,12) as a scaled exact integer: the exact
+    binary value rounded HALF_UP. Neither engine's cast does exactly
+    this (Spark rounds the shortest decimal string, DuckDB x·10¹²
+    computed in double); per term they can differ in the last digit,
+    and the window sums almost always round back to the same double.
 
     Implemented with exact integer arithmetic: a double is exactly n/d
     (d a power of two, float.as_integer_ratio), and HALF_UP rounding of
@@ -46,8 +54,37 @@ def q12_decimal(x: float) -> int:
 
 def d12(i: int) -> float:
     """scaled-int decimal → double, one correctly-rounded conversion
-    (the batch path's decimal→string→double)."""
-    return float(Decimal(i).scaleb(-12))
+    (the oracle's decimal→string→double). CPython's int/int true
+    division is correctly rounded, so this equals
+    ``float(Decimal(i).scaleb(-12))`` for every |i| < 10²⁸ (the Decimal
+    context's 28 digits) at a fifth of the cost; property-tested in
+    tests/test_features_pipeline.py."""
+    return i / _P12
+
+
+def day_bars(
+    time: np.ndarray, event_id: np.ndarray, close: np.ndarray
+) -> tuple[np.ndarray, ...]:
+    """One day's bars from its raw events: the numpy mirror of
+    ``bars_df`` / ``BARS_CTE`` (sources/bars.py), bit-identical.
+
+    A stable sort by (time, event_id) keeps each time's first row (the
+    lowest event_id); open is the previous bar's close, the day's first
+    bar opening at its own close; high/low/volume follow the CTE's
+    operation order, with ``np.fmod`` for the engines' sign-of-dividend
+    ``%``. Inputs are one day's null-free columns (the events corpus has
+    no nulls). Returns (time, event_id, open, high, low, close, volume)
+    sorted by time."""
+    order = np.lexsort((event_id, time))
+    time, event_id, close = time[order], event_id[order], close[order]
+    first = np.ones(len(time), dtype=bool)
+    first[1:] = time[1:] != time[:-1]
+    time, event_id, close = time[first], event_id[first], close[first]
+    prev = np.concatenate((close[:1], close[:-1]))
+    high = np.maximum(prev, close) + np.fmod(event_id, 5).astype(np.float64) * 0.01
+    low = np.minimum(prev, close) - np.fmod(event_id, 3).astype(np.float64) * 0.01
+    volume = (1 + np.fmod(event_id, 1000)).astype(np.float64)
+    return time, event_id, prev, high, low, close, volume
 
 
 def loc_value(anchor: float, high: float, low: float) -> float:

@@ -55,19 +55,6 @@ def _q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 register("features_flagship", _q_flagship, features_sql(CFG))
 
 
-def _q_flagship_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same pipeline, single-shuffle execution strategy: the whole
-    per-day computation fused into one applyInPandas pass with
-    incremental exact-integer window sums (features.features_df_fused).
-    Shares the flagship oracle — byte-identical by construction."""
-    from strategy_analyzer_exporter_spark.operators.features import features_df_fused
-
-    return features_df_fused(spark, sf_dir, CFG)
-
-
-register("features_flagship_fused", _q_flagship_fused, features_sql(CFG))
-
-
 def _q_flagship_full_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference-exact EMA seeding (StrategyAnalyzerExporter.cs:138-139):
     EMAs fold once over the whole series — through day boundaries and

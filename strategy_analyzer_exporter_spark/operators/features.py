@@ -13,18 +13,22 @@ time filter → per-day sliding-window features → alphabetical projection
   P3     session time predicate           StrategyAnalyzerExporter.cs:189-194
   P5     warm-up gate (≥20 rows in day)   FeaturesBarService.cs:44
 
-Spark architecture: everything is one declarative plan sharing a single
-``partitionBy(day).orderBy(time)`` exchange — Catalyst computes all
-window arrays in one pass over sorted day-partitions. The only Python
-is the EMA (inherently recursive): an Arrow-batched ``applyInPandas``
-per day doing an O(n) left-fold loop. The fold order (acc + α(x−acc),
-seeded with first close) is identical to the DuckDB oracle's
-``list_reduce`` over prefix lists, so doubles match bit-for-bit.
+Spark architecture: the export is one hash(day) exchange and one Python
+pass. The events scan projects (day, time, event_id, close); an
+Arrow-batched ``applyInPandas`` per day derives the day's bars
+(``functions.exact.day_bars``, the numpy mirror of ``bars_df``), applies
+the session filter, and runs the reference's per-bar buffer loop
+(FeaturesBarService.cs:29-47): the EMA left-fold (acc + α(x−acc), seeded
+with the first close — the DuckDB oracle's ``list_reduce`` op order) and
+sliding exact-integer window sums, so every double matches the oracle
+bit-for-bit. The export projection reads the grouped map's output
+directly: no window node and no second shuffle.
 
 At 100 TB: days partition the data naturally (≈ thousands of rows per
 (instrument, day) group); ``applyInPandas`` groups stay small and
 parallelism is bounded by #days × #instruments, not data volume. The
-window frame is a constant 21 rows, so state per task is O(1).
+window holds a constant 21 rows, so state per group is O(1) beyond the
+day's own rows.
 
 DELIBERATE EMA DIVERGENCE (flagship vs reference binary): the
 reference's NinjaTrader EMA indicators are constructed once for the
@@ -52,8 +56,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from strategy_analyzer_exporter_spark import functions as X
+from strategy_analyzer_exporter_spark.functions import exact
 from strategy_analyzer_exporter_spark.schema import export_select
-from strategy_analyzer_exporter_spark.sources.bars import BARS_CTE, bars_df
+from strategy_analyzer_exporter_spark.sources.bars import BARS_CTE, bar_events, bars_df
 
 
 @dataclass(frozen=True)
@@ -103,7 +108,7 @@ TESTDATA_CONFIG = FeatureConfig(time_start=20000, time_end=235500)
 
 
 # ---------------------------------------------------------------------------
-# W1/W2 — EMA columns (the one Python-side operator)
+# W1/W2 — EMA columns over a bars relation (the per-feature queries)
 
 
 def with_ema(df: DataFrame, cfg: FeatureConfig = FeatureConfig()) -> DataFrame:
@@ -135,47 +140,6 @@ def with_ema(df: DataFrame, cfg: FeatureConfig = FeatureConfig()) -> DataFrame:
                     acc = acc + alpha * (closes[i] - acc)
                     out[i] = acc
             pdf[name] = pd.Series(out, dtype="float64")
-        return pdf
-
-    return df.groupBy("day").applyInPandas(ema_group, out_schema)
-
-
-def _with_ema_and_lag_products(df: DataFrame, cfg: FeatureConfig) -> DataFrame:
-    """EMA columns + their within-day lag products (_y_f = maᵢ·maᵢ₋₁) in
-    ONE grouped-map pass — the products fall out of the same loop, saving
-    a whole WindowExec pass vs computing them with lag() afterwards."""
-    a_fast = 2.0 / (cfg.span_fast + 1.0)
-    a_slow = 2.0 / (cfg.span_slow + 1.0)
-    out_schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("moving_average", T.DoubleType(), False),
-            T.StructField("slow_moving_average", T.DoubleType(), False),
-            T.StructField("_y_f", T.DoubleType(), True),
-            T.StructField("_y_s", T.DoubleType(), True),
-        ]
-    )
-
-    def ema_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("time", kind="mergesort").reset_index(drop=True)
-        closes = [float(v) for v in pdf["close"]]
-        n = len(closes)
-        for alpha, ma_name, y_name in (
-            (a_fast, "moving_average", "_y_f"),
-            (a_slow, "slow_moving_average", "_y_s"),
-        ):
-            ma = [0.0] * n
-            y: list[float | None] = [None] * n
-            if n:
-                acc = closes[0]
-                ma[0] = acc
-                for i in range(1, n):
-                    nxt = acc + alpha * (closes[i] - acc)
-                    ma[i] = nxt
-                    y[i] = nxt * acc
-                    acc = nxt
-            pdf[ma_name] = pd.Series(ma, dtype="float64")
-            pdf[y_name] = pd.Series(y, dtype="float64")
         return pdf
 
     return df.groupBy("day").applyInPandas(ema_group, out_schema)
@@ -250,10 +214,11 @@ def _window_stat_cols(
 
     Known residual: the per-element double→decimal cast itself is not
     engine-identical for magnitudes where 1e-12 is below the double's
-    ulp (Spark rounds the shortest decimal string, DuckDB the exact
-    binary expansion), leaving ~1e-17 relative noise on the staged
-    sums. Measured effect: 1 row in 89,034 lands one float32 ulp off
-    the oracle at sf0.1 (bit-exact at sf0.001 and sf0.01). No decimal
+    ulp (Spark rounds the shortest decimal string, DuckDB x·10¹²
+    computed in double), leaving ~1e-17 relative noise on the staged
+    sums. Measured effect on the flagship when it ran this windowed
+    form: 1 row in 89,034 one float32 ulp off the oracle at sf0.1
+    (bit-exact at sf0.001 and sf0.01). No decimal
     scale fixes this — coarser grids quantize real signal, finer grids
     diverge more (see the measured scale sweep in
     operators/pipeline.kmeans_update); it is the floor of cross-engine
@@ -327,123 +292,116 @@ def _autocorr_from_stats(ma_col: str, sfx: str, cfg: FeatureConfig) -> Column:
     )
 
 
-def features_df_fused(
+#: The grouped map's output: the bar, then the seven features, before
+#: the export projection narrows and orders them.
+_FEATURE_SCHEMA = T.StructType(
+    [
+        T.StructField("day", T.IntegerType()),
+        T.StructField("time", T.IntegerType()),
+        *(
+            T.StructField(c, T.DoubleType())
+            for c in (
+                "open",
+                "high",
+                "low",
+                "close",
+                "volume",
+                "f_moving_average_distance",
+                "f_moving_average_slow_distance",
+                "f_moving_average_autocorrelation",
+                "f_moving_average_slow_autocorrelation",
+                "f_moving_average_slope",
+                "f_open_location_value",
+                "f_close_location_value",
+            )
+        ),
+    ]
+)
+
+
+class _Win:
+    """One EMA series' sliding window with INCREMENTAL exact-integer
+    decimal sums: per row only 3 quantizations (v, v², v·prev) instead
+    of re-summing the whole frame — exact-integer add/subtract is
+    associative, so the sums are bit-identical to the oracle's
+    DECIMAL(38,12) frame sums."""
+
+    __slots__ = ("cap", "vals", "qv", "qvv", "qp", "s", "ss", "p")
+
+    def __init__(self, cap: int) -> None:
+        self.cap = cap
+        self.vals: list[float] = []  # window of MA doubles
+        self.qv: list[int] = []  # q12(v) per position
+        self.qvv: list[int] = []  # q12(v*v) per position
+        self.qp: list[int] = []  # q12(v·prev) per gap (len-1 entries)
+        self.s = self.ss = self.p = 0
+
+    def push(self, v: float) -> None:
+        q12 = exact.q12
+        if self.vals:
+            qp = q12(v * self.vals[-1])
+            self.qp.append(qp)
+            self.p += qp
+        a, b = q12(v), q12(v * v)
+        self.vals.append(v)
+        self.qv.append(a)
+        self.qvv.append(b)
+        self.s += a
+        self.ss += b
+        if len(self.vals) > self.cap:
+            self.s -= self.qv.pop(0)
+            self.ss -= self.qvv.pop(0)
+            self.p -= self.qp.pop(0)
+            self.vals.pop(0)
+
+    def autocorr(self) -> float:
+        return exact.autocorr_from_sums(
+            len(self.vals), self.vals[0], self.vals[-1], self.s, self.ss, self.p
+        )
+
+
+def features_df(
     spark: SparkSession,
     sf_dir: str,
     cfg: FeatureConfig = TESTDATA_CONFIG,
 ) -> DataFrame:
-    """ONE-shuffle variant of :func:`features_df`: the whole per-day
-    computation (EMA fold, sliding window, autocorr/slope/distance/
-    location values, warm-up gate) runs inside a single Arrow-batched
-    ``applyInPandas`` group pass, reusing the bit-exact Python math in
-    functions/exact.py (the same functions that make the streaming
-    operator byte-identical to batch).
+    """events → bars → session filter → EMA → window features → warm-up
+    gate → alphabetical float32 export projection (FIXTURES.md §2
+    schema), in ONE exchange and ONE Python pass.
 
-    vs the windowed impl: saves the post-Python hash(day) exchange and
-    the WindowExec pass — the grouped-map output feeds the export
-    projection directly. Per-day groups are tiny (≤ a session of bars),
-    so the Python loop is O(window) per row with bounded state, exactly
-    the reference's CircularBuffer loop (FeaturesBarService.cs:29-47).
-    tests/test_features_pipeline.py asserts fused == windowed to the
-    byte."""
-    from strategy_analyzer_exporter_spark.functions import exact
-
+    Only (day, time, event_id, close) cross into Python. Per day the
+    kernel derives the bars (:func:`functions.exact.day_bars`), keeps
+    the session rows, then runs the reference's per-bar loop: EMA fold,
+    sliding exact-integer window sums (:class:`_Win`), the
+    ``functions.exact`` features, and the ``bars_required`` gate. Every
+    step mirrors ``features_sql`` bit-for-bit. Requires
+    cfg.autocorr_lag == 1 (the windowed-sums expansion is lag-1; the
+    general-lag array form lives in functions.autocorr)."""
+    if cfg.autocorr_lag != 1:
+        raise ValueError("features_df implements lag-1 autocorrelation")
     a_f = 2.0 / (cfg.span_fast + 1.0)
     a_s = 2.0 / (cfg.span_slow + 1.0)
-    cap = cfg.window
+    cap, bars_required = cfg.window, cfg.bars_required
+    t_start, t_end = cfg.time_start, cfg.time_end
     slope_tol = float(cfg.slope_tolerance)
-    bars_required = cfg.bars_required
-
-    bars = bars_df(spark, sf_dir)
-    sess = bars.filter(
-        (F.col("time") >= cfg.time_start) & (F.col("time") <= cfg.time_end)
-    ).select("day", "time", "open", "high", "low", "close", "volume")
-
-    out_schema = T.StructType(
-        [
-            T.StructField("day", T.IntegerType()),
-            T.StructField("time", T.IntegerType()),
-            T.StructField("open", T.DoubleType()),
-            T.StructField("high", T.DoubleType()),
-            T.StructField("low", T.DoubleType()),
-            T.StructField("close", T.DoubleType()),
-            T.StructField("volume", T.DoubleType()),
-            T.StructField("f_moving_average_distance", T.DoubleType()),
-            T.StructField("f_moving_average_slow_distance", T.DoubleType()),
-            T.StructField("f_moving_average_autocorrelation", T.DoubleType()),
-            T.StructField("f_moving_average_slow_autocorrelation", T.DoubleType()),
-            T.StructField("f_moving_average_slope", T.DoubleType()),
-            T.StructField("f_open_location_value", T.DoubleType()),
-            T.StructField("f_close_location_value", T.DoubleType()),
-        ]
-    )
-    cols = [f.name for f in out_schema.fields]
-
-    q12, d12 = exact.q12, exact.d12
+    cols = _FEATURE_SCHEMA.fieldNames()
     ma_distance, loc_value, sl = exact.ma_distance, exact.loc_value, exact.slope
-    TOL = exact.TOL
-
-    class _Win:
-        """Sliding window with INCREMENTAL exact-integer decimal sums:
-        per row only 3 quantizations (v, v², v·prev) instead of re-summing
-        the whole frame — exact-integer add/subtract is associative, so
-        the sums are bit-identical to recomputing them from scratch."""
-
-        __slots__ = ("vals", "qv", "qvv", "qp", "s", "ss", "p")
-
-        def __init__(self) -> None:
-            self.vals: list[float] = []  # window of MA doubles
-            self.qv: list[int] = []  # q12(v) per position
-            self.qvv: list[int] = []  # q12(v*v) per position
-            self.qp: list[int] = []  # q12(v·prev) per gap (len-1 entries)
-            self.s = self.ss = self.p = 0
-
-        def push(self, v: float) -> None:
-            if self.vals:
-                qp = q12(v * self.vals[-1])
-                self.qp.append(qp)
-                self.p += qp
-            a, b = q12(v), q12(v * v)
-            self.vals.append(v)
-            self.qv.append(a)
-            self.qvv.append(b)
-            self.s += a
-            self.ss += b
-            if len(self.vals) > cap:
-                self.s -= self.qv.pop(0)
-                self.ss -= self.qvv.pop(0)
-                self.p -= self.qp.pop(0)
-                self.vals.pop(0)
-
-        def autocorr(self) -> float:
-            n = float(len(self.vals))
-            if n <= 1.0:
-                return 0.0
-            s = d12(self.s)
-            ss = d12(self.ss)
-            p = d12(self.p)
-            m = s / n
-            first, x = self.vals[0], self.vals[-1]
-            num = p - m * (2.0 * s - first - x) + (n - 1.0) * m * m
-            den = ss - 2.0 * m * s + n * m * m
-            if abs(den) < TOL:
-                return 0.0
-            return num / den
 
     def day_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("time", kind="mergesort")
-        time_a = pdf["time"].to_numpy()
-        day_a = pdf["day"].to_numpy()
-        open_a = pdf["open"].to_numpy()
-        high_a = pdf["high"].to_numpy()
-        low_a = pdf["low"].to_numpy()
-        close_a = pdf["close"].to_numpy()
-        vol_a = pdf["volume"].to_numpy()
+        time_a, _, *ohlcv = exact.day_bars(
+            pdf["time"].to_numpy(), pdf["event_id"].to_numpy(), pdf["close"].to_numpy()
+        )
+        # P3 — session filter after the bars: open is the previous bar's
+        # close even across the session edge, like bars_df
+        sess = (time_a >= t_start) & (time_a <= t_end)
+        time_l, open_l, high_l, low_l, close_l, vol_l = (
+            a[sess].tolist() for a in (time_a, *ohlcv)
+        )
+        day = int(pdf["day"].iat[0])
         ema_f = ema_s = None
-        win_f, win_s = _Win(), _Win()
+        win_f, win_s = _Win(cap), _Win(cap)
         out: list[tuple] = []
-        for i in range(len(time_a)):
-            c = float(close_a[i])
+        for i, c in enumerate(close_l):
             if ema_f is None:
                 ema_f = ema_s = c
             else:
@@ -451,18 +409,15 @@ def features_df_fused(
                 ema_s = ema_s + a_s * (c - ema_s)
             win_f.push(ema_f)
             win_s.push(ema_s)
+            # P5 — warm-up: emit once the day's buffer holds
+            # bars_required rows
             if i + 1 < bars_required:
                 continue
-            o, h, lo, v = (
-                float(open_a[i]),
-                float(high_a[i]),
-                float(low_a[i]),
-                float(vol_a[i]),
-            )
+            o, h, lo, v = open_l[i], high_l[i], low_l[i], vol_l[i]
             out.append(
                 (
-                    int(day_a[i]),
-                    int(time_a[i]),
+                    day,
+                    time_l[i],
                     o,
                     h,
                     lo,
@@ -483,46 +438,16 @@ def features_df_fused(
             res[col] = res[col].astype("int32" if col in ("day", "time") else "float64")
         return res
 
-    feat = sess.groupBy("day").applyInPandas(day_group, out_schema)
+    raw = bar_events(spark, sf_dir).select("day", "time", "event_id", "close")
+    feat = raw.groupBy("day").applyInPandas(day_group, _FEATURE_SCHEMA)
     return export_select(feat, use_float32=cfg.use_float32)
 
 
-def features_df(
-    spark: SparkSession,
-    sf_dir: str,
-    cfg: FeatureConfig = TESTDATA_CONFIG,
-) -> DataFrame:
-    """bars → session filter → EMA → window features → warm-up gate →
-    alphabetical float32 export projection (FIXTURES.md §2 schema).
-
-    One logical day-partitioning serves the whole plan: bars derivation,
-    EMA grouping, and every window feature share hash(day), so after the
-    first exchange everything is sorts + window aggregates within
-    partitions. Requires cfg.autocorr_lag == 1 (the windowed-sums
-    expansion is lag-1; the general-lag array form lives in
-    functions.autocorr)."""
-    if cfg.autocorr_lag != 1:
-        raise ValueError("features_df implements lag-1 autocorrelation")
-    bars = bars_df(spark, sf_dir)
-    # P3 — session predicate first, like the reference (bars outside the
-    # session never enter the buffers). Also lets Catalyst push the
-    # filter into the parquet scan of the underlying events table.
-    sess = bars.filter(
-        (F.col("time") >= cfg.time_start) & (F.col("time") <= cfg.time_end)
-    )
-    # r14 (guide §4.1 — pass only what the boundary needs): event_id /
-    # user_id exist only to derive high/low/volume inside bars_df and
-    # never reach the export projection, but applyInPandas is opaque to
-    # column pruning, so without this drop they cross the Python
-    # boundary both ways (2 of 9 input columns) for nothing.
-    sess = sess.drop("event_id", "user_id")
-    return _staged_to_export(_with_ema_and_lag_products(sess, cfg), cfg)
-
-
 def _staged_to_export(ma: DataFrame, cfg: FeatureConfig) -> DataFrame:
-    """Shared pipeline tail: per-day window stats → autocorr/slope/
-    distance/location features → per-day warm-up gate → alphabetical
-    float32 export projection. ``ma`` must carry day/time/OHLCV plus
+    """Windowed pipeline tail of :func:`features_df_full_ema`: per-day
+    window stats → autocorr/slope/distance/location features → per-day
+    warm-up gate → alphabetical float32 export projection. ``ma`` must
+    carry day/time/OHLCV plus
     moving_average, slow_moving_average, _y_f, _y_s (within-day lag
     products). Window stats: see :func:`_window_stat_cols`."""
     w_day = Window.partitionBy("day").orderBy("time")
@@ -594,8 +519,8 @@ def features_df_full_ema(
     Arrow-batched ``mapInPandas`` carrying the accumulators across
     batches — O(n) compute, O(batch) memory. At scale the parallel unit
     is the instrument (the reference is single-instrument, so this
-    series IS one group); everything downstream of the EMA is the same
-    per-day windowed plan as the flagship."""
+    series IS one group); downstream of the EMA, the per-day window
+    stats run as Spark windows (:func:`_staged_to_export`)."""
     if cfg.autocorr_lag != 1:
         raise ValueError("features_df_full_ema implements lag-1 autocorrelation")
     a_f = 2.0 / (cfg.span_fast + 1.0)
@@ -657,7 +582,7 @@ def features_df_full_ema(
 
 
 def _autocorr_win_sql(sfx: str, lag: int) -> str:
-    """DuckDB mirror of _windowed_autocorr_cols' double arithmetic."""
+    """DuckDB mirror of :func:`_autocorr_from_stats`' double arithmetic."""
     m = f"(s_{sfx} / n_{sfx})"
     x = "moving_average" if sfx == "f" else "slow_moving_average"
     num = f"(p_{sfx} - {m} * (2.0 * s_{sfx} - first_{sfx} - {x}) + (n_{sfx} - 1.0) * {m} * {m})"
@@ -741,8 +666,7 @@ FROM feat"""
 def features_sql(cfg: FeatureConfig = TESTDATA_CONFIG) -> str:
     """DuckDB oracle for :func:`features_df` — same op sequence: EMA by
     left-fold over per-day prefix lists, autocorrelation by exact-decimal
-    bounded-frame window sums (the values _window_stat_cols derives from
-    running sums)."""
+    bounded-frame window sums (the kernel's sliding exact-integer sums)."""
     ema_f = X.ema_fold_sql("_closes", cfg.span_fast)
     ema_s = X.ema_fold_sql("_closes", cfg.span_slow)
     return f"""

@@ -254,8 +254,7 @@ register("bars_bollinger", _q_bollinger, _BOLL_ORACLE)
 # one pinned op sequence (lag-diff, greatest, fold, one divide chain),
 # so rsi14 matches the oracle bit-for-bit.
 #
-# Two implementations per indicator in this family (RSI/ATR/MACD), the
-# features_flagship vs features_flagship_fused precedent:
+# Two implementations per indicator in this family (RSI/ATR/MACD):
 #   - the PRIMARY registered query (bars_rsi/bars_atr/bars_macd) is the
 #     O(n)-per-day incremental grouped-map — the reference's own shape
 #     (O(1) per bar, StrategyAnalyzerExporter.cs:138-139; CircularBuffer

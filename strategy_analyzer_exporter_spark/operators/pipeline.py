@@ -43,7 +43,7 @@ from strategy_analyzer_exporter_spark.functions import (
 )
 from strategy_analyzer_exporter_spark.functions.topk import ranked_init
 from strategy_analyzer_exporter_spark.registry import register, register_deferred
-from strategy_analyzer_exporter_spark.sources.tables import load_table
+from strategy_analyzer_exporter_spark.sources.tables import load_table, spread_scan
 
 # ---------------------------------------------------------------------------
 # Deterministic hash bucketing (shared by sampling + splitting)
@@ -336,12 +336,11 @@ def _q_kmeans(spark: SparkSession, sf_dir: str, k: int = KM_K) -> DataFrame:
     ~1e-10 across engines but not to the ulp (double→decimal rounding
     differs, see kmeans_update), and a dedup/clustering consumer only
     uses the assignment anyway."""
-    from strategy_analyzer_exporter_spark.operators.similarity import _spread
-
-    e = _spread(
+    e = spread_scan(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
+        ),
+        "vec_id",
     )
     cents = ranked_init(e, "vec_id", k, "cid").select(
         "cid", F.col("v").alias("cv")
@@ -610,16 +609,15 @@ def two_level_assign(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     passes v through so the update needs no vec_id join — the r03
     rule), each round ONE cogrouped map pass + one partially-
     aggregated shuffle on (ccid, fcid, pos); see :func:`_fine_rounds`."""
-    from strategy_analyzer_exporter_spark.operators.similarity import _spread
-
     kc, kf = two_level_kc_kf(k)
     coarse = _q_kmeans(spark, sf_dir, k=kc).select(
         "vec_id", F.col("cid").alias("ccid")
     )
-    e = _spread(
+    e = spread_scan(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
+        ),
+        "vec_id",
     )
     ev = coarse.join(e, "vec_id").select("vec_id", "ccid", "v")
 

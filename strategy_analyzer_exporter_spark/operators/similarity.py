@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from strategy_analyzer_exporter_spark.functions import vector
 from strategy_analyzer_exporter_spark.registry import register
-from strategy_analyzer_exporter_spark.sources.tables import load_table
+from strategy_analyzer_exporter_spark.sources.tables import load_table, spread_scan
 
 DIM = 64
 N_PLANES = 8
@@ -70,25 +70,6 @@ def _cosine_sql(a: str, b: str) -> str:
         f"({_dot_fold_sql(a, b)} / "
         f"(sqrt({_dot_fold_sql(a, a)}) * sqrt({_dot_fold_sql(b, b)})))"
     )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure the compute-heavy corpus side has at least default
-    parallelism. A small single-file parquet read is ONE split, which
-    would serialize the O(n·k) scoring stage onto one core; at real
-    scale the scan already yields ≥ this many splits and this is a
-    no-op (the conditional keeps the shuffle out of the 100 TB plan).
-    The split count is metadata-derived (scan_split_count, ADVICE r14)
-    so the no-op decision stays plan-only."""
-    from strategy_analyzer_exporter_spark.sources.tables import scan_split_count
-
-    target = df.sparkSession.sparkContext.defaultParallelism
-    splits = scan_split_count(df)
-    if splits < 0:
-        splits = df.rdd.getNumPartitions()
-    if splits >= target:
-        return df
-    return df.repartition(target, "vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -133,7 +114,7 @@ def _bruteforce_scored_stream(emb: DataFrame) -> DataFrame:
             )
 
     return (
-        _spread(emb)
+        spread_scan(emb, "vec_id")
         .select("vec_id", "embedding")
         .mapInPandas(gen, "query_id long, cand_id long, cos_sim double")
         .filter(F.col("query_id") != F.col("cand_id"))

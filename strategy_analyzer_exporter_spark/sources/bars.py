@@ -61,26 +61,34 @@ bars AS (
 """.strip()
 
 
-def bars_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark-side bars derivation; must match BARS_CTE bit-for-bit.
-
-    Scale notes: the (day, time) dedupe and the lag() are one shuffle on
-    ``day`` — the same partitioning every downstream window feature
-    reuses, so Catalyst plans a single exchange for the whole pipeline.
-    """
-    events = load_table(spark, sf_dir, "events")
-    raw = events.select(
+def bar_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, time, event_id, user_id, close) per event: the derivation's
+    input, before the dedupe. ``bars_df`` and the feature pipeline's
+    per-day kernel (operators/features.py) both start here."""
+    return load_table(spark, sf_dir, "events").select(
         ts_to_day("ts").alias("day"),
         ts_to_time("ts").alias("time"),
         "event_id",
         "user_id",
         (F.lit(100.0) + F.col("value")).alias("close"),
     )
+
+
+def bars_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark-side bars derivation; must match BARS_CTE bit-for-bit.
+
+    Scale notes: the (day, time) dedupe and the lag() are one shuffle on
+    ``day``, shared by every downstream window over the day. The export
+    pipeline runs the same steps per day in numpy instead
+    (``functions.exact.day_bars``, pinned to this relation in
+    tests/test_features_pipeline.py).
+    """
+    raw = bar_events(spark, sf_dir)
     # dedupe to the lowest event_id per (day, time) WITHIN the day
     # partition: sorting by (time, event_id) and keeping each time's
     # first row is equivalent to row_number()=1 over (day, time) but
-    # shares the hash(day) exchange with everything downstream — one
-    # shuffle for the whole bars+features pipeline instead of two
+    # shares the hash(day) exchange with the lag() and every day window
+    # downstream — one shuffle for the bars relation instead of two
     w_seq = Window.partitionBy("day").orderBy("time", "event_id")
     dedup = (
         raw.withColumn("_prev_t", F.lag("time").over(w_seq))

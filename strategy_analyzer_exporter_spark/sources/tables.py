@@ -123,10 +123,7 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     never enters the plan. Callers must pass a RAW scan (the split
     count is metadata-derived — scan_split_count — so the no-op path
     stays plan-only, ADVICE r14) and must be order-independent (exact
-    decimal/integer aggregates, windows with explicit ordering).
-
-    Same conditional as similarity._spread / dedup._gram_rows, hoisted
-    for the relational operators (r14)."""
+    decimal/integer aggregates, windows with explicit ordering)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     splits = scan_split_count(df)
     if splits < 0:

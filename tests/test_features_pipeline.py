@@ -18,6 +18,11 @@ from strategy_analyzer_exporter_spark.sources.bars import bars_df
 SF = "/root/testdata/sf0.001"
 
 
+def _sf(scale: str) -> str:
+    """The test corpus at another scale factor, next to SF."""
+    return f"{SF.rsplit('/', 1)[0]}/sf{scale}"
+
+
 def _mini_bars(spark, days):
     """days: {day_int: n_rows}; close follows a deterministic walk."""
     rows = []
@@ -132,43 +137,6 @@ def test_bars_derivation_deterministic(spark):
         assert r["low"] <= min(r["open"], r["close"])
 
 
-def test_fused_pipeline_byte_equal_to_windowed(spark):
-    """features_df_fused (one applyInPandas pass, incremental
-    exact-integer window sums) must reproduce the windowed+decimal
-    pipeline to the byte — same floats, same float32 narrowing."""
-    from strategy_analyzer_exporter_spark.operators.features import (
-        TESTDATA_CONFIG,
-        features_df,
-        features_df_fused,
-    )
-
-    a = (
-        features_df(spark, SF, TESTDATA_CONFIG)
-        .toPandas()
-        .sort_values(["day", "time"])
-        .reset_index(drop=True)
-    )
-    b = (
-        features_df_fused(spark, SF, TESTDATA_CONFIG)
-        .toPandas()
-        .sort_values(["day", "time"])
-        .reset_index(drop=True)
-    )
-    assert list(a.columns) == list(b.columns)
-    assert a.equals(b)
-
-
-def test_fused_pipeline_single_exchange(spark):
-    from strategy_analyzer_exporter_spark import plans as P
-    from strategy_analyzer_exporter_spark.operators.features import (
-        TESTDATA_CONFIG,
-        features_df_fused,
-    )
-
-    df = features_df_fused(spark, SF, TESTDATA_CONFIG)
-    assert P.count_exchanges(df) <= 1, P.physical_plan(df)
-
-
 def test_q12_integer_matches_decimal_reference():
     """q12's integer HALF_UP rounding must be bit-identical to the
     Decimal reference over the representable domain."""
@@ -183,6 +151,96 @@ def test_q12_integer_matches_decimal_reference():
         cases.append(rnd.uniform(-1, 1) * (10 ** rnd.uniform(-15, 15)))
     for x in cases:
         assert q12(x) == q12_decimal(x), repr(x)
+
+
+def test_d12_matches_decimal_reference():
+    """d12's int/int true division must equal the Decimal conversion it
+    replaced, float(Decimal(i).scaleb(-12)), bit for bit: both are one
+    correctly-rounded step for |i| < 10**28 (the window sums stay far
+    below, ~1e21)."""
+    import random
+    from decimal import Decimal
+
+    from strategy_analyzer_exporter_spark.functions.exact import d12
+
+    rnd = random.Random(20261019)
+    cases = [0, 1, -1, 5 * 10**11, 10**12, -(10**12), 2**53, 2**53 + 1,
+             -(2**53 + 1), 10**22, -(10**22), 10**28 - 1, -(10**28 - 1)]
+    for _ in range(50000):
+        mag = 10 ** rnd.randint(0, 22)
+        cases.append(rnd.randint(-mag, mag))
+    for i in cases:
+        assert d12(i) == float(Decimal(i).scaleb(-12)), i
+
+
+def _bits_equal(a, b) -> bool:
+    """Byte-for-byte column equality (floats compared as their bits)."""
+    import numpy as np
+
+    a, b = np.asarray(a), np.asarray(b)
+    if a.dtype.kind == "f" or b.dtype.kind == "f":
+        return np.array_equal(
+            a.astype(np.float64).view(np.int64), b.astype(np.float64).view(np.int64)
+        )
+    return np.array_equal(a.astype(np.int64), b.astype(np.int64))
+
+
+def test_day_bars_pinned_to_bars_df_and_cte(spark):
+    """The per-day numpy bars step of features_df must reproduce
+    bars_df AND the oracle's BARS_CTE byte for byte. The events are fed
+    in shuffled order, so day_bars' own sort and dedupe do the work."""
+    import pandas as pd
+
+    from oracle_harness import duckdb_con
+    from strategy_analyzer_exporter_spark.functions.exact import day_bars
+    from strategy_analyzer_exporter_spark.sources.bars import BARS_CTE, bar_events
+
+    d = _sf("0.01")
+    cols = ["day", "time", "event_id", "open", "high", "low", "close", "volume"]
+    raw = bar_events(spark, d).select("day", "time", "event_id", "close").toPandas()
+    assert raw.duplicated(["day", "time"]).any()  # the dedupe is exercised
+    raw = raw.sample(frac=1.0, random_state=7)
+    parts = []
+    for day, g in raw.groupby("day", sort=True):
+        arrs = day_bars(
+            g["time"].to_numpy(), g["event_id"].to_numpy(), g["close"].to_numpy()
+        )
+        parts.append(pd.DataFrame(dict(zip(cols[1:], arrs))).assign(day=day))
+    got = pd.concat(parts, ignore_index=True)[cols]
+
+    want_df = (
+        bars_df(spark, d).select(*cols).toPandas()
+        .sort_values(["day", "time"]).reset_index(drop=True)
+    )
+    con = duckdb_con(d)
+    want_cte = con.execute(
+        f"WITH {BARS_CTE} SELECT {', '.join(cols)} FROM bars ORDER BY day, time"
+    ).fetchdf()
+    con.close()
+    for want in (want_df, want_cte):
+        assert len(got) == len(want) > 0
+        for c in cols:
+            assert _bits_equal(got[c], want[c]), c
+
+
+def test_day_bars_duplicate_time_and_first_bar():
+    """A later-arriving lower event_id wins its time; the day's first
+    bar opens at its own close; high/low/volume use the id residues."""
+    import numpy as np
+
+    from strategy_analyzer_exporter_spark.functions.exact import day_bars
+
+    time = np.array([100, 50, 100, 200], dtype=np.int32)
+    event_id = np.array([9, 4, 7, 12], dtype=np.int64)
+    close = np.array([101.5, 100.25, 103.0, 99.0])
+    t, e, o, h, lo, c, v = (a.tolist() for a in day_bars(time, event_id, close))
+    assert t == [50, 100, 200]
+    assert e == [4, 7, 12]
+    assert c == [100.25, 103.0, 99.0]
+    assert o == [100.25, 100.25, 103.0]
+    assert h == [100.25 + 4.0 * 0.01, 103.0 + 2.0 * 0.01, 103.0 + 2.0 * 0.01]
+    assert lo == [100.25 - 1.0 * 0.01, 100.25 - 1.0 * 0.01, 99.0 - 0.0 * 0.01]
+    assert v == [5.0, 8.0, 13.0]
 
 
 def test_autocorr_from_sums_bit_equals_windowed():
@@ -235,23 +293,46 @@ def test_autocorr_from_sums_bit_equals_windowed():
             assert a == b, (trial, x, win, a, b)
 
 
-def test_running_stats_byte_equal_to_frame_stats(spark):
-    """The O(1)-per-row running-sum/lag window stats must reproduce the
-    oracle's bounded-frame sums (``features_sql``: ROWS BETWEEN frames
-    over exact decimals) to the bit at BOTH gate scales — the decimal
-    sliding sums are exact integers, so difference-of-running-sums is
-    the identical value, and everything downstream is the same pinned
-    float64 sequence. Also guards the decimal(30,12) re-cast: a naked
-    (38,12)−(38,12) difference goes through Spark's precision-loss
-    path (scale 12 → 11) and rounds the quantized grid (measured: 1
-    row at sf0.01 without it)."""
+def test_features_df_bit_exact_to_oracle(spark):
+    """The one-pass kernel must reproduce ``features_sql`` (bounded
+    DECIMAL(38,12) frames over the SQL bars) to the bit at all three
+    scales. sf0.1 holds a row whose double→decimal cast differs between
+    Spark and DuckDB; the kernel's exact-integer quantization matches
+    the oracle there too."""
     from oracle_harness import compare
 
     from strategy_analyzer_exporter_spark.operators.features import features_sql
 
-    for sf in ("0.001", "0.01"):
-        d = f"/root/testdata/sf{sf}"
+    for sf in ("0.001", "0.01", "0.1"):
+        d = _sf(sf)
         r = compare(
             features_df(spark, d, TESTDATA_CONFIG), features_sql(TESTDATA_CONFIG), sf_dir=d
+        )
+        assert r["ok"], (sf, r["detail"])
+
+
+def test_running_stats_byte_equal_to_frame_stats(spark):
+    """The O(1)-per-row running-sum/lag window stats (features_df_full_ema's
+    windowed tail) must reproduce the oracle's bounded-frame sums
+    (ROWS BETWEEN frames over exact decimals) to the bit at BOTH gate
+    scales — the decimal sliding sums are exact integers, so
+    difference-of-running-sums is the identical value, and everything
+    downstream is the same pinned float64 sequence. Also guards the
+    decimal(30,12) re-cast: a naked (38,12)−(38,12) difference goes
+    through Spark's precision-loss path (scale 12 → 11) and rounds the
+    quantized grid."""
+    from oracle_harness import compare
+
+    from strategy_analyzer_exporter_spark.operators.features import (
+        features_df_full_ema,
+        features_full_ema_sql,
+    )
+
+    for sf in ("0.001", "0.01"):
+        d = _sf(sf)
+        r = compare(
+            features_df_full_ema(spark, d, TESTDATA_CONFIG),
+            features_full_ema_sql(TESTDATA_CONFIG),
+            sf_dir=d,
         )
         assert r["ok"], (sf, r["detail"])
