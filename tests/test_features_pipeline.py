@@ -137,6 +137,21 @@ def test_bars_derivation_deterministic(spark):
         assert r["low"] <= min(r["open"], r["close"])
 
 
+def test_fused_pipeline_single_exchange(spark):
+    """The fused per-day pipeline shuffles once, and that one exchange
+    partitions by day: every row of a day reaches the same kernel call."""
+    import re
+
+    from strategy_analyzer_exporter_spark import plans as P
+
+    df = features_df(spark, SF, TESTDATA_CONFIG)
+    plan = P.physical_plan(df)
+    assert P.count_exchanges(df) == 1, plan
+    keys = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    assert len(keys) == 1, plan
+    assert re.sub(r"#\d+L?", "", keys[0].split(",")[0]).strip() == "day", plan
+
+
 def test_q12_integer_matches_decimal_reference():
     """q12's integer HALF_UP rounding must be bit-identical to the
     Decimal reference over the representable domain."""
