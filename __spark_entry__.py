@@ -84,6 +84,7 @@ def entry(spark: SparkSession) -> DataFrame:
 #: Why each name is in the band: see this file's git history.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
     "features_flagship",
+    "features_flagship_full_ema",
     "features_strict_reference_quirk",
     "streaming_features",
     "streaming_features_lagged",

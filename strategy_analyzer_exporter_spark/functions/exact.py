@@ -1,11 +1,11 @@
 """Bit-exact Python implementations of the bars derivation and the
-windowed feature math — shared by the batch pipeline
-(operators/features.py, one applyInPandas pass per day) and the
-streaming state operator (streaming/).
+windowed feature math, shared by the batch export kernel and the
+full-EMA query (operators/features.py) and by the streaming state
+operator (streaming/): all three run :class:`DayStep` over :class:`Win`.
 
-Every function reproduces the double op sequence of its Spark/DuckDB
-counterpart: :func:`day_bars` mirrors ``bars_df``/``BARS_CTE``; the
-window sums mirror the DECIMAL(38,12) frame sums of the oracle —
+Every function reproduces the double op sequence of its DuckDB oracle:
+:func:`day_bars` mirrors ``bars_df``/``BARS_CTE``; the window sums
+mirror the DECIMAL(38,12) frame sums of ``_features_tail_sql`` —
 per-term quantization to 12 decimals (:func:`q12` says where it can
 differ in the last digit), exact integer sums, ONE correctly-rounded
 conversion back to double, then the same expression order. See README
@@ -15,6 +15,8 @@ conversion back to double, then the same expression order. See README
 from __future__ import annotations
 
 import math
+from collections import deque
+from collections.abc import Iterable
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
@@ -106,9 +108,10 @@ def ma_distance(close: float, ma: float) -> float:
 
 
 def autocorr_windowed(win: list[float], prev_products: list[float]) -> float:
-    """W4 lag-1 autocorrelation over the trailing window, the batch
-    windowed-sums expansion (operators/features.py::_autocorr_from_stats):
-    quantized sums, then num/den in the exact expression order."""
+    """W4 lag-1 autocorrelation over the trailing window by full re-sum:
+    the test reference for :func:`autocorr_from_sums` and :class:`Win`
+    (quantized sums, then num/den in the oracle's expression order,
+    ``_autocorr_win_sql``)."""
     n = float(len(win))
     if n <= 1.0:
         return 0.0
@@ -153,20 +156,110 @@ def autocorr_from_sums(
     return num / den
 
 
-def slope(win: list[float], current: float, tolerance: float) -> float:
-    """W5 slope: percent change first→current over the window."""
-    if len(win) < 2:
-        return 0.0
-    return slope_first(win[0], len(win), current, tolerance)
-
-
-def slope_first(
-    first: float, n_elems: int, current: float, tolerance: float
-) -> float:
-    """:func:`slope` taking the window's first element + length directly
-    (the streaming updater tracks both without materializing a list)."""
+def slope(first: float, n_elems: int, current: float, tolerance: float) -> float:
+    """W5 slope: percent change from the window's first value to the
+    current one."""
     if n_elems < 2:
         return 0.0
     if abs(first) < tolerance:
         return 0.0
     return (current - first) / first * 100.0
+
+
+class Win:
+    """One EMA series' sliding window (the reference's capacity-21
+    circular buffer, CircularBuffer.cs:30-37) with INCREMENTAL
+    exact-integer decimal sums: per pushed value only 3 quantizations
+    (v, v², v·prev) instead of re-summing the whole frame. Exact integer
+    add/subtract is associative, so the sums are bit-identical to the
+    oracle's DECIMAL(38,12) frame sums, and pushing a persisted window's
+    values again rebuilds the same sums."""
+
+    __slots__ = ("cap", "vals", "qv", "qvv", "qp", "s", "ss", "p")
+
+    def __init__(self, cap: int, vals: Iterable[float] = ()) -> None:
+        self.cap = cap
+        self.vals: deque[float] = deque()  # window of MA doubles
+        self.qv: deque[int] = deque()  # q12(v) per position
+        self.qvv: deque[int] = deque()  # q12(v*v) per position
+        self.qp: deque[int] = deque()  # q12(v·prev) per gap (len-1 entries)
+        self.s = self.ss = self.p = 0
+        for v in vals:
+            self.push(v)
+
+    def push(self, v: float) -> None:
+        vals = self.vals
+        if vals:
+            qp = q12(v * vals[-1])
+            self.qp.append(qp)
+            self.p += qp
+        a, b = q12(v), q12(v * v)
+        vals.append(v)
+        self.qv.append(a)
+        self.qvv.append(b)
+        self.s += a
+        self.ss += b
+        if len(vals) > self.cap:
+            self.s -= self.qv.popleft()
+            self.ss -= self.qvv.popleft()
+            self.p -= self.qp.popleft()
+            vals.popleft()
+
+
+#: The features :class:`DayStep` returns, in this order (the export's
+#: alphabetical order).
+STEP_FEATURES = (
+    "f_close_location_value",
+    "f_moving_average_autocorrelation",
+    "f_moving_average_distance",
+    "f_moving_average_slope",
+    "f_moving_average_slow_autocorrelation",
+    "f_moving_average_slow_distance",
+    "f_open_location_value",
+)
+
+
+class DayStep:
+    """One day's per-bar feature update (FeaturesBarService.cs:29-47):
+    push both EMAs into their windows, apply the warm-up gate (P5: emit
+    once the day holds ``bars_required`` rows) and compute the seven
+    :data:`STEP_FEATURES`. The caller folds the EMAs, since each caller
+    scopes them differently, and feeds only session bars.
+
+    ``cfg`` is a ``FeatureConfig`` (``window``, ``bars_required``,
+    ``slope_tolerance``); ``n_rows``/``wf``/``ws`` restore a persisted
+    day (the streaming state's row count and window values)."""
+
+    __slots__ = ("n", "win_f", "win_s", "required", "tol")
+
+    def __init__(
+        self,
+        cfg,
+        n_rows: int = 0,
+        wf: Iterable[float] = (),
+        ws: Iterable[float] = (),
+    ) -> None:
+        self.n = n_rows
+        self.win_f, self.win_s = Win(cfg.window, wf), Win(cfg.window, ws)
+        self.required = cfg.bars_required
+        self.tol = float(cfg.slope_tolerance)
+
+    def __call__(
+        self, o: float, h: float, lo: float, c: float, ema_f: float, ema_s: float
+    ) -> tuple[float, ...] | None:
+        wf, ws = self.win_f, self.win_s
+        wf.push(ema_f)
+        ws.push(ema_s)
+        self.n += 1
+        if self.n < self.required:
+            return None
+        n, first_f, first_s = len(wf.vals), wf.vals[0], ws.vals[0]
+        return (
+            loc_value(c, h, lo),
+            autocorr_from_sums(n, first_f, ema_f, wf.s, wf.ss, wf.p),
+            ma_distance(c, ema_f),
+            slope(first_f, n, ema_f, self.tol),
+            autocorr_from_sums(n, first_s, ema_s, ws.s, ws.ss, ws.p),
+            ma_distance(c, ema_s),
+            loc_value(o, h, lo),
+        )

@@ -20,9 +20,10 @@ Arrow-batched ``applyInPandas`` per day derives the day's bars
 the session filter, and runs the reference's per-bar buffer loop
 (FeaturesBarService.cs:29-47): the EMA left-fold (acc + α(x−acc), seeded
 with the first close — the DuckDB oracle's ``list_reduce`` op order) and
-sliding exact-integer window sums, so every double matches the oracle
-bit-for-bit. The export projection reads the grouped map's output
-directly: no window node and no second shuffle.
+``functions.exact.DayStep``'s sliding exact-integer window sums, so every
+double matches the oracle bit-for-bit. The export projection reads the
+grouped map's output directly: no window node and no second shuffle.
+The full-EMA query and the streaming operator run the same ``DayStep``.
 
 At 100 TB: days partition the data naturally (≈ thousands of rows per
 (instrument, day) group); ``applyInPandas`` groups stay small and
@@ -50,6 +51,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -58,7 +60,7 @@ from pyspark.sql import types as T
 from strategy_analyzer_exporter_spark import functions as X
 from strategy_analyzer_exporter_spark.functions import exact
 from strategy_analyzer_exporter_spark.schema import export_select
-from strategy_analyzer_exporter_spark.sources.bars import BARS_CTE, bar_events, bars_df
+from strategy_analyzer_exporter_spark.sources.bars import BARS_CTE, bar_events
 
 
 @dataclass(frozen=True)
@@ -164,200 +166,37 @@ def with_ema_fold(df: DataFrame, cfg: FeatureConfig = FeatureConfig()) -> DataFr
 # Full pipeline
 
 
-def _dec_to_double(c: Column) -> Column:
-    """decimal → double THROUGH a string (see functions.dsum: engines'
-    direct decimal→double casts can differ by 1 ulp)."""
-    return c.cast("string").cast("double")
-
-
-def _window_stat_cols(
-    ma_col: str, y_col: str, sfx: str, w_day, cfg: FeatureConfig
-) -> tuple[dict[str, Column], dict[str, Column]]:
-    """The five window statistics feeding lag-1 autocorrelation + slope
-    (count, sum, sum of squares, lag-product sum and first value over
-    the last ``window`` rows of the day), as pure window aggregates (no
-    arrays, no interpreted lambdas — everything stays in WindowExec /
-    whole-stage codegen).
-
-    Each frame is O(1) per row: Spark evaluates a bounded
-    ``rowsBetween(-20, 0)`` aggregate by RE-AGGREGATING the whole frame
-    for every row, so each sliding sum is instead the difference of two
-    RUNNING sums (UnboundedPreceding frames are incrementally
-    maintained) picked up via ``lag``. first-of-frame is
-    ``lag(x, window-1)`` with the day's running first as fallback, and
-    the frame count is ``least(row_number, window)`` (x is never null).
-    The bounded-frame shape it replaced is measured in
-    OPTIMIZATION_r15.md §4.
-
-    The sums are computed over DECIMAL so they are exact and
-    independent of fold order — Spark folds a frame sequentially while
-    DuckDB (the oracle's bounded frames) uses a segment tree, so double
-    sums would disagree in the last bit; exact decimal sums cannot, and
-    a difference of exact running sums equals the frame sum (day
-    cumulatives ≤ ~1e21 ≪ the 10^26 capacity of decimal(38,12)). The
-    running sums are RE-CAST to decimal(30,12) before the difference: a
-    (38,12)−(38,12) result needs precision 39, which Spark caps by
-    REDUCING the scale to 11 — silently rounding the 12th decimal off
-    the quantized grid (measured: 1 row differs at sf0.01). (30,12) is
-    exact for any day-cumulative here (integer part ≤ 1e18 ≫ the ~1e9
-    bound of an 86400-bar day of ma² sums) and subtracts to (31,12).
-
-    Returns TWO projection-stage dicts (running sums, then stats from
-    them): Catalyst does NOT dedupe textually-identical window
-    expressions, so referencing a running sum both directly and under
-    ``lag`` in one projection would materialize it twice, and inlining
-    the stats into the autocorr arithmetic would multiply each window
-    expression many times over. Stage 1 names the cumulative columns
-    and stage 2's lags/differences reference plain columns; both stages
-    share one (day, time) sort — two adjacent Window nodes, no extra
-    exchange.
-
-    Known residual: the per-element double→decimal cast itself is not
-    engine-identical for magnitudes where 1e-12 is below the double's
-    ulp (Spark rounds the shortest decimal string, DuckDB x·10¹²
-    computed in double), leaving ~1e-17 relative noise on the staged
-    sums. Measured effect on the flagship when it ran this windowed
-    form: 1 row in 89,034 one float32 ulp off the oracle at sf0.1
-    (bit-exact at sf0.001 and sf0.01). No decimal
-    scale fixes this — coarser grids quantize real signal, finer grids
-    diverge more (see the measured scale sweep in
-    operators/pipeline.kmeans_update); it is the floor of cross-engine
-    float parity for windowed sums of arbitrary doubles."""
-    wrun = w_day.rowsBetween(Window.unboundedPreceding, 0)
-    x = F.col(ma_col)
-    dec = "decimal(38,12)"
-    ndec = "decimal(30,12)"
-    zero = F.lit(0).cast(ndec)
-    y = F.col(y_col).cast(dec)
-    cums = {
-        f"_cs_{sfx}": F.sum(x.cast(dec)).over(wrun).cast(ndec),
-        f"_css_{sfx}": F.sum((x * x).cast(dec)).over(wrun).cast(ndec),
-        f"_cp_{sfx}": F.sum(y).over(wrun).cast(ndec),
-        f"_dayfirst_{sfx}": F.first(x).over(wrun),
-    }
-    cs, css, cp = (
-        F.col(f"_cs_{sfx}"),
-        F.col(f"_css_{sfx}"),
-        F.col(f"_cp_{sfx}"),
-    )
-    stats = {
-        f"_n_{sfx}": F.least(
-            F.row_number().over(w_day), F.lit(cfg.window)
-        ).cast("double"),
-        f"_s_{sfx}": _dec_to_double(
-            cs - F.coalesce(F.lag(cs, cfg.window).over(w_day), zero)
-        ),
-        f"_ss_{sfx}": _dec_to_double(
-            css - F.coalesce(F.lag(css, cfg.window).over(w_day), zero)
-        ),
-        f"_p_{sfx}": _dec_to_double(
-            F.coalesce(cp, zero)
-            - F.coalesce(F.lag(cp, cfg.window - 1).over(w_day), zero)
-        ),
-        f"_first_{sfx}": F.coalesce(
-            F.lag(x, cfg.window - 1).over(w_day),
-            F.col(f"_dayfirst_{sfx}"),
-        ),
-    }
-    return cums, stats
-
-
-def _autocorr_from_stats(ma_col: str, sfx: str, cfg: FeatureConfig) -> Column:
-    """Lag-1 autocorrelation from the staged window stats.
-
-    Algebra (identical formula to Common.cs:29-60, expanded):
-      m   = s/n
-      num = Σ x_i·x_{i−1} − m(Σ_{i≥1}x_i + Σ_{i≥1}x_{i−1}) + (n−1)m²
-          = p − m(2s − first − x) + (n−1)m²
-      den = Σx² − 2ms + nm²
-    Versus the array fold form (functions.autocorr, used by the
-    standalone feature_autocorr query) the VALUES may differ by ~1e-15:
-    same formula, different-but-pinned rounding order. Each query matches
-    its own oracle exactly."""
-    x = F.col(ma_col)
-    n, s, ss, p, first = (
-        F.col(f"_n_{sfx}"),
-        F.col(f"_s_{sfx}"),
-        F.col(f"_ss_{sfx}"),
-        F.col(f"_p_{sfx}"),
-        F.col(f"_first_{sfx}"),
-    )
-    m = s / n
-    num = p - m * (F.lit(2.0) * s - first - x) + (n - F.lit(1.0)) * m * m
-    den = ss - F.lit(2.0) * m * s + n * m * m
-    return (
-        F.when(n <= F.lit(float(cfg.autocorr_lag)), F.lit(0.0))
-        .when(F.abs(den) < X.TOLERANCE, F.lit(0.0))
-        .otherwise(num / den)
-    )
-
-
-#: The grouped map's output: the bar, then the seven features, before
-#: the export projection narrows and orders them.
+#: The per-day kernels' output: the bar, then :data:`exact.STEP_FEATURES`,
+#: before the export projection narrows and orders them.
 _FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("day", T.IntegerType()),
         T.StructField("time", T.IntegerType()),
         *(
             T.StructField(c, T.DoubleType())
-            for c in (
-                "open",
-                "high",
-                "low",
-                "close",
-                "volume",
-                "f_moving_average_distance",
-                "f_moving_average_slow_distance",
-                "f_moving_average_autocorrelation",
-                "f_moving_average_slow_autocorrelation",
-                "f_moving_average_slope",
-                "f_open_location_value",
-                "f_close_location_value",
-            )
+            for c in ("open", "high", "low", "close", "volume", *exact.STEP_FEATURES)
         ),
     ]
 )
 
 
-class _Win:
-    """One EMA series' sliding window with INCREMENTAL exact-integer
-    decimal sums: per row only 3 quantizations (v, v², v·prev) instead
-    of re-summing the whole frame — exact-integer add/subtract is
-    associative, so the sums are bit-identical to the oracle's
-    DECIMAL(38,12) frame sums."""
+def _feature_frame(rows: list[tuple]) -> pd.DataFrame:
+    """Kernel output rows → a frame of :data:`_FEATURE_SCHEMA`, with
+    explicit dtypes so empty outputs (all rows gated) serialize too."""
+    cols = _FEATURE_SCHEMA.fieldNames()
+    res = pd.DataFrame(rows, columns=cols)
+    for col in cols:
+        res[col] = res[col].astype("int32" if col in ("day", "time") else "float64")
+    return res
 
-    __slots__ = ("cap", "vals", "qv", "qvv", "qp", "s", "ss", "p")
 
-    def __init__(self, cap: int) -> None:
-        self.cap = cap
-        self.vals: list[float] = []  # window of MA doubles
-        self.qv: list[int] = []  # q12(v) per position
-        self.qvv: list[int] = []  # q12(v*v) per position
-        self.qp: list[int] = []  # q12(v·prev) per gap (len-1 entries)
-        self.s = self.ss = self.p = 0
-
-    def push(self, v: float) -> None:
-        q12 = exact.q12
-        if self.vals:
-            qp = q12(v * self.vals[-1])
-            self.qp.append(qp)
-            self.p += qp
-        a, b = q12(v), q12(v * v)
-        self.vals.append(v)
-        self.qv.append(a)
-        self.qvv.append(b)
-        self.s += a
-        self.ss += b
-        if len(self.vals) > self.cap:
-            self.s -= self.qv.pop(0)
-            self.ss -= self.qvv.pop(0)
-            self.p -= self.qp.pop(0)
-            self.vals.pop(0)
-
-    def autocorr(self) -> float:
-        return exact.autocorr_from_sums(
-            len(self.vals), self.vals[0], self.vals[-1], self.s, self.ss, self.p
-        )
+def _day_bars(pdf: pd.DataFrame) -> list[np.ndarray]:
+    """One day's events → its bars (:func:`functions.exact.day_bars`):
+    time, open, high, low, close, volume."""
+    time_a, _, *ohlcv = exact.day_bars(
+        pdf["time"].to_numpy(), pdf["event_id"].to_numpy(), pdf["close"].to_numpy()
+    )
+    return [time_a, *ohlcv]
 
 
 def features_df(
@@ -371,135 +210,41 @@ def features_df(
 
     Only (day, time, event_id, close) cross into Python. Per day the
     kernel derives the bars (:func:`functions.exact.day_bars`), keeps
-    the session rows, then runs the reference's per-bar loop: EMA fold,
-    sliding exact-integer window sums (:class:`_Win`), the
-    ``functions.exact`` features, and the ``bars_required`` gate. Every
-    step mirrors ``features_sql`` bit-for-bit. Requires
+    the session rows, folds the EMAs over them and runs
+    :class:`functions.exact.DayStep` per bar (sliding exact-integer
+    window sums, the ``functions.exact`` features, the ``bars_required``
+    gate). Every step mirrors ``features_sql`` bit-for-bit. Requires
     cfg.autocorr_lag == 1 (the windowed-sums expansion is lag-1; the
     general-lag array form lives in functions.autocorr)."""
     if cfg.autocorr_lag != 1:
         raise ValueError("features_df implements lag-1 autocorrelation")
     a_f = 2.0 / (cfg.span_fast + 1.0)
     a_s = 2.0 / (cfg.span_slow + 1.0)
-    cap, bars_required = cfg.window, cfg.bars_required
     t_start, t_end = cfg.time_start, cfg.time_end
-    slope_tol = float(cfg.slope_tolerance)
-    cols = _FEATURE_SCHEMA.fieldNames()
-    ma_distance, loc_value, sl = exact.ma_distance, exact.loc_value, exact.slope
 
     def day_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        time_a, _, *ohlcv = exact.day_bars(
-            pdf["time"].to_numpy(), pdf["event_id"].to_numpy(), pdf["close"].to_numpy()
-        )
+        day = int(pdf["day"].iat[0])
+        step = exact.DayStep(cfg)
+        ema_f = ema_s = None
+        out: list[tuple] = []
+        bars = _day_bars(pdf)
         # P3 — session filter after the bars: open is the previous bar's
         # close even across the session edge, like bars_df
-        sess = (time_a >= t_start) & (time_a <= t_end)
-        time_l, open_l, high_l, low_l, close_l, vol_l = (
-            a[sess].tolist() for a in (time_a, *ohlcv)
-        )
-        day = int(pdf["day"].iat[0])
-        ema_f = ema_s = None
-        win_f, win_s = _Win(cap), _Win(cap)
-        out: list[tuple] = []
-        for i, c in enumerate(close_l):
+        sess = (bars[0] >= t_start) & (bars[0] <= t_end)
+        for t, o, h, lo, c, v in zip(*(a[sess].tolist() for a in bars)):
             if ema_f is None:
                 ema_f = ema_s = c
             else:
                 ema_f = ema_f + a_f * (c - ema_f)
                 ema_s = ema_s + a_s * (c - ema_s)
-            win_f.push(ema_f)
-            win_s.push(ema_s)
-            # P5 — warm-up: emit once the day's buffer holds
-            # bars_required rows
-            if i + 1 < bars_required:
-                continue
-            o, h, lo, v = open_l[i], high_l[i], low_l[i], vol_l[i]
-            out.append(
-                (
-                    day,
-                    time_l[i],
-                    o,
-                    h,
-                    lo,
-                    c,
-                    v,
-                    ma_distance(c, ema_f),
-                    ma_distance(c, ema_s),
-                    win_f.autocorr(),
-                    win_s.autocorr(),
-                    sl(win_f.vals, ema_f, slope_tol),
-                    loc_value(o, h, lo),
-                    loc_value(c, h, lo),
-                )
-            )
-        res = pd.DataFrame(out, columns=cols)
-        # explicit dtypes so empty groups (all rows gated) serialize too
-        for col in cols:
-            res[col] = res[col].astype("int32" if col in ("day", "time") else "float64")
-        return res
+            f = step(o, h, lo, c, ema_f, ema_s)
+            if f is not None:
+                out.append((day, t, o, h, lo, c, v) + f)
+        return _feature_frame(out)
 
     raw = bar_events(spark, sf_dir).select("day", "time", "event_id", "close")
     feat = raw.groupBy("day").applyInPandas(day_group, _FEATURE_SCHEMA)
     return export_select(feat, use_float32=cfg.use_float32)
-
-
-def _staged_to_export(ma: DataFrame, cfg: FeatureConfig) -> DataFrame:
-    """Windowed pipeline tail of :func:`features_df_full_ema`: per-day
-    window stats → autocorr/slope/distance/location features → per-day
-    warm-up gate → alphabetical float32 export projection. ``ma`` must
-    carry day/time/OHLCV plus
-    moving_average, slow_moving_average, _y_f, _y_s (within-day lag
-    products). Window stats: see :func:`_window_stat_cols`."""
-    w_day = Window.partitionBy("day").orderBy("time")
-    cums_f, stats_f = _window_stat_cols("moving_average", "_y_f", "f", w_day, cfg)
-    cums_s, stats_s = _window_stat_cols(
-        "slow_moving_average", "_y_s", "s", w_day, cfg
-    )
-    # two projection stages → two adjacent Window nodes sharing one
-    # (day, time) sort: running sums first, O(1) lags/diffs second
-    staged = ma.withColumns({**cums_f, **cums_s}).withColumns(
-        {**stats_f, **stats_s, "_rn": F.row_number().over(w_day)}
-    )
-
-    slope_tol = float(cfg.slope_tolerance)
-    slope = (
-        F.when(F.col("_n_f") < F.lit(2.0), F.lit(0.0))
-        .when(F.abs(F.col("_first_f")) < F.lit(slope_tol), F.lit(0.0))
-        .otherwise(
-            (F.col("moving_average") - F.col("_first_f"))
-            / F.col("_first_f")
-            * F.lit(100.0)
-        )
-    )
-
-    feat = staged.select(
-        "day",
-        "time",
-        "open",
-        "high",
-        "low",
-        "close",
-        "volume",
-        "_rn",
-        X.ma_distance("close", "moving_average").alias("f_moving_average_distance"),
-        X.ma_distance("close", "slow_moving_average").alias(
-            "f_moving_average_slow_distance"
-        ),
-        _autocorr_from_stats("moving_average", "f", cfg).alias(
-            "f_moving_average_autocorrelation"
-        ),
-        _autocorr_from_stats("slow_moving_average", "s", cfg).alias(
-            "f_moving_average_slow_autocorrelation"
-        ),
-        slope.alias("f_moving_average_slope"),
-        X.location_value("open", "high", "low").alias("f_open_location_value"),
-        X.location_value("close", "high", "low").alias("f_close_location_value"),
-    )
-    # P5 — warm-up: emit only once the day's buffer holds ≥ bars_required
-    # rows. On the first emitted row the frame holds exactly
-    # bars_required rows; afterwards the full `window` rows.
-    gated = feat.filter(F.col("_rn") >= cfg.bars_required).drop("_rn")
-    return export_select(gated, use_float32=cfg.use_float32)
 
 
 def features_df_full_ema(
@@ -515,74 +260,68 @@ def features_df_full_ema(
     exactly like the flagship (FeaturesBarService.cs:32-44).
 
     The EMA scan is inherently sequential (a single accumulator over the
-    whole series), so it runs as ONE sorted partition streamed through
-    Arrow-batched ``mapInPandas`` carrying the accumulators across
-    batches — O(n) compute, O(batch) memory. At scale the parallel unit
-    is the instrument (the reference is single-instrument, so this
-    series IS one group); downstream of the EMA, the per-day window
-    stats run as Spark windows (:func:`_staged_to_export`)."""
+    whole series), so the (day, time, event_id, close) events run as ONE
+    partition sorted by day through an Arrow-batched ``mapInPandas``
+    that buffers one day's events at a time (a day may span batches),
+    derives its bars (:func:`functions.exact.day_bars`), advances the
+    carried EMAs over every bar and feeds the session bars to a fresh
+    :class:`functions.exact.DayStep` — O(n) compute, O(day) memory. At
+    scale the parallel unit is the instrument (the reference is
+    single-instrument, so this series IS one group)."""
     if cfg.autocorr_lag != 1:
         raise ValueError("features_df_full_ema implements lag-1 autocorrelation")
     a_f = 2.0 / (cfg.span_fast + 1.0)
     a_s = 2.0 / (cfg.span_slow + 1.0)
+    t_start, t_end = cfg.time_start, cfg.time_end
 
-    bars = bars_df(spark, sf_dir).select(
-        "day", "time", "open", "high", "low", "close", "volume"
-    )
-    out_schema = T.StructType(
-        bars.schema.fields
-        + [
-            T.StructField("moving_average", T.DoubleType(), False),
-            T.StructField("slow_moving_average", T.DoubleType(), False),
-        ]
-    )
+    def series_scan(batches):
+        ema_f = ema_s = None
+        held: list[pd.DataFrame] = []  # the events of day held_day
+        held_day = None
 
-    def ema_scan(batches):
-        acc_f: float | None = None
-        acc_s: float | None = None
-        for pdf in batches:
-            closes = pdf["close"].to_numpy()
-            ef = [0.0] * len(closes)
-            es = [0.0] * len(closes)
-            for i in range(len(closes)):
-                c = float(closes[i])
-                if acc_f is None:
-                    acc_f = acc_s = c
+        def day_rows(day: int, pdf: pd.DataFrame) -> pd.DataFrame:
+            nonlocal ema_f, ema_s
+            step = exact.DayStep(cfg)
+            out: list[tuple] = []
+            for t, o, h, lo, c, v in zip(*(a.tolist() for a in _day_bars(pdf))):
+                # every bar advances the EMAs; only session bars enter
+                # the buffers (the time gate guards GetFeaturesBar only)
+                if ema_f is None:
+                    ema_f = ema_s = c
                 else:
-                    acc_f = acc_f + a_f * (c - acc_f)
-                    acc_s = acc_s + a_s * (c - acc_s)
-                ef[i] = acc_f
-                es[i] = acc_s
-            pdf = pdf.copy()
-            pdf["moving_average"] = pd.Series(ef, index=pdf.index, dtype="float64")
-            pdf["slow_moving_average"] = pd.Series(es, index=pdf.index, dtype="float64")
-            yield pdf
+                    ema_f = ema_f + a_f * (c - ema_f)
+                    ema_s = ema_s + a_s * (c - ema_s)
+                if not (t_start <= t <= t_end):
+                    continue
+                f = step(o, h, lo, c, ema_f, ema_s)
+                if f is not None:
+                    out.append((day, t, o, h, lo, c, v) + f)
+            return _feature_frame(out)
 
-    ma_all = (
-        bars.repartition(1)
-        .sortWithinPartitions("day", "time")
-        .mapInPandas(ema_scan, out_schema)
+        for pdf in batches:
+            # the partition is sorted by day, so each day is one
+            # contiguous run that may continue into the next batch
+            for day, part in pdf.groupby("day", sort=False):
+                if held and held_day != day:
+                    yield day_rows(held_day, pd.concat(held))
+                    held = []
+                held_day = int(day)
+                held.append(part)
+        if held:
+            yield day_rows(held_day, pd.concat(held))
+
+    raw = bar_events(spark, sf_dir).select("day", "time", "event_id", "close")
+    feat = (
+        raw.repartition(1)
+        .sortWithinPartitions("day")
+        .mapInPandas(series_scan, _FEATURE_SCHEMA)
     )
-    # session filter AFTER the EMA — out-of-session bars advanced the
-    # accumulators but never enter the buffers (reference order:
-    # indicator update happens on every bar, the time gate only guards
-    # GetFeaturesBar)
-    sess = ma_all.filter(
-        (F.col("time") >= cfg.time_start) & (F.col("time") <= cfg.time_end)
-    )
-    w_day = Window.partitionBy("day").orderBy("time")
-    ma = sess.withColumns(
-        {
-            "_y_f": F.col("moving_average") * F.lag("moving_average").over(w_day),
-            "_y_s": F.col("slow_moving_average")
-            * F.lag("slow_moving_average").over(w_day),
-        }
-    )
-    return _staged_to_export(ma, cfg)
+    return export_select(feat, use_float32=cfg.use_float32)
 
 
 def _autocorr_win_sql(sfx: str, lag: int) -> str:
-    """DuckDB mirror of :func:`_autocorr_from_stats`' double arithmetic."""
+    """DuckDB mirror of :func:`functions.exact.autocorr_from_sums`'
+    double arithmetic."""
     m = f"(s_{sfx} / n_{sfx})"
     x = "moving_average" if sfx == "f" else "slow_moving_average"
     num = f"(p_{sfx} - {m} * (2.0 * s_{sfx} - first_{sfx} - {x}) + (n_{sfx} - 1.0) * {m} * {m})"
@@ -595,7 +334,8 @@ def _autocorr_win_sql(sfx: str, lag: int) -> str:
 
 
 def _features_tail_sql(cfg: FeatureConfig) -> str:
-    """SQL twin of :func:`_staged_to_export`: the pipeline tail from an
+    """The oracle's per-day feature tail (the SQL twin of
+    :class:`functions.exact.DayStep`): the pipeline tail from an
     upstream CTE named ``ma`` (day/time/OHLCV + moving_average +
     slow_moving_average) through lag products, exact-decimal window
     stats, features, warm-up gate, and the export projection."""

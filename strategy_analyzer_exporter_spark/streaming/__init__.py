@@ -9,18 +9,14 @@ lives in Spark streaming state via ``applyInPandasWithState`` keyed by
 ``day``; the session filter, feature math, and warm-up gate are applied
 incrementally per micro-batch.
 
-Numeric parity: the incremental math is written so its float64 op
-sequence matches the BATCH pipeline bit-for-bit —
-- EMA: the same ``acc + α(x − acc)`` left-fold;
-- window sums quantized to DECIMAL(38,12) exactly like the batch
-  pipeline (each double rounded HALF_UP to 12 decimal places, summed as
-  exact integers, converted to double once) — ``math.fsum`` of the raw
-  doubles would NOT match, because the batch path quantizes each term
-  before summing;
-- num/den/slope arithmetic in the exact expression order of
-  operators/features.py.
-So a streaming run over in-order bars produces byte-identical rows to
-``features_df`` — asserted in tests/test_streaming.py.
+Numeric parity: the updater folds the EMAs with the batch kernel's
+``acc + α(x − acc)`` left-fold and runs the batch kernel's own per-day
+step (``functions.exact.DayStep``: window sums quantized to
+DECIMAL(38,12) as exact integers, then the same num/den/slope
+expression order), restored from the persisted window values at each
+micro-batch. So a streaming run over in-order bars produces
+byte-identical rows to ``features_df`` — asserted in
+tests/test_streaming_sinks.py.
 """
 
 from __future__ import annotations
@@ -41,13 +37,7 @@ from strategy_analyzer_exporter_spark.operators.features import (
     TESTDATA_CONFIG,
 )
 
-from strategy_analyzer_exporter_spark.functions.exact import (
-    autocorr_from_sums as _ac_sums,
-    loc_value as _loc,
-    ma_distance as _dist,
-    q12 as _q12,
-    slope_first as _slope_first,
-)
+from strategy_analyzer_exporter_spark.functions.exact import DayStep
 
 BAR_SCHEMA = T.StructType(
     [
@@ -110,8 +100,6 @@ def make_feature_updater(cfg: FeatureConfig = TESTDATA_CONFIG):
     only have exported them on a next bar that never came)."""
     a_f = 2.0 / (cfg.span_fast + 1.0)
     a_s = 2.0 / (cfg.span_slow + 1.0)
-    cap = cfg.window
-    slope_tol = float(cfg.slope_tolerance)
     lag = int(cfg.export_lag_bars)
     cols = [f.name for f in FEATURE_SCHEMA.fields]
 
@@ -119,39 +107,21 @@ def make_feature_updater(cfg: FeatureConfig = TESTDATA_CONFIG):
     # its inner loop runs once per BAR — attribute lookups and per-row
     # dict building were ~30% of streaming_features wall at sf0.1
     t_lo, t_hi = cfg.time_start, cfg.time_end
-    bars_req = cfg.bars_required
 
     def update(
         key: tuple[Any, ...],
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        from collections import deque
-
         day = int(key[0])
         if state.exists:
             n_rows, ema_f, ema_s, wf, ws, pending = state.get
-            wf, ws = deque(wf), deque(ws)
             pending = [list(r) for r in (pending or [])]
         else:
-            n_rows, ema_f, ema_s, wf, ws, pending = 0, None, None, deque(), deque(), []
-
-        # Sliding-window accumulators, rebuilt from the persisted window
-        # on state restore (once per (day, batch) — O(window), vs the
-        # per-BAR O(window) re-sum they replace): per-element quantized
-        # integers for Σx, Σx², Σxᵢ·xᵢ₋₁ and their exact running sums.
-        # Integer adds/subtracts are order-independent, so the sliding
-        # form is bit-identical to the full re-sum (exact.py
-        # autocorr_from_sums).
-        qf = deque(_q12(v) for v in wf)
-        qf2 = deque(_q12(v * v) for v in wf)
-        qs = deque(_q12(v) for v in ws)
-        qs2 = deque(_q12(v * v) for v in ws)
-        wfl, wsl = list(wf), list(ws)
-        pf = deque(_q12(wfl[i] * wfl[i - 1]) for i in range(1, len(wfl)))
-        ps = deque(_q12(wsl[i] * wsl[i - 1]) for i in range(1, len(wsl)))
-        sf, sf2, spf = sum(qf), sum(qf2), sum(pf)
-        ss_, ss2, sps = sum(qs), sum(qs2), sum(ps)
+            n_rows, ema_f, ema_s, wf, ws, pending = 0, None, None, (), (), []
+        # re-pushing the persisted window values rebuilds the same exact
+        # integer sums the uninterrupted day would hold
+        step = DayStep(cfg, n_rows, wf, ws)
 
         # feature rows as tuples in FEATURE_SCHEMA (= cols) order — the
         # per-column zip at the end beats DataFrame-from-dicts ~5×
@@ -170,60 +140,13 @@ def make_feature_updater(cfg: FeatureConfig = TESTDATA_CONFIG):
             ):
                 if not (t_lo <= t <= t_hi):
                     continue
-                n_rows += 1
-                prev_f, prev_s = ema_f, ema_s
                 ema_f = c if ema_f is None else ema_f + a_f * (c - ema_f)
                 ema_s = c if ema_s is None else ema_s + a_s * (c - ema_s)
-                wf.append(ema_f)
-                ws.append(ema_s)
-                q = _q12(ema_f)
-                qf.append(q)
-                sf += q
-                q = _q12(ema_f * ema_f)
-                qf2.append(q)
-                sf2 += q
-                q = _q12(ema_s)
-                qs.append(q)
-                ss_ += q
-                q = _q12(ema_s * ema_s)
-                qs2.append(q)
-                ss2 += q
-                if prev_f is not None:
-                    q = _q12(ema_f * prev_f)
-                    pf.append(q)
-                    spf += q
-                    q = _q12(ema_s * prev_s)
-                    ps.append(q)
-                    sps += q
-                if len(wf) > cap:
-                    wf.popleft()
-                    ws.popleft()
-                    sf -= qf.popleft()
-                    sf2 -= qf2.popleft()
-                    ss_ -= qs.popleft()
-                    ss2 -= qs2.popleft()
-                    spf -= pf.popleft()
-                    sps -= ps.popleft()
-                if n_rows < bars_req:
+                f = step(o, h, lo, c, ema_f, ema_s)
+                if f is None:
                     continue
-                nw = len(wf)
-                first_f, first_s = wf[0], ws[0]
-                feat = (
-                    c,  # close
-                    day,
-                    _loc(c, h, lo),  # f_close_location_value
-                    _ac_sums(nw, first_f, ema_f, sf, sf2, spf),
-                    _dist(c, ema_f),
-                    _slope_first(first_f, nw, ema_f, slope_tol),
-                    _ac_sums(nw, first_s, ema_s, ss_, ss2, sps),
-                    _dist(c, ema_s),
-                    _loc(o, h, lo),  # f_open_location_value
-                    h,
-                    lo,
-                    o,
-                    t,  # time
-                    v,  # volume
-                )
+                # STEP_FEATURES sit between day and high in FEATURE_SCHEMA
+                feat = (c, day) + f + (h, lo, o, t, v)
                 if lag == 0:
                     out_rows.append(feat)
                 else:
@@ -233,7 +156,8 @@ def make_feature_updater(cfg: FeatureConfig = TESTDATA_CONFIG):
                     if len(pending) > lag:
                         out_rows.append(tuple(pending.pop(0)))
 
-        state.update((n_rows, ema_f, ema_s, list(wf), list(ws), pending))
+        wf, ws = list(step.win_f.vals), list(step.win_s.vals)
+        state.update((step.n, ema_f, ema_s, wf, ws, pending))
         # always yield a correctly-dtyped frame (even empty) — pyspark
         # concatenates yielded batches, and untyped empties trip pandas'
         # all-NA-concat dtype inference

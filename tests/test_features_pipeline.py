@@ -259,53 +259,39 @@ def test_day_bars_duplicate_time_and_first_bar():
 
 
 def test_autocorr_from_sums_bit_equals_windowed():
-    """The streaming updater's sliding exact-integer accumulators must
-    reproduce autocorr_windowed's full re-sum bit-for-bit on arbitrary
-    series and window caps — integer add/subtract is order-independent,
-    so the sliding sums equal the scratch sums exactly, and everything
-    after the d12 conversions is the same pinned float sequence. This
-    is the direct check the r05 O(1)-per-bar rewrite rests on (seeded
-    deterministic fuzz over magnitudes 1e-3..1e6, caps 2..8)."""
+    """The shared sliding window (``exact.Win``: batch kernel, full-EMA
+    query, streaming updater) must reproduce autocorr_windowed's full
+    re-sum bit-for-bit on arbitrary series and window caps — integer
+    add/subtract is order-independent, so the sliding sums equal the
+    scratch sums exactly, and everything after the d12 conversions is
+    the same pinned float sequence; a window rebuilt from its values
+    (the streaming restore) holds the same sums. Seeded deterministic
+    fuzz over magnitudes 1e-3..1e6, caps 2..8."""
     import random
 
     from strategy_analyzer_exporter_spark.functions.exact import (
+        Win,
         autocorr_from_sums,
         autocorr_windowed,
-        q12,
     )
+
+    def sliding(w):
+        return autocorr_from_sums(len(w.vals), w.vals[0], w.vals[-1], w.s, w.ss, w.p)
 
     rnd = random.Random(20260814)
     for trial in range(300):
         cap = rnd.randint(2, 8)
         n = rnd.randint(0, 40)
         xs = [rnd.uniform(1e-3, 1.0) * (10 ** rnd.uniform(0, 6)) for _ in range(n)]
-        win: list[float] = []
-        qv: list[int] = []
-        qvv: list[int] = []
-        qp: list[int] = []
-        s = ss = p = 0
+        w = Win(cap)
         for x in xs:
-            prev = win[-1] if win else None
-            win.append(x)
-            q = q12(x)
-            qv.append(q)
-            s += q
-            q = q12(x * x)
-            qvv.append(q)
-            ss += q
-            if prev is not None:
-                q = q12(x * prev)
-                qp.append(q)
-                p += q
-            if len(win) > cap:
-                win.pop(0)
-                s -= qv.pop(0)
-                ss -= qvv.pop(0)
-                p -= qp.pop(0)
+            w.push(x)
+            win = w.vals
             pp = [win[i] * win[i - 1] for i in range(1, len(win))]
             a = autocorr_windowed(win, pp)
-            b = autocorr_from_sums(len(win), win[0], win[-1], s, ss, p)
-            assert a == b, (trial, x, win, a, b)
+            assert a == sliding(w), (trial, x, win)
+            # a window rebuilt from its values holds the same sums
+            assert sliding(Win(cap, win)) == a, (trial, x, win)
 
 
 def test_features_df_bit_exact_to_oracle(spark):
@@ -326,16 +312,13 @@ def test_features_df_bit_exact_to_oracle(spark):
         assert r["ok"], (sf, r["detail"])
 
 
-def test_running_stats_byte_equal_to_frame_stats(spark):
-    """The O(1)-per-row running-sum/lag window stats (features_df_full_ema's
-    windowed tail) must reproduce the oracle's bounded-frame sums
-    (ROWS BETWEEN frames over exact decimals) to the bit at BOTH gate
-    scales — the decimal sliding sums are exact integers, so
-    difference-of-running-sums is the identical value, and everything
-    downstream is the same pinned float64 sequence. Also guards the
-    decimal(30,12) re-cast: a naked (38,12)−(38,12) difference goes
-    through Spark's precision-loss path (scale 12 → 11) and rounds the
-    quantized grid."""
+def test_features_df_full_ema_bit_exact_to_oracle(spark):
+    """The full-series-EMA query (one sorted partition, the per-day
+    ``exact.DayStep`` fed by the carried EMA) must reproduce
+    ``features_full_ema_sql`` to the bit: at all three scales; under the
+    reference session ``FeatureConfig()``, where most bars lie outside
+    the session and only advance the EMA; and with tiny Arrow batches,
+    so that days straddle batch boundaries."""
     from oracle_harness import compare
 
     from strategy_analyzer_exporter_spark.operators.features import (
@@ -343,11 +326,18 @@ def test_running_stats_byte_equal_to_frame_stats(spark):
         features_full_ema_sql,
     )
 
-    for sf in ("0.001", "0.01"):
+    def check(sf, cfg):
         d = _sf(sf)
-        r = compare(
-            features_df_full_ema(spark, d, TESTDATA_CONFIG),
-            features_full_ema_sql(TESTDATA_CONFIG),
-            sf_dir=d,
-        )
-        assert r["ok"], (sf, r["detail"])
+        r = compare(features_df_full_ema(spark, d, cfg), features_full_ema_sql(cfg), sf_dir=d)
+        assert r["ok"], (sf, cfg, r["detail"])
+
+    for sf in ("0.001", "0.01", "0.1"):
+        check(sf, TESTDATA_CONFIG)
+    check("0.01", FeatureConfig())
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "97")
+    try:
+        check("0.01", TESTDATA_CONFIG)
+    finally:
+        spark.conf.set(key, old)

@@ -11,6 +11,7 @@ from strategy_analyzer_exporter_spark import plans as P
 from strategy_analyzer_exporter_spark.operators.features import (
     TESTDATA_CONFIG,
     features_df,
+    features_df_full_ema,
 )
 from strategy_analyzer_exporter_spark.sources.tables import load_table
 
@@ -52,29 +53,42 @@ def _node_names(plan: str) -> list[str]:
     ]
 
 
+#: The two per-day feature kernels, their Python node and their hash
+#: exchanges: the flagship's grouped map per day behind one hash(day)
+#: exchange, and the full-EMA query's map over one partition sorted by
+#: day (one instrument is one series; its single-partition repartition
+#: is not a hash exchange).
+_FEATURE_KERNELS = (
+    (features_df, "FlatMapGroupsInPandas", 1),
+    (features_df_full_ema, "MapInPandas", 0),
+)
+
+
 def test_feature_pipeline_exchange_budget(spark):
-    """The whole feature pipeline is ONE hash(day) exchange feeding ONE
-    grouped-map Python pass (bars, session filter, EMA, window stats and
+    """The whole feature pipeline is at most ONE hash(day) exchange
+    feeding ONE Python pass (bars, session filter, EMA, window stats and
     warm-up gate run per day inside it): the export projection reads the
-    grouped map's output directly, with no second shuffle and no window
+    Python node's output directly, with no second shuffle and no window
     node."""
-    df = features_df(spark, SF, TESTDATA_CONFIG)
-    plan = P.physical_plan(df)
-    names = _node_names(plan)
-    assert P.count_exchanges(df) == 1, plan
-    assert names.count("FlatMapGroupsInPandas") == 1, plan
-    assert not any(n.startswith("Window") for n in names), plan
+    for build, node, n_exchanges in _FEATURE_KERNELS:
+        df = build(spark, SF, TESTDATA_CONFIG)
+        plan = P.physical_plan(df)
+        names = _node_names(plan)
+        assert P.count_exchanges(df) == n_exchanges, plan
+        assert names.count(node) == 1, plan
+        assert not any(n.startswith("Window") for n in names), plan
 
 
 def test_feature_pipeline_python_input_is_four_columns(spark):
     """Only (day, time, event_id, close) cross into Python: the session
     filter and the bars derivation run inside the per-day kernel, so the
-    grouped map's input is the raw event projection and nothing more."""
-    plan = P.physical_plan(features_df(spark, SF, TESTDATA_CONFIG))
-    m = re.search(r"FlatMapGroupsInPandas \[[^\]]*\], \w+\(([^)]*)\)", plan)
-    assert m, plan
-    args = [re.sub(r"#\d+L?$", "", a.strip()) for a in m.group(1).split(",")]
-    assert args == ["day", "time", "event_id", "close"], plan
+    Python node's input is the raw event projection and nothing more."""
+    for build, node, _ in _FEATURE_KERNELS:
+        plan = P.physical_plan(build(spark, SF, TESTDATA_CONFIG))
+        m = re.search(rf"\b{node} [^\n]*?\w+\(([^)]*)\)", plan)
+        assert m, plan
+        args = [re.sub(r"#\d+L?$", "", a.strip()) for a in m.group(1).split(",")]
+        assert args == ["day", "time", "event_id", "close"], plan
 
 
 def test_whole_stage_codegen_active(spark):

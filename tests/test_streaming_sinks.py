@@ -175,8 +175,10 @@ def test_streaming_updater_cross_batch_state(spark):
         return pd.concat(out).reset_index(drop=True)
 
     once = run([rows])
-    split = run([rows[:13], rows[13:]])
-    assert once.equals(split)
+    # 13: restore before the window fills; 25: restore a full window
+    # (21 values) that evicts on its first push
+    for chunks in ([rows[:13], rows[13:]], [rows[:13], rows[13:25], rows[25:]]):
+        assert once.equals(run(chunks))
     assert len(once) == 11  # 30 rows, warm-up 20 → rows 20..30
 
 
